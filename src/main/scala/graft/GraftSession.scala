@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Session factory carrying the engine's deployment posture, so every
@@ -88,7 +88,7 @@ object GraftSession {
     * with an unrecognized leaf falls back to the RDD probe, where no
     * stage can execute. */
   def fanoutRegrain[T](ds: Dataset[T],
-      key: org.apache.spark.sql.Column): Dataset[T] = {
+      key: Column): Dataset[T] = {
     val target = ds.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
     if (scanParallelism(ds, target) < target) ds.repartition(target, key)
@@ -127,7 +127,7 @@ object GraftSession {
 
   /** Deployment switch for the iterative plans (PageRank rounds,
     * dup-cluster pointer jumping): point `dir` at a fault-tolerant
-    * store (HDFS/S3 on a cluster) and every [[cut]] call upgrades from
+    * store (HDFS/S3 on a cluster) and every [[cut]]/[[cutWith]] upgrades from
     * `localCheckpoint` — executor-memory-resilient only — to a
     * reliable `checkpoint` that survives executor loss mid-iteration.
     * Reversible per session via the conf flag. */
@@ -142,80 +142,61 @@ object GraftSession {
     * configured a checkpoint dir, so a 1000-executor PageRank does not
     * restart from round zero on one lost executor.
     *
-    * EAGER by design, audited (r13): every call site cuts a shared
-    * intermediate whose caller materializes it immediately (an
-    * iterative round, or a multi-branch read inside one query's
-    * action), so laziness would shift no cost — it would only reopen
-    * the one pathology eagerness has: a cut INSIDE a memoized plan
-    * mints a fresh `LogicalRDD`, so a memo keyed on the post-cut plan
-    * never hits (the r12 q119 regression). The rule is therefore
-    * structural, not a flag: key memos on the PRE-cut plan and place
-    * the cut inside the build block ([[graft.ops.TextOps.bigramNll]]);
-    * MemoStabilitySpec enforces it mechanically for every gate
-    * query. */
-  def cut[T](ds: Dataset[T]): Dataset[T] = {
-    val s = ds.sparkSession
-    val reliable =
-      s.conf.getOption("spark.graft.reliableCheckpoints").contains("true") &&
-        s.sparkContext.getCheckpointDir.isDefined
-    val out = if (reliable) ds.checkpoint() else ds.localCheckpoint()
-    out.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.foreach(registerCutOrigin(_, ds.queryExecution.optimizedPlan))
-    out
-  }
+    * A cut INSIDE a memoized plan mints a fresh `LogicalRDD`, so a
+    * memo keyed on the post-cut plan never hits (the r12 q119
+    * regression). The rule is therefore structural, not a flag: key
+    * memos on the PRE-cut plan and place the cut inside the build
+    * block ([[graft.ops.TextOps.bigramNll]]); MemoStabilitySpec
+    * enforces it mechanically for every gate query. */
+  def cut[T](ds: Dataset[T]): Dataset[T] = checkpoint(ds, None)._1
 
-  /** [[cut]] fused with the caller's first action over the result
-    * (r19): every fixpoint loop that reads a per-round scalar witness
-    * off the freshly cut state — the components/containment labSum,
-    * the eigenvector/HITS normalizers, the BFS frontier count — paid
-    * TWO sequential driver jobs per round: the eager checkpoint's
-    * internal materialization, then the witness aggregation over the
-    * cached result. The checkpoint is lazy here, so the witness action
-    * itself materializes the checkpointed RDD — one job per round does
-    * both. Identical lineage-truncation and reliable-checkpoint
-    * semantics to [[cut]]; the action MUST be a full-scan action (an
-    * aggregation or count — anything that computes every partition),
-    * or the checkpoint would be left partially materialized. */
-  def cutWith[T, A](ds: Dataset[T])(action: Dataset[T] => A)
-      : (Dataset[T], A) = {
+  /** [[cut]] fused with a per-round scalar witness read off the cut
+    * state — the components labSum, the eigenvector/HITS normalizers,
+    * the BFS frontier count. `witness` is ONE aggregate column (e.g.
+    * `count(lit(1))`, `sum(col("lab"))`) evaluated over the cut result
+    * and returned as a Long; a global aggregate computes every
+    * partition, and a non-aggregate column fails analysis, so the
+    * witness can never leave a lazy checkpoint partially materialized.
+    * See [[checkpoint]] for when this saves a job. */
+  def cutWith[T](ds: Dataset[T], witness: Column): (Dataset[T], Long) =
+    checkpoint(ds, Some(witness))
+
+  /** The ONE checkpoint body: reads the local/reliable mode and
+    * registers the cut origin for [[cut]] and [[cutWith]] alike.
+    *
+    * Eager or lazy by one rule: LAZY only for a witnessed LOCAL cut.
+    * There the witness aggregation itself materializes the
+    * localCheckpoint's blocks — one driver job per round does both
+    * (r19), where an eager cut plus a separate witness paid two. A
+    * reliable checkpoint is always EAGER: a lazy one writes its files
+    * in a second job after the witness, and that job recomputes the
+    * round from the shuffle (the data is not cached), so every round's
+    * post-shuffle work ran twice. Eager, the write job computes the
+    * round once and the witness reads the files it wrote — the same
+    * job count, half the compute. A plain cut is eager in both modes:
+    * every caller materializes the shared intermediate immediately,
+    * so laziness would shift no cost (audited r13). */
+  private def checkpoint[T](ds: Dataset[T],
+      witness: Option[Column]): (Dataset[T], Long) = {
     val s = ds.sparkSession
     val reliable =
       s.conf.getOption("spark.graft.reliableCheckpoints").contains("true") &&
         s.sparkContext.getCheckpointDir.isDefined
+    val eager = reliable || witness.isEmpty
     val out =
-      if (reliable) ds.checkpoint(eager = false)
-      else ds.localCheckpoint(eager = false)
-    val a = action(out)
+      if (reliable) ds.checkpoint(eager) else ds.localCheckpoint(eager)
+    val w = witness.fold(0L)(c => out.agg(c).head().getLong(0))
     out.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
     }.foreach(registerCutOrigin(_, ds.queryExecution.optimizedPlan))
-    (out, a)
-  }
-
-  /** [[cut]] plus a measured-count RIGHT-SIZING of the materialized
-    * table (r16, generalizing the pplScores compact-re-cache device):
-    * for a table that is cut ONCE and then scanned by every round of
-    * an iterative fixpoint, near-empty inherited partitions bill one
-    * task each per round per consumer. Coalesce to ~64k rows per
-    * partition, capped at the session's shuffle partitions, so at
-    * cluster scale (thousands of partitions over billions of rows)
-    * this is a no-op and parallelism is never sacrificed. ONLY for
-    * cut-once/scan-many tables — a per-round cut must not pay the
-    * extra count() job (q209 components: the one-time compact took the
-    * 8-round walk from 4.7 to 2.2 s at sf0.1 on one host bracket). */
-  def cutCompact[T](ds: Dataset[T]): Dataset[T] = {
-    cutCompactCalls.incrementAndGet()
-    val out = cut(ds)
-    val parts = compactParts(ds.sparkSession, out.count())
-    if (parts < out.rdd.getNumPartitions) out.coalesce(parts) else out
+    (out, w)
   }
 
   /** The ONE place the right-sizing policy lives (~64k rows per
     * partition, capped at the session's shuffle partitions so cluster
-    * parallelism is never sacrificed) — [[cutCompact]],
-    * [[persistCompact]] and the BFS per-round state sizing all read
-    * it, so a policy change cannot skew the variants apart (ADVICE
+    * parallelism is never sacrificed) — [[persistCompactBy]] and the
+    * BFS/HITS per-round state sizing all read it, so a policy change
+    * cannot skew the variants apart (ADVICE
     * r16/r17). Ceil via `(rows-1)/65536+1`, not `(rows+65535)/65536`:
     * callers that size from a BOUND rather than a count pass
     * `Long.MaxValue` ("unknown, assume huge"), and the additive form
@@ -225,61 +206,37 @@ object GraftSession {
       s.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
       if (rows <= 0L) 1L else (rows - 1L) / 65536L + 1L)).toInt
 
-  /** [[cutCompact]]'s persist() twin for BUILD-ONCE pinned tables
+  /** Measured-count right-sizing for BUILD-ONCE pinned tables
     * (memoized edge lists and their per-round-scanned kin): persist,
-    * measure, and when the measured count right-sizes below the
-    * inherited granularity, re-cache compact and release the
-    * full-granularity copy. The re-encode reads the just-persisted
-    * copy, never the lineage — a count-first single-encode variant
-    * was A/B'd in r17 and LOST under a warm JIT (the bench's build
-    * regime: full-run bill 25.5 -> 30.6 s), because recomputing the
-    * join/agg plan costs more than re-encoding the small cached
-    * result. Same placement contract as cutCompact: ONLY for
-    * build-once/scan-many tables — the count() job must never sit in
-    * a per-round path. */
-  def persistCompact[T](ds: Dataset[T]): Dataset[T] = {
-    val p = ds.persist()
-    val parts = compactParts(ds.sparkSession, p.count())
-    if (parts < p.rdd.getNumPartitions) {
-      val compact = p.coalesce(parts).persist()
-      compact.count()
-      p.unpersist()
-      compact
-    } else if (parts > p.rdd.getNumPartitions) {
-      // BELOW the floor (r18, VERDICT r17 task 2): a pinned cache at
-      // fewer partitions than the measured-count policy serializes
-      // every consumer scan (the quantEmb defect class — locally an
-      // AQE-coalesced or single-split build can pin ONE partition of
-      // a 100k-row table). Lift by re-encoding the small cached
-      // result at the floor; at cluster scale caches come out of
-      // session-grained shuffles at or above the floor, so this
-      // branch, like the coalesce one, is a local-grain repair that
-      // corpus-scale plans never enter.
-      val lifted = p.repartition(parts).persist()
-      lifted.count()
-      p.unpersist()
-      lifted
-    } else p
-  }
-
-  /** [[persistCompact]] with a pinned HASH partitioning: right-size to
-    * the same measured-count floor, but repartition by `keys` instead
-    * of coalescing, so the cached table's outputPartitioning is
-    * HashPartitioning(keys, parts) — and every downstream aggregation
-    * or join clustered on `keys` finds its distribution already
-    * satisfied and plans NO exchange (guide §2.4: two operations keyed
-    * the same way share one exchange; here the one exchange is paid
-    * once at build time and every per-round consumer skips its own).
-    * Measured on the r18 iterative-graph rounds: each
-    * `edges ⋈ broadcast(rank) → groupBy(dst)` round dropped its
-    * partial→final agg Exchange entirely once the pinned edge table
-    * was hashed by dst (plan A/B in plans/r18/). Unlike
-    * [[persistCompact]]'s coalesce (which erases partitioning —
-    * coalesced hash partitions are no longer hash-placed), the
-    * repartition costs one extra shuffle of the compact rows at build
-    * time — amortized across every fixpoint round that then runs
-    * exchange-free. Same placement contract: build-once/scan-many
-    * tables only.
+    * count, and when the count calls for another grain than the cache
+    * has, re-cache at [[compactParts]]'s floor and release the first
+    * copy. The re-encode reads the just-persisted copy, never the
+    * lineage — a count-first single-encode variant was A/B'd in r17
+    * and LOST under a warm JIT (full-run bill 25.5 -> 30.6 s), because
+    * recomputing the join/agg plan costs more than re-encoding the
+    * small cached result. ONLY for build-once/scan-many tables — the
+    * count() job must never sit in a per-round path.
+    *
+    * With no `keys` the grain is fixed without a shuffle key:
+    * coalesce when the cache is above the floor; lift by repartition
+    * when it is BELOW (r18: locally an AQE-coalesced or single-split
+    * build can pin ONE partition of a 100k-row table, serializing
+    * every consumer scan); otherwise keep it. At cluster scale caches
+    * come out of session-grained shuffles at the floor, so both
+    * branches are local-grain repairs corpus-scale plans never enter.
+    *
+    * With `keys` the cache is pinned HASH-partitioned by them at the
+    * floor, so every downstream aggregation or join clustered on
+    * `keys` finds its distribution already satisfied and plans NO
+    * exchange (guide §2.4: the one exchange is paid once at build time
+    * and every per-round consumer skips its own). Measured on the r18
+    * iterative-graph rounds: each `edges ⋈ broadcast(rank) →
+    * groupBy(dst)` round dropped its partial→final agg Exchange once
+    * the pinned edge table was hashed by dst (plans/r18/). A cache
+    * that already carries that partitioning at that grain — e.g. a
+    * projection of another table pinned by the same key — is kept
+    * as is rather than re-shuffled and transiently double-cached
+    * (ADVICE r18).
     *
     * SKEW EXPOSURE (ADVICE r18): a single-key hash pin places every
     * row of a hot key (a high-in-degree node, a degenerate gram) in
@@ -289,44 +246,37 @@ object GraftSession {
     * is structurally bounded (node in-degree on thresholded graphs,
     * bucket-capped gram keys); a pin on an uncapped power-law key
     * needs salting at build time instead (guide §2.5). */
-  def persistCompactBy[T](ds: Dataset[T],
-      keys: org.apache.spark.sql.Column*): Dataset[T] = {
+  def persistCompactBy[T](ds: Dataset[T], keys: Column*): Dataset[T] = {
     val p = ds.persist()
     val parts = compactParts(ds.sparkSession, p.count())
-    // fast path (ADVICE r18): when the materialized cache ALREADY
-    // carries the requested hash partitioning at the right grain —
-    // e.g. a projection of another pinned-by-the-same-key table — the
-    // repartition would re-shuffle and transiently double-cache the
-    // table for a partitioning it already has; return it as pinned,
-    // mirroring persistCompact's no-op branch
-    val already = p.queryExecution.executedPlan.outputPartitioning match {
-      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-        h.numPartitions == parts &&
-          h.expressions.length == keys.length &&
-          h.expressions.zip(keys).forall {
-            case (a: org.apache.spark.sql.catalyst.expressions.Attribute,
-                k) => a.name == k.toString
-            case _ => false
-          }
-      case _ => false
-    }
-    if (already) p
-    else {
-      val keyed = p.repartition(parts, keys: _*).persist()
-      keyed.count()
+    val regrained =
+      if (keys.isEmpty) {
+        val have = p.rdd.getNumPartitions
+        if (parts < have) Some(p.coalesce(parts))
+        else if (parts > have) Some(p.repartition(parts))
+        else None
+      } else {
+        val pinned = p.queryExecution.executedPlan.outputPartitioning match {
+          case h: org.apache.spark.sql.catalyst.plans.physical
+              .HashPartitioning =>
+            h.numPartitions == parts &&
+              h.expressions.length == keys.length &&
+              h.expressions.zip(keys).forall {
+                case (a: org.apache.spark.sql.catalyst.expressions.Attribute,
+                    k) => a.name == k.toString
+                case _ => false
+              }
+          case _ => false
+        }
+        if (pinned) None else Some(p.repartition(parts, keys: _*))
+      }
+    regrained.fold(p) { r =>
+      val compact = r.persist()
+      compact.count()
       p.unpersist()
-      keyed
+      compact
     }
   }
-
-  /** Lifetime [[cutCompact]] call count (test hook): the device pays
-    * one count() job per call, which its contract confines to
-    * cut-once/scan-many tables — a sweep asserts the call count is
-    * INDEPENDENT of an operator's round knob, which a call inside a
-    * fixpoint loop body would break (VERDICT r16 task 6). */
-  private val cutCompactCalls =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] def cutCompactCount: Long = cutCompactCalls.get()
 
   /** Pre-cut logical plans keyed by the checkpoint RDD's id. A cut()
     * table plans as an opaque `RDDScanExec`, so plan-invariant sweeps

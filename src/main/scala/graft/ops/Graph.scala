@@ -92,8 +92,8 @@ object Graph {
       // fold the out-degree into the pinned edge table: the per-round
       // contribution is rank DIV deg, so carrying deg on the edge saves
       // one join per PageRank iteration. persistCompactBy(dst) (r18)
-      // right-sizes the pinned cache like persistCompact (r16 device,
-      // factored r17) AND pins it hash-partitioned by dst: every
+      // right-sizes the pinned cache to the measured-count floor AND
+      // pins it hash-partitioned by dst: every
       // fixpoint round here is edges ⋈ broadcast(state) → groupBy(dst)
       // (PageRank / PPR / eigenvector contributions, the BFS frontier
       // distinct), and the BHJ preserves the streamed side's
@@ -354,10 +354,10 @@ object Graph {
       val part = li.repartition(
         s.conf.get("spark.sql.shuffle.partitions").toInt,
         col("l_orderkey"))
-      // persistCompact: the thresholded edge list is scanned by every
-      // supplier-graph statistic's joins; measured-count gate,
-      // cluster no-op
-      val built = GraftSession.persistCompact(
+      // persistCompactBy, no keys: the thresholded edge list is
+      // scanned by every supplier-graph statistic's joins;
+      // measured-count gate, cluster no-op
+      val built = GraftSession.persistCompactBy(
         part.select(col("l_orderkey"), col("l_suppkey").as("a"))
           .join(part.select(col("l_orderkey"), col("l_suppkey").as("b")),
             Seq("l_orderkey"))
@@ -459,13 +459,13 @@ object Graph {
     // bound (r17): frontier and visited tables can never exceed
     // nNodes rows, so on a small graph each round materializes one
     // task instead of shuffle.partitions near-empty ones — the
-    // cutCompact right-sizing WITHOUT its measured-count job, which
-    // a per-round path must not pay. Clamps to the session's shuffle
+    // measured-count right-sizing without its count() job, which a
+    // per-round path must not pay. Clamps to the session's shuffle
     // partitions, so at cluster node counts it is a no-op.
     val shufParts =
       s.conf.get("spark.sql.shuffle.partitions").toInt
     // the SHARED right-sizing policy (ADVICE r17: a re-derived divisor
-    // here disagreed with cutCompact's at exact 64k multiples); the
+    // here disagreed with the shared one at exact 64k multiples); the
     // Long.MaxValue default rides compactParts' bound-safe ceil
     val stateParts = GraftSession.compactParts(s, nNodes)
     def sized(df: DataFrame): DataFrame =
@@ -483,10 +483,11 @@ object Graph {
         .join(perRoundSide(dist.select(col("node")), nNodes),
           Seq("node"), "left_anti")
         .select(col("node"), lit(h.toLong).as("hops"))
-      // cutWith (r19): the frontier-emptiness probe doubles as the
-      // checkpoint's materializing action — one driver job per hop
-      // where eager cut + isEmpty paid two
-      val (cutNext, nNext) = GraftSession.cutWith(sized(next))(_.count())
+      // cutWith (r19): the frontier-emptiness probe is the cut's
+      // witness — one driver job per hop in local mode, where an eager
+      // cut + isEmpty paid two
+      val (cutNext, nNext) =
+        GraftSession.cutWith(sized(next), count(lit(1)))
       // an empty frontier ends the walk: every later round expands
       // nothing, so stopping here is result-identical to running out
       // the remaining hops — on a small-diameter graph this bounds
@@ -627,11 +628,12 @@ object Graph {
       "sharedWedges", s"$minSupport", Seq(e)) {
       val adj = e.select(col("a").as("x"), col("b").as("z"))
         .unionAll(e.select(col("b").as("x"), col("a").as("z")))
-      // persistCompact, not bare persist: the union output can land
+      // persistCompactBy, not bare persist: the union output can land
       // as ONE AQE-coalesced partition locally (measured r18 — 68k
       // pair rows in one pinned partition), and both similarity
       // scores then aggregate it on one core
-      val wedges = GraftSession.persistCompact(wedgePairs(adj, WedgeHubCap))
+      val wedges =
+        GraftSession.persistCompactBy(wedgePairs(adj, WedgeHubCap))
       (wedges, Seq(wedges))
     }
   }
@@ -1509,14 +1511,14 @@ object Graph {
       // cut BEFORE the normalizer read: raw feeds both the dScale
       // scalar and the renormalized table, so an uncut raw would pay
       // the join+agg twice per round (once for .head(), once when the
-      // next round's broadcast collects x). cutWith (r19) fuses the
-      // normalizer read with the cut's materialization — one driver
-      // job per round instead of two.
+      // next round's broadcast collects x). cutWith (r19) takes the
+      // normalizer as the cut's witness — one driver job per round in
+      // local mode instead of two.
       val (raw, xSum) = GraftSession.cutWith(edges
         .join(perRoundSide(x.withColumnRenamed("node", "src"), n), "src")
         .select(col("dst"), col("x"))
-        .groupBy(col("dst")).agg(sum(col("x")).as("xr")))(
-        _.agg(sum(col("xr"))).head().getLong(0))
+        .groupBy(col("dst")).agg(sum(col("x")).as("xr")),
+        sum(col("xr")))
       // clamp: on a degenerate graph (all degrees 1) floor loss in the
       // init makes sum(x) = n*(RankScale DIV n) < RankScale, so the
       // unclamped normalizer would be 0 → NULL ranks; the oracle
@@ -1717,7 +1719,7 @@ object Graph {
     * smaller than it).
     *
     * The edge table is memoized and PINNED hash-partitioned by v (r19,
-    * replacing the per-call cutCompact): both consumers' rounds
+    * replacing a per-call cut + compact): both consumers' rounds
     * aggregate proposals by the edge's v endpoint, so the v-hash pin
     * makes every round's heavy aggregation exchange-free (guide §2.4,
     * the persistCompactBy device), and components + LPA — which prep
@@ -1769,17 +1771,15 @@ object Graph {
       rounds: Int): DataFrame = {
     val (und, lab0, nNodes) = labelPropPrep(und0)
     var lab = lab0
-    def labSum(df: DataFrame): Long =
-      df.agg(sum(col("lab"))).head().getLong(0)
-    var prev = labSum(lab)
+    var prev = lab.agg(sum(col("lab"))).head().getLong(0)
     var i = 1
     var converged = false
     while (i <= rounds && !converged) {
-      // cutWith (r19): the labSum witness action materializes the
-      // lazily-checkpointed round — one driver job per round where the
-      // eager cut + separate witness agg paid two
-      val (lab2, cur) =
-        GraftSession.cutWith(componentsRound(und, lab, nNodes))(labSum)
+      // cutWith (r19): the label-sum witness materializes the lazily
+      // checkpointed round in local mode — one driver job per round
+      // where the eager cut + separate witness agg paid two
+      val (lab2, cur) = GraftSession.cutWith(
+        componentsRound(und, lab, nNodes), sum(col("lab")))
       lab = lab2
       if (cur == prev) converged = true
       prev = cur
@@ -2017,16 +2017,14 @@ object Graph {
       // cut the RAW half-round table only: the normalized view is a
       // scalar projection over it (cutting both would double the
       // materializations per round for no lineage benefit). cutWith
-      // (r19) fuses each normalizer read with its half-round's
-      // materialization — one driver job per half-round, not two.
+      // (r19) takes each normalizer as its half-round's witness — one
+      // driver job per half-round in local mode, not two.
       val (aRaw, aSum) = GraftSession.cutWith(
-        hitsAuthRound(dir, hub, nHubs, stateParts))(
-        _.agg(sum(col("ar"))).head().getLong(0))
+        hitsAuthRound(dir, hub, nHubs, stateParts), sum(col("ar")))
       val aScale = math.max(aSum / RankScale, 1L)
       auth = aRaw.select(col("sup"), expr(s"ar DIV $aScale").as("a"))
       val (hRaw, hSum) = GraftSession.cutWith(
-        hitsHubRound(dirC, auth, nHubs))(
-        _.agg(sum(col("hr"))).head().getLong(0))
+        hitsHubRound(dirC, auth, nHubs), sum(col("hr")))
       val hScale = math.max(hSum / RankScale, 1L)
       hub = hRaw.select(col("c"), expr(s"hr DIV $hScale").as("h"))
     }

@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 /** Generator for `docs/OPERATORS.md`: the qNN → operator → file:line
   * index, derived mechanically from [[graft.SparkEntry.queries]] and a
   * scan of the source tree — so unlike the README's prose list it
-  * cannot drift as the query set grows (re-running the main refreshes
-  * it; OperatorIndexSpec asserts every queries-map key appears).
+  * cannot drift as the query set grows ([[Docs]] refreshes it;
+  * OperatorIndexSpec asserts every queries-map key appears).
   *
   * Anchors are the source lines that MENTION the query id (scaladoc
   * convention throughout `ops/`: each operator cites the gate queries
@@ -91,7 +91,7 @@ object OperatorIndex {
     "# Operator index\n" +
     s"""#
        #GENERATED — do not edit. Regenerate with
-       #`sbt "runMain graft.tools.OperatorIndex"`. One row per
+       #`sbt "runMain graft.tools.Docs"`. One row per
        #correctness-gate query in `SparkEntry.queries`; anchors are the
        #implementation-home source lines citing the query id (the ops
        #scaladoc convention), falling back to the SparkEntry
@@ -109,12 +109,5 @@ object OperatorIndex {
     val ids = keys.collect { case QKey(q, _) => q }
     val root = Paths.get(repoRoot, "src", "main", "scala", "graft")
     render(keys, graft.SparkEntry.oracleSql.keySet, anchors(root, ids))
-  }
-
-  def main(args: Array[String]): Unit = {
-    val out = Paths.get(args.headOption.getOrElse("docs/OPERATORS.md"))
-    Option(out.getParent).foreach(Files.createDirectories(_))
-    Files.writeString(out, generate())
-    println(s"wrote ${out.toAbsolutePath}")
   }
 }

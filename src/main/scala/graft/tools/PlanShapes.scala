@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
@@ -32,24 +30,19 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
   * Determinism: snapshots are taken on the STATICALLY planned tree
   * (AQE off for the one planning call, as every sweep in
   * ScaleInvariantsSpec does) at the tests' SF with the tests' session
-  * config — [[session]] mirrors TestSpark field for field, so the
+  * config — [[session]] builds it the way TestSpark does, so the
   * generator main and the drift spec plan identically. Memoized-index
   * scans appear as `MemoScan` leaves (their build plans are swept by
   * ScaleInvariantsSpec's own rules); cut() tables as `CutScan`.
   */
 object PlanShapes {
 
-  /** Test-twin session config — MUST stay field-for-field equal to
-    * TestSpark (SparkTestBase.scala): the snapshot is only stable if
+  /** The test session's config — the same `GraftSession.builder` call
+    * as TestSpark (SparkTestBase.scala): the snapshot is only stable if
     * the generator and the spec plan under the same config. */
   def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = graft.GraftSession.builder("local[4]", 4)
       .appName("graft-planshapes")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -142,7 +135,7 @@ object PlanShapes {
     "# Physical plan skeletons\n" +
     s"""#
        #GENERATED — do not edit. Regenerate with
-       #`sbt "runMain graft.tools.PlanShapes"` IN THE SAME COMMIT as a
+       #`sbt "runMain graft.tools.Docs"` IN THE SAME COMMIT as a
        #plan-affecting change: PlanShapeSnapshotSpec fails CI on any
        #un-acked drift. One skeleton per gate query, statically planned
        #(AQE off) at ${SfDir} under the test session config; expression
@@ -154,14 +147,4 @@ object PlanShapes {
         s"\n## $name `$h`\n\n    $sk\n"
       }.mkString +
       s"\n${rows.size} queries.\n"
-
-  def main(args: Array[String]): Unit = {
-    val out = Paths.get(args.headOption.getOrElse("docs/PLANSHAPES.md"))
-    val spark = session()
-    try {
-      Option(out.getParent).foreach(Files.createDirectories(_))
-      Files.writeString(out, render(snapshot(spark)))
-      println(s"wrote ${out.toAbsolutePath}")
-    } finally spark.stop()
-  }
 }

@@ -59,24 +59,61 @@ class GraphSpec extends SparkTestBase {
     }
   }
 
-  test("cutCompact call count is independent of the round knob") {
-    // VERDICT r16 task 6: cutCompact pays one count() job per call,
-    // which its contract confines to cut-once/scan-many tables. A
-    // call inside a fixpoint loop body would scale with `rounds` —
-    // this sweep pins the invariant mechanically for the iterative
-    // operators that use the device.
-    val d = sf("lineitem")
-    def calls(rounds: Int): Long = {
-      val before = GraftSession.cutCompactCount
-      Graph.components(spark, d, rounds = rounds).count()
-      Graph.lpaCommunities(spark, d, rounds = rounds).count()
-      GraftSession.cutCompactCount - before
+  /** Jobs started under a private job group while `body` runs, read
+    * from a listener after draining the async listener bus. */
+  private def jobsRun(body: => Unit): Int = {
+    val group = s"jobs-run-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val sc = spark.sparkContext
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
     }
-    val low = calls(2)
-    val high = calls(6)
-    assert(low == high,
-      s"cutCompact calls scale with rounds ($low at 2 vs $high at 6):" +
-        " a fixpoint round body is paying the measured-count job")
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "job count probe")
+    try body
+    finally {
+      sc.clearJobGroup()
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
+
+  test("cut and cutWith evaluate each round once in local and reliable " +
+      "mode") {
+    // a 1,000-row round whose UDF runs after a shuffle and counts its
+    // evaluations: a checkpoint that recomputes the round on write
+    // (a lazy reliable checkpoint) reads 2,000
+    val evals = spark.sparkContext.longAccumulator("cut-round-evals")
+    val tally = udf { (id: Long) => evals.add(1L); id }
+    def round = spark.range(0, 1000, 1, 4).repartition(4, col("id"))
+      .select(tally(col("id")).as("v"))
+    def evaluations(body: => Unit): Long = { evals.reset(); body; evals.value }
+    def checkBothForms(mode: String): Unit = {
+      assert(evaluations(GraftSession.cut(round).count()) == 1000L,
+        s"plain cut, $mode mode")
+      assert(evaluations {
+        val (out, total) = GraftSession.cutWith(round, sum(col("v")))
+        assert(total == 499500L)
+        assert(out.count() == 1000L)
+      } == 1000L, s"witnessed cut, $mode mode")
+    }
+    checkBothForms("local")
+    // the r19 saving: a witnessed local cut runs fewer jobs than a
+    // plain cut followed by a separate aggregate
+    val fused = jobsRun(GraftSession.cutWith(round, count(lit(1))))
+    val separate = jobsRun(
+      GraftSession.cut(round).agg(count(lit(1))).head())
+    assert(fused < separate, s"cutWith ran $fused jobs, cut + agg $separate")
+    val ckDir = java.nio.file.Files
+      .createTempDirectory("graft-ck-evals").toString
+    GraftSession.enableReliableCheckpoints(spark, ckDir)
+    try checkBothForms("reliable")
+    finally spark.conf.set("spark.graft.reliableCheckpoints", "false")
   }
 
   test("components and kCore under reliable checkpoints match local-cut") {

@@ -47,6 +47,6 @@ class OperatorIndexSpec extends AnyFunSuite {
       java.nio.file.Paths.get("docs/OPERATORS.md"))
     assert(committed == doc,
       "docs/OPERATORS.md is stale — run " +
-        "`sbt \"runMain graft.tools.OperatorIndex\"` and commit it")
+        "`sbt \"runMain graft.tools.Docs\"` and commit it")
   }
 }

@@ -36,7 +36,7 @@ class PlanShapeSnapshotSpec extends SparkTestBase {
       }.getOrElse("")
       fail("physical plan skeletons drifted — review the strategy " +
         "change, then regenerate with `sbt \"runMain " +
-        "graft.tools.PlanShapes\"` and commit the diff. Changed: " +
+        "graft.tools.Docs\"` and commit the diff. Changed: " +
         s"${changed.mkString(", ")}" +
         (if (dropped.nonEmpty) s"; dropped: ${dropped.mkString(", ")}"
         else "") + firstDiff)

@@ -3,16 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole test JVM (Test / fork := true). */
+/** One shared local session for the whole test JVM (Test / fork := true),
+  * built with the engine's own deployment settings so every spec runs
+  * under the configuration that ships. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
