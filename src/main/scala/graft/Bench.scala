@@ -242,18 +242,30 @@ object Bench {
     case _ => (cal, p.cal)
   }
 
-  /** Per-query cal-normalized ratios vs a prior record — the basis of
-    * the drift median. One entry per query that is clean on BOTH
-    * sides at the same scale factor; each prior is normalized with
-    * its own [[calPair]]. Pure logic: BenchProtocolSpec. */
-  private[graft] def calnormRatios(results: Seq[(String, Measured)],
-      prev: Option[PrevBench], sfDir: String, cal: Double,
-      calMed: Option[Double] = None): Seq[Double] =
-    calnormRatiosNamed(results, prev, sfDir, cal, calMed).map(_._2)
+  /** How much slower this host runs than a prior's, as the factor
+    * that raises the prior's bar: never below 1 (a faster host does
+    * not lower a bar), and 1 when either normalizer is missing. */
+  private def hostClamp(now: Double, prior: Double): Double =
+    if (now > 0 && prior > 0) math.max(1.0, now / prior) else 1.0
 
-  /** Named per-query calnorm ratios — same shared-set rule, with the
-    * query key kept so the sidecar can ship the ratios a mover audit
-    * needs (the judge otherwise recomputes them by script each round).
+  /** The two priors a run is judged against, in order: the official
+    * record, then the sidecar restricted to the queries the official
+    * record's stdout-truncated query map is missing. An official
+    * record at a DIFFERENT scale factor adjudicates nothing — its keys
+    * must not mask the sidecar's priors either. */
+  private def mergedPriors(official: Option[PrevBench],
+      sidecar: Option[PrevBench], sfDir: String): Seq[Option[PrevBench]] = {
+    val known = official.filter(_.sfDir == sfDir)
+      .map(_.queries.keySet).getOrElse(Set.empty)
+    Seq(official, sidecar.map(p => p.copy(
+      queries = p.queries.filter { case (k, _) => !known.contains(k) })))
+  }
+
+  /** Per-query cal-normalized ratios vs a prior record, by query key —
+    * the basis of the drift median, shipped in the sidecar so a mover
+    * audit need not recompute them. One entry per query that is clean
+    * on BOTH sides at the same scale factor; each prior is normalized
+    * with its own [[calPair]]. Pure logic: BenchProtocolSpec.
     * `m.best >= 0` matches [[reverifyTargets]]' clean-side definition
     * (a 0.0 s measurement is clean; only -1 marks failure — the
     * prior-side v > 0 check alone guards the division). */
@@ -273,9 +285,7 @@ object Bench {
       case _ => Nil
     }
 
-  /** [[calnormRatios]] against the official record plus the sidecar
-    * for queries its stdout-truncated query map is missing — the same
-    * merge rule as [[reverifyTargetsMerged]]. */
+  /** [[calnormRatiosNamed]] against [[mergedPriors]], keys dropped. */
   private[graft] def calnormRatiosMerged(results: Seq[(String, Measured)],
       official: Option[PrevBench], sidecar: Option[PrevBench],
       sfDir: String, cal: Double, calMed: Option[Double] = None)
@@ -286,14 +296,9 @@ object Bench {
   private[graft] def calnormRatiosMergedNamed(
       results: Seq[(String, Measured)], official: Option[PrevBench],
       sidecar: Option[PrevBench], sfDir: String, cal: Double,
-      calMed: Option[Double] = None): Seq[(String, Double)] = {
-    val known = official.filter(_.sfDir == sfDir)
-      .map(_.queries.keySet).getOrElse(Set.empty)
-    val fallback = sidecar.map(p => p.copy(
-      queries = p.queries.filter { case (k, _) => !known.contains(k) }))
-    calnormRatiosNamed(results, official, sfDir, cal, calMed) ++
-      calnormRatiosNamed(results, fallback, sfDir, cal, calMed)
-  }
+      calMed: Option[Double] = None): Seq[(String, Double)] =
+    mergedPriors(official, sidecar, sfDir)
+      .flatMap(calnormRatiosNamed(results, _, sfDir, cal, calMed))
 
   /** Median of the per-query calnorm ratios — a host-drift figure the
     * sum-based `shared_ratio_calnorm` can't give (a few slow movers
@@ -364,7 +369,7 @@ object Bench {
     prev match {
       case Some(p) if p.sfDir == sfDir && p.cal > 0 && cal > 0 =>
         val (c, pc) = calPair(cal, calMed, p)
-        val host = math.max(1.0, c / pc)
+        val host = hostClamp(c, pc)
         results.collect {
           case (n, m) if m.best >= 0 && !m.stalled &&
               p.queries.get(shortKey(n)).exists(v => v > 0 &&
@@ -382,25 +387,15 @@ object Bench {
       case _ => Nil
     }
 
-  /** [[reverifyTargets]] against the official record first, then the
-    * sidecar for queries the official record's stdout-truncated query
-    * map is missing — each prior judged with its own cal fields. */
+  /** [[reverifyTargets]] against [[mergedPriors]] — each prior judged
+    * with its own cal fields. */
   private[graft] def reverifyTargetsMerged(
       results: Seq[(String, Measured)], official: Option[PrevBench],
       sidecar: Option[PrevBench], sfDir: String, cal: Double,
-      calMed: Option[Double] = None, factor: Double = 2.5): Seq[String] = {
-    val primary =
-      reverifyTargets(results, official, sfDir, cal, calMed, factor)
-    // an official record at a DIFFERENT scale factor adjudicates
-    // nothing — its keys must not mask the sidecar's priors either
-    val known = official.filter(_.sfDir == sfDir)
-      .map(_.queries.keySet).getOrElse(Set.empty)
-    val fallback = sidecar.map(p => p.copy(
-      queries = p.queries.filter { case (k, _) => !known.contains(k) }))
-    (primary ++
-      reverifyTargets(results, fallback, sfDir, cal, calMed, factor))
+      calMed: Option[Double] = None, factor: Double = 2.5): Seq[String] =
+    mergedPriors(official, sidecar, sfDir)
+      .flatMap(reverifyTargets(results, _, sfDir, cal, calMed, factor))
       .distinct
-  }
 
   /** Rolling per-query best-ever-warm prior (r15 verdict task 3): the
     * minimum warm seconds ever recorded at this SF, with the cal of
@@ -453,10 +448,7 @@ object Bench {
   private[graft] def reverifyLabel(v: Double, best: (Double, Double),
       calNow: Double): String = {
     val (bestT, bestCal) = best
-    val hostFactor =
-      if (bestCal > 0 && calNow > 0) math.max(1.0, calNow / bestCal)
-      else 1.0
-    if (v <= bestT * hostFactor * 2.0) "confirmed-vs-best"
+    if (v <= bestT * hostClamp(calNow, bestCal) * 2.0) "confirmed-vs-best"
     else "host-window"
   }
 
@@ -549,9 +541,7 @@ object Bench {
   private[graft] def buildSuspect(deltaS: Double,
       prior: Option[(Double, Double)], calNow: Double): Boolean =
     prior.exists { case (s, c) =>
-      val host =
-        if (c > 0 && calNow > 0) math.max(1.0, calNow / c) else 1.0
-      deltaS > math.max(2.5 * s, s + 0.25) * host
+      deltaS > math.max(2.5 * s, s + 0.25) * hostClamp(calNow, c)
     }
 
   /** Do the two host-speed normalizers disagree vs this prior (r15
@@ -760,17 +750,18 @@ object Bench {
     val targets = reverifyTargetsMerged(firstPass, official,
       sidecarPrior, sfDir, calibration, calMed = runMedian(),
       factor = factor)
+    // one bracketed, build-free re-run of a flagged query; the faster
+    // of the two values ships, with both measurements' clean runs
+    def retime(name: String, m: Measured, maxAttempts: Int): Measured = {
+      val again = measure(() => buildFreeOf(selected(name))(),
+        () => probeOk(), wantClean = 1, maxAttempts = maxAttempts)
+      if (again.best >= 0 && again.best < m.best)
+        Measured(again.best, m.cleanRuns + again.cleanRuns, stalled = false)
+      else m
+    }
     val targetSet = targets.toSet
     val results1 = firstPass.map { case (name, m) =>
-      if (!targetSet(name)) name -> m
-      else {
-        val again = measure(() => buildFreeOf(selected(name))(),
-          () => probeOk(), wantClean = 1, maxAttempts = 3)
-        if (again.best >= 0 && again.best < m.best)
-          name -> Measured(again.best, m.cleanRuns + again.cleanRuns,
-            stalled = false)
-        else name -> m
-      }
+      name -> (if (targetSet(name)) retime(name, m, maxAttempts = 3) else m)
     }
     val calNow = runMedian().getOrElse(calibration)
     // best-known priors BEFORE folding this run in: the labels below
@@ -800,18 +791,10 @@ object Bench {
     val secondChance = provisional.collect {
       case (k, "host-window") => k
     }.take(10).toSet
-    val results = if (secondChance.isEmpty) results1
-      else results1.map { case (name, m) =>
-        if (!secondChance(shortKey(name)) || m.best < 0) name -> m
-        else {
-          val again = measure(() => buildFreeOf(selected(name))(),
-            () => probeOk(), wantClean = 1, maxAttempts = 2)
-          if (again.best >= 0 && again.best < m.best)
-            name -> Measured(again.best, m.cleanRuns + again.cleanRuns,
-              stalled = false)
-          else name -> m
-        }
-      }
+    val results = results1.map { case (name, m) =>
+      name -> (if (secondChance(shortKey(name)) && m.best >= 0)
+        retime(name, m, maxAttempts = 2) else m)
+    }
     val memoBuildS = graft.ops.IndexMemo.buildNanos / 1e9
     val memoBuildLiveS = graft.ops.IndexMemo.liveBuildNanos / 1e9
     val buildCounts = graft.ops.IndexMemo.buildCounts

@@ -1713,7 +1713,7 @@ object Curation {
     val pairs = charJaccardVerifiedPairs(s, d)
     // The sketch subtree feeds BOTH sides of the pair join and is
     // evaluated twice per run — deliberately. A cut of the ~#docs-row
-    // sketch (tried in r19) made the query SLOWER (BenchOne A/B on one
+    // sketch (tried in r19) made the query SLOWER (targeted A/B on one
     // window: 2.8-3.0 s cut vs 1.6-2.6 s uncut; full bench 2.46 vs the
     // 1.4-1.8 s band of every prior round): the two evaluations are
     // independent stages of the ONE query job and overlap across

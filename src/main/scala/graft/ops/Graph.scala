@@ -69,8 +69,10 @@ object Graph {
     * shuffle path. 4M rows * 16 B = 64 MB, comfortable against the
     * default 1 GiB driver/executor broadcast ceiling. */
   private val BroadcastNodeBound = 4L * 1000 * 1000
+  private[graft] def broadcastsRoundSide(nNodes: Long): Boolean =
+    nNodes <= BroadcastNodeBound
   private def perRoundSide(df: DataFrame, nNodes: Long): DataFrame =
-    if (nNodes <= BroadcastNodeBound) broadcast(df) else df
+    if (broadcastsRoundSide(nNodes)) broadcast(df) else df
 
   /** Memoized materialized trade graph: (edges, degrees, node count).
     * Built once per (appId, dir) and pinned — PageRank joins the edge
@@ -121,21 +123,11 @@ object Graph {
     * pointer jumping. */
   def pageRank(s: SparkSession, d: String, iters: Int = 5,
       k: Int = 20): DataFrame = {
-    val (edges, deg, nBox) = tradeGraph(s, d)
-    val n = nBox.longValue()
-    val init = RankScale / n
-    val base = (15L * init) / 100L
-    var rank = GraftSession.cut(
-      deg.select(col("src").as("node"), lit(init).as("rank")))
+    val (edges, rank0, n) = pageRankRoundInputs(s, d)
+    val base = (15L * (RankScale / n)) / 100L
+    var rank = rank0
     for (i <- 1 to iters) {
-      // `DIV`, not `/`: Spark's Divide on longs returns DOUBLE, and a
-      // double at 1e12 magnitude would drift from the oracle's floor div
-      rank = edges
-        .join(perRoundSide(rank.withColumnRenamed("node", "src"), n),
-          "src")
-        .select(col("dst"), expr("rank DIV deg").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("c"))
+      rank = pageRankContribs(edges, rank, n)
         .select(col("dst").as("node"),
           (lit(base) + expr("(85 * c) DIV 100")).as("rank"))
       // materialize every second round (and the last): keeps lineage
@@ -147,6 +139,20 @@ object Graph {
         col("rank").as("rank_scaled"))
       .orderBy(col("rank_scaled").desc, col("node")).limit(k)
   }
+
+  /** One rank round's contributions, shared by [[pageRank]] and
+    * [[personalizedPageRank]]: every node in `rank` (node, rank) sends
+    * rank DIV deg along its out-edges of the pinned dst-hashed trade
+    * graph, summed per receiving node as (dst, c). `DIV`, not `/`:
+    * Spark's Divide on longs returns DOUBLE, and a double at 1e12
+    * magnitude would drift from the oracle's floor div. */
+  private[graft] def pageRankContribs(edges: DataFrame, rank: DataFrame,
+      n: Long): DataFrame =
+    edges
+      .join(perRoundSide(rank.withColumnRenamed("node", "src"), n), "src")
+      .select(col("dst"), expr("rank DIV deg").as("contrib"))
+      .groupBy(col("dst"))
+      .agg(sum(col("contrib")).as("c"))
 
   /** DuckDB oracle for [[pageRank]]: the same iteration count unrolled
     * as a CTE chain with identical floor-division arithmetic. `n` is a
@@ -842,12 +848,7 @@ object Graph {
     var rank = GraftSession.cut(
       s.range(1).select(lit(source).as("node"), lit(RankScale).as("rank")))
     for (i <- 1 to iters) {
-      rank = edges
-        .join(perRoundSide(rank.withColumnRenamed("node", "src"), n),
-          "src")
-        .select(col("dst"), expr("rank DIV deg").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("c"))
+      rank = pageRankContribs(edges, rank, n)
         .select(col("dst").as("node"), expr("(85 * c) DIV 100").as("rank"))
         .unionAll(restartRow)
         .groupBy(col("node")).agg(sum(col("rank")).as("rank"))
@@ -2057,9 +2058,9 @@ object Graph {
     dir.join(perRoundSide(auth, nHubs), "sup")
       .groupBy(col("c")).agg(sum(col("a")).as("hr"))
 
-  /** Round-plan audit surface (tools/FixpointRoundAudit): the exact
+  /** Round-plan audit surface (`tools.Inspect rounds`): the exact
     * (edge table, node count) pairs each fixpoint loop consumes, so
-    * the audit tool explains the very round expression the loop
+    * the tool explains the very round expression the loop
     * materializes — against the real pinned tables — instead of
     * duplicating operator internals. */
   private[graft] def ssspRoundInputs(s: SparkSession, d: String,
@@ -2078,6 +2079,18 @@ object Graph {
     labelPropPrep(
       e.select(col("a").as("u"), col("b").as("v"))
         .unionAll(e.select(col("b").as("u"), col("a").as("v"))))
+  }
+
+  /** [[pageRank]]'s inputs, shared with the round-plan audit (see
+    * [[ssspRoundInputs]]): the pinned trade edges, the uniform initial
+    * rank state RankScale / n (cut) and the node count n. */
+  private[graft] def pageRankRoundInputs(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, Long) = {
+    val (edges, deg, nBox) = tradeGraph(s, d)
+    val n = nBox.longValue()
+    val rank0 = GraftSession.cut(
+      deg.select(col("src").as("node"), lit(RankScale / n).as("rank")))
+    (edges, rank0, n)
   }
 
   /** See [[ssspRoundInputs]]: (sup-pinned dir, c-pinned dir, initial
