@@ -1,27 +1,30 @@
 package graft.fetch
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Binary document acquisition (SURVEY.md §2.1 S11/S12, §2.2 K7).
   *
-  * The fetch runs in `mapPartitions` with ONE client per partition
-  * (the Spark analog of the reference's shared `requests.Session`,
-  * scraper_aalborg.py:238-239); tasks parallelize across executors, so
-  * cluster-wide concurrency = task slots, replacing the reference's
-  * 15-thread pool. The client is pluggable: [[StaticFetcher]] keeps
-  * the harness hermetic; an HTTP implementation drops in behind the
-  * same trait without touching any pipeline.
+  * The fetch runs in `mapPartitions`; tasks parallelize across
+  * executors, so cluster-wide concurrency = task slots, replacing the
+  * reference's 15-thread pool. The client is pluggable: [[StaticFetcher]]
+  * keeps the harness hermetic; an HTTP implementation drops in behind
+  * the same trait without touching any pipeline.
   *
-  * Fetch results carry an HTTP-ish status; failures become K7 side
-  * output (error rows land in a separate sink for inspection,
-  * scraper_ishoej.py:107-110's debug dump done relationally).
+  * Fetch results carry an HTTP-ish status; the ingest tail
+  * (`GenericIngest.land`) turns failures into K7 side output (error
+  * rows land in a separate sink for inspection, scraper_ishoej.py:
+  * 107-110's debug dump done relationally).
   */
 object Fetch {
 
-  /** Per-partition client factory: `open()` once per partition, then
-    * `fetch(url)` per row. Implementations must be serializable. */
+  /** Document client. [[fetchBinary]] ships it inside the task
+    * closure, so each task deserializes its own copy and calls
+    * `fetch(url)` once per row; there is no open or close hook. Keep
+    * connection state (the analog of the reference's shared
+    * `requests.Session`, scraper_aalborg.py:238-239) in a `@transient
+    * lazy val`, built on first use in each task's copy and reused for
+    * the rest of its partition. Implementations must be serializable. */
   trait Fetcher extends Serializable {
     def fetch(url: String): FetchResult
   }
@@ -68,26 +71,18 @@ object Fetch {
     StructField("content", BinaryType, nullable = true)))
 
   /** Fetch the `urlCol` of every row, appending status/content_type/
-    * content columns. One fetcher per partition; rows stream through
-    * without materializing the partition. */
+    * content columns. Each task's copy of `fetcher` serves its whole
+    * partition; rows stream through without materializing it. */
   def fetchBinary(df: DataFrame, urlCol: String,
       fetcher: Fetcher): DataFrame = {
     val schema = StructType(df.schema.fields ++ resultSchema.fields)
     val urlIdx = df.schema.fieldIndex(urlCol)
     val enc = org.apache.spark.sql.Encoders.row(schema)
     df.mapPartitions { it =>
-      // one client per partition (connection reuse at scale)
-      val client = fetcher
       it.map { row =>
-        val r = client.fetch(row.getString(urlIdx))
+        val r = fetcher.fetch(row.getString(urlIdx))
         Row.fromSeq(row.toSeq ++ Seq(r.status, r.contentType, r.content))
       }
     }(enc)
   }
-
-  /** F9/K7 split: (successes, error side output). */
-  def partitionByStatus(fetched: DataFrame): (DataFrame, DataFrame) =
-    (fetched.filter(col("status") < 400),
-      fetched.filter(col("status") >= 400)
-        .select(col("url"), col("status"), col("content_type")))
 }

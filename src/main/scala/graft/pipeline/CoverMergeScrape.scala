@@ -12,9 +12,11 @@ import graft.parse.{GraftFunctions, HtmlParser}
   * scraper_ringkoebing_skjern.py:33-67,134-243):
   *
   *   meeting page -> Danish-date title parse (P5) -> participants
-  *   collect (A4) -> item-PDF links with F7 exclusion predicates ->
-  *   binary fetch (S11, per-partition client) -> cover synthesis (B4)
-  *   -> ordered PDF merge aggregate (A5/B5) -> partitioned sink.
+  *   collect (A4) -> canonical naming (P7) -> anti-join inventory
+  *   (J1/K5) -> item-PDF links with F7 exclusion predicates -> binary
+  *   fetch (S11) -> cover synthesis (B4) -> ordered PDF merge aggregate
+  *   (A5/B5) -> partitioned sink (K1). A meeting the sink holds
+  *   fetches no item.
   *
   * Scale shape: one generator explode per page, one fetch pass over
   * only the links that survive the exclusions, one groupBy-meeting
@@ -48,60 +50,60 @@ object CoverMergeScrape {
       !lower(text).contains("hent hele") &&
       !lower(text).contains("godkendelse af dagsorden")
 
-  /** One run over a directory of meeting pages. The fetcher supplies
-    * the per-item PDF bytes (hermetic in tests). Returns merged-doc
-    * count. */
-  def run(spark: SparkSession, pagesDir: String, municipality: String,
-      sinkDir: String, fetcher: Fetch.Fetcher): Long = {
+  /** Candidate step: one named row per meeting page, its h1 title and
+    * date, and its participants (parse_html returns one row per h1). */
+  private[graft] def meetingCandidates(spark: SparkSession, pagesDir: String,
+      municipality: String): DataFrame = {
     GraftFunctions.register(spark)
-    val pages = DeepScrape.readPages(spark, pagesDir)
-
-    // h1 title/date per page: parse_html returns one row per h1
-    val meta = pages
+    val meta = DeepScrape.readPages(spark, pagesDir)
       .select(col("page"), col("html"),
         expr("parse_html(html, 'h1')")
           .as(Seq("pos", "tag", "href", "text", "attrs")))
       .filter(col("pos") === 0)
       .select(col("page"), col("html"), col("text").as("title"),
         Exprs.parseDanishDate(col("text")).as("meeting_date"),
-        participantsUdf(col("html")).as("participants"))
+        participantsUdf(col("html")).as("participants"),
+        lit(municipality).as("municipality"))
+    GenericIngest.named(meta, "Oekonomi", col("page"))
+  }
 
-    // item links surviving the F7 exclusions, ordered by position
-    val items = meta
-      .select(col("page"),
-        expr("parse_html(html, 'tr.agenda--tr a')")
-          .as(Seq("pos", "tag", "href", "text", "attrs")))
+  /** Acquire step: fetch the item PDFs surviving the F7 exclusions,
+    * synthesize the cover, merge both in item order per meeting. */
+  private[graft] def merge(todo: DataFrame,
+      fetcher: Fetch.Fetcher): DataFrame = {
+    val meeting = Seq("municipality", "committee", "filename",
+      "meeting_date", "page").map(col)
+    val items = todo
+      .select(meeting :+ expr("parse_html(html, 'tr.agenda--tr a')")
+        .as(Seq("pos", "tag", "href", "text", "attrs")): _*)
       .filter(keepItemLink(col("href"), col("text")))
-      .select(col("page"), col("pos"), col("href"))
-
+      .select(meeting ++ Seq(col("pos"), col("href")): _*)
     val fetched = Fetch.fetchBinary(items, "href", fetcher)
       .filter(col("status") < 400)
-      .select(col("page"), (col("pos") + 1).as("idx"),
-        col("content").as("pdf"))
-
-    val covers = meta.select(col("page"), lit(0).as("idx"),
+      .select(meeting ++ Seq((col("pos") + 1).as("idx"),
+        col("content").as("pdf")): _*)
+    val covers = todo.select(meeting ++ Seq(lit(0).as("idx"),
       DocKernels.makeCoverUdf(col("title"),
         date_format(col("meeting_date"), "yyyy-MM-dd"),
-        col("participants")).as("pdf"))
-
-    val merged = covers.unionByName(fetched)
-      .groupBy(col("page"))
+        col("participants")).as("pdf")): _*)
+    covers.unionByName(fetched)
+      .groupBy(meeting: _*)
       .agg(DocKernels.mergePdfs(col("idx"), col("pdf")).as("pdf"))
-      .join(meta.select(col("page"), col("meeting_date")), Seq("page"))
-      .withColumn("municipality", lit(municipality))
-      .withColumn("committee", lit("Oekonomi"))
-      .withColumn("filename", Exprs.canonicalFilename(col("meeting_date"),
-        col("municipality"), lit("oekonomiudvalget"), col("page")))
       .select("municipality", "committee", "filename", "meeting_date", "pdf")
-
-    val todo = merged.join(
-      GenericIngest.inventory(spark, sinkDir),
-      Seq("filename"), "left_anti")
-    val n = todo.count()
-    if (n > 0) {
-      todo.write.mode("append")
-        .partitionBy("municipality", "committee").parquet(sinkDir)
-    }
-    n
   }
+
+  /** What a run lands on an empty sink: candidate step, then acquire
+    * step. Plan sweeps (ScaleInvariantsSpec) audit this dataflow. */
+  private[graft] def mergedDocs(spark: SparkSession, pagesDir: String,
+      municipality: String, fetcher: Fetch.Fetcher): DataFrame =
+    merge(meetingCandidates(spark, pagesDir, municipality), fetcher)
+
+  /** One run over a directory of meeting pages: merge a cover and the
+    * item PDFs for each meeting the sink does not hold yet. The fetcher
+    * supplies the per-item PDF bytes (hermetic in tests). Returns
+    * merged-doc count. */
+  def run(spark: SparkSession, pagesDir: String, municipality: String,
+      sinkDir: String, fetcher: Fetch.Fetcher): Long =
+    GenericIngest.land(meetingCandidates(spark, pagesDir, municipality),
+      sinkDir)(merge(_, fetcher))._1
 }

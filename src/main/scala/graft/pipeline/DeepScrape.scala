@@ -10,11 +10,11 @@ import graft.parse.{GraftFunctions, HtmlParser}
 /** The deep-scrape + document-synthesis dataflow (reference E3,
   * scraper_copenhagen.py:112-239) as one declarative pipeline:
   *
-  *   listing scan (S3) -> doc-type filter (F2) + date (P4) ->
-  *   per-meeting agenda items (J5: parse_html explode, 1:N) ->
-  *   per-item content fetch + appendix cleanup -> HTML assembly (A6)
-  *   -> html_to_pdf (B2) -> anti-join inventory (J1/K5) ->
-  *   partitioned sink (K1).
+  *   listing scan (S3) -> doc-type filter (F2) + date (P4) -> canonical
+  *   naming (P7) -> anti-join inventory (J1/K5) -> per-meeting agenda
+  *   items (J5: parse_html explode, 1:N) -> per-item content fetch +
+  *   appendix cleanup -> HTML assembly (A6) -> html_to_pdf (B2) ->
+  *   partitioned sink (K1). A meeting the sink holds costs no item work.
   *
   * Hermetic: the "site" is a directory of HTML files; a page join on
   * the page key replaces live HTTP (the fetch connector slots in at
@@ -75,16 +75,17 @@ object DeepScrape {
   }
 
   /** Agenda items per meeting (J5): explode td.item-number /
-    * td.item-content pairs, aligned by position. */
+    * td.item-content pairs, aligned by position. Every column of
+    * `meetingsDf` rides along on each item. */
   def agendaItems(pages: DataFrame, meetingsDf: DataFrame): DataFrame = {
+    val meeting = meetingsDf.columns.toSeq.map(col)
     val withHtml = meetingsDf.join(pages,
       col("meeting_page") === col("page"), "inner").drop("page")
     val numbers = withHtml
-      .select(col("meeting_page"), col("meeting_date"),
-        expr("parse_html(html, 'td.item-number')")
-          .as(Seq("pos", "tag", "href", "text", "attrs")))
-      .select(col("meeting_page"), col("meeting_date"), col("pos"),
-        Exprs.stripLabel(col("text"), "Punkt").cast("int").as("number"))
+      .select(meeting :+ expr("parse_html(html, 'td.item-number')")
+        .as(Seq("pos", "tag", "href", "text", "attrs")): _*)
+      .select(meeting ++ Seq(col("pos"),
+        Exprs.stripLabel(col("text"), "Punkt").cast("int").as("number")): _*)
     val contents = withHtml
       .select(col("meeting_page"),
         expr("parse_html(html, 'td.item-content a')")
@@ -94,50 +95,49 @@ object DeepScrape {
     numbers.join(contents, Seq("meeting_page", "pos"))
   }
 
-  /** The full synthesis plan: listing -> meetings -> agenda items ->
-    * content cleanup -> per-meeting HTML assembly -> PDF. Split from
-    * the action so plan sweeps (ScaleInvariantsSpec) audit the exact
-    * dataflow a production run executes. */
-  def synthesizedDocs(spark: SparkSession, pagesDir: String,
-      listingPage: String, municipality: String): DataFrame = {
-    GraftFunctions.register(spark)
-    val pages = readPages(spark, pagesDir)
-    val ms = meetings(pages, listingPage)
-    val items = agendaItems(pages, ms)
+  /** Candidate step: one named row per Referat meeting, keyed by its
+    * date and page before any item work. */
+  private[graft] def meetingCandidates(pages: DataFrame, listingPage: String,
+      municipality: String): DataFrame =
+    GenericIngest.named(
+      meetings(pages, listingPage).withColumn("municipality", lit(municipality)),
+      "Oekonomi", col("meeting_page"))
+
+  /** Acquire step: agenda items -> content cleanup -> per-meeting HTML
+    * assembly -> PDF, for the given named meetings. */
+  private[graft] def synthesize(pages: DataFrame,
+      todo: DataFrame): DataFrame =
+    agendaItems(pages, todo)
       .join(pages, col("item_page") === col("page"), "left").drop("page")
       .withColumn("content", extractContentUdf(col("html")))
       .withColumn("section",
         concat(lit("<h2>Punkt "), col("number"), lit(": "), col("title"),
           lit("</h2><p>"), col("content"), lit("</p>")))
-
-    items
-      .groupBy(col("meeting_page"), col("meeting_date"))
+      .groupBy(todo.columns.toSeq.map(col): _*)
       .agg(sort_array(collect_list(struct(col("number"), col("section"))))
         .as("parts"))
       .withColumn("html", DocKernels.assembleHtml(
         concat(lit("Referat "), date_format(col("meeting_date"), "yyyy-MM-dd")),
         expr("transform(parts, p -> p.section)")))
       .withColumn("pdf", DocKernels.htmlToPdfUdf(col("html")))
-      .withColumn("municipality", lit(municipality))
-      .withColumn("committee", lit("Oekonomi"))
-      .withColumn("filename", Exprs.canonicalFilename(col("meeting_date"),
-        col("municipality"), lit("oekonomiudvalget"), col("meeting_page")))
       .select("municipality", "committee", "filename", "meeting_date", "pdf")
+
+  /** What a run lands on an empty sink: candidate step, then acquire
+    * step. Plan sweeps (ScaleInvariantsSpec) audit this dataflow. */
+  def synthesizedDocs(spark: SparkSession, pagesDir: String,
+      listingPage: String, municipality: String): DataFrame = {
+    GraftFunctions.register(spark)
+    val pages = readPages(spark, pagesDir)
+    synthesize(pages, meetingCandidates(pages, listingPage, municipality))
   }
 
-  /** One run: synthesize a PDF per Referat meeting; idempotent via
-    * bulk-inventory anti-join. Returns newly-written count. */
+  /** One run: synthesize a PDF per Referat meeting the sink does not
+    * hold yet. Returns newly-written count. */
   def run(spark: SparkSession, pagesDir: String, listingPage: String,
       municipality: String, sinkDir: String): Long = {
-    val docs = synthesizedDocs(spark, pagesDir, listingPage, municipality)
-    val todo = docs.join(
-      GenericIngest.inventory(spark, sinkDir),
-      Seq("filename"), "left_anti")
-    val n = todo.count()
-    if (n > 0) {
-      todo.write.mode("append")
-        .partitionBy("municipality", "committee").parquet(sinkDir)
-    }
-    n
+    GraftFunctions.register(spark)
+    val pages = readPages(spark, pagesDir)
+    GenericIngest.land(meetingCandidates(pages, listingPage, municipality),
+      sinkDir)(synthesize(pages, _))._1
   }
 }

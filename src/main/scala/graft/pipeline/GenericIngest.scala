@@ -1,10 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.expr.Exprs
+import graft.fetch.Fetch
 import graft.parse.GraftFunctions
 
 /** The generic-ingest dataflow (reference E2, scraper.py:154-275,
@@ -14,7 +16,11 @@ import graft.parse.GraftFunctions
   *   prefix filter (F1) -> uuid/date projection (P1/P2) -> validity
   *   (F6) -> date-mode predicate (F3) -> first-seen dedup (D1) ->
   *   per-municipality limit (L1/L3) -> canonical naming (P7/J2) ->
-  *   anti-join against sink inventory (J1/K5) -> partitioned sink (K1).
+  *   anti-join against sink inventory (J1/K5) -> fetch -> partitioned
+  *   sink (K1).
+  *
+  * The last four steps are the ingest tail ([[named]], [[land]]) that
+  * every sink-writing pipeline shares, each with its own acquire step.
   *
   * Hermetic: "portals" are HTML files named `{municipality}.html` in
   * `portalDir` (the live-HTTP connector plugs in behind the same
@@ -70,17 +76,9 @@ object GenericIngest {
         col("pos").as("discovery_idx"), col("href"), col("text"))
       .filter(col("href").startsWith("/vis?Referat-")) // F1+F2
 
-    val projected = links
-      .withColumn("url", Exprs.urlJoin(col("base_url"), col("href")))
-      .withColumn("doc_uuid", Exprs.extractUuid(col("url")))
-      .withColumn("meeting_date",
-        Exprs.extractUrlDate(Exprs.urlPercentDecode(col("url"))))
-      .filter(col("doc_uuid").isNotNull) // F6
-      // F3: NEW keeps today-or-later (null dates pass, scraper_utils.py:72-87)
-      .filter(
-        if (mode == "NEW") col("meeting_date").isNull ||
-          col("meeting_date") >= lit(today)
-        else lit(true))
+    val projected = dated(
+      links.withColumn("url", Exprs.urlJoin(col("base_url"), col("href"))),
+      mode, today)
 
     // D1: first-seen per URL in discovery order; then L3: the limit
     // budget counts only surviving rows, per municipality.
@@ -88,21 +86,42 @@ object GenericIngest {
       .orderBy(col("discovery_idx"))
     val limitW = Window.partitionBy(col("municipality"))
       .orderBy(col("discovery_idx"))
-    projected
+    val limited = projected
       .withColumn("rn", row_number().over(dedupW))
       .filter(col("rn") === 1)
       .withColumn("k", row_number().over(limitW))
       .filter(col("k") <= limitPerMuni)
-      .withColumn("committee", lit(committee))
-      .withColumn("filename", Exprs.sanitizeFilename(
-        Exprs.canonicalFilename(col("meeting_date"), col("municipality"),
-          lit("oekonomiudvalget"), col("doc_uuid"))))
+    named(limited, committee, col("doc_uuid"))
       .withColumn("bucket", concat(lit("raw-files-"),
         regexp_replace(col("municipality"), "_", "-"),
         lit(committeeSuffix.getOrElse(committee, ""))))
       .select("municipality", "committee", "discovery_idx", "url",
         "doc_uuid", "meeting_date", "filename", "bucket")
   }
+
+  /** P1/P2 uuid/date projection, F6 validity and F3 date mode of the
+    * batch and streaming ingest. NEW keeps today-or-later (null dates
+    * pass, scraper_utils.py:72-87). */
+  private[graft] def dated(links: DataFrame, mode: String,
+      today: java.sql.Date): DataFrame =
+    links
+      .withColumn("doc_uuid", Exprs.extractUuid(col("url")))
+      .withColumn("meeting_date",
+        Exprs.extractUrlDate(Exprs.urlPercentDecode(col("url"))))
+      .filter(col("doc_uuid").isNotNull) // F6
+      .filter(
+        if (mode == "NEW") col("meeting_date").isNull ||
+          col("meeting_date") >= lit(today)
+        else lit(true))
+
+  /** P7/P8: `committee` and the sanitized canonical sink key
+    * `filename` (`key` names undated rows). */
+  private[graft] def named(df: DataFrame, committee: String,
+      key: Column): DataFrame =
+    df.withColumn("committee", lit(committee))
+      .withColumn("filename", Exprs.sanitizeFilename(
+        Exprs.canonicalFilename(col("meeting_date"), col("municipality"),
+          lit("oekonomiudvalget"), key)))
 
   /** Connector-backed ingest (E2 over the DSv2 `meetinglist` source):
     * the date bound and per-source limit push INTO the crawl
@@ -111,24 +130,10 @@ object GenericIngest {
   def runFromConnector(spark: SparkSession, portalDir: String,
       sinkDir: String, committee: String = "Oekonomi",
       minDate: Option[java.sql.Date] = None,
-      fetcher: graft.fetch.Fetch.Fetcher = graft.fetch.Fetch.StaticFetcher())
-      : Long = {
-    val cand = connectorCandidates(spark, portalDir, committee, minDate)
-    val todo = cand.join(inventory(spark, sinkDir),
-      Seq("filename"), "left_anti")
-    val fetched = graft.fetch.Fetch.fetchBinary(todo, "url", fetcher)
-      .filter(col("status") < 400)
-      .drop("status", "content_type")
-      .persist() // one crawl serves both the count and the write
-    try {
-      val n = fetched.count()
-      if (n > 0) {
-        fetched.write.mode("append")
-          .partitionBy("municipality", "committee").parquet(sinkDir)
-      }
-      n
-    } finally fetched.unpersist()
-  }
+      fetcher: Fetch.Fetcher = Fetch.StaticFetcher()): Long =
+    land(connectorCandidates(spark, portalDir, committee, minDate),
+      sinkDir, keep = col("status") < 400)(
+      Fetch.fetchBinary(_, "url", fetcher))._1
 
   /** The connector-backed candidate plan [[runFromConnector]] fetches
     * and sinks: DSv2 `meetinglist` scan (date bound and limits push
@@ -145,34 +150,61 @@ object GenericIngest {
       case Some(d) => base.filter(col("meeting_date") >= lit(d))
       case None => base
     }
-    bounded
-      .filter(col("doc_uuid").isNotNull)
-      .withColumn("committee", lit(committee))
-      .withColumn("filename", graft.expr.Exprs.sanitizeFilename(
-        graft.expr.Exprs.canonicalFilename(col("meeting_date"),
-          col("municipality"), lit("oekonomiudvalget"), col("doc_uuid"))))
+    named(bounded.filter(col("doc_uuid").isNotNull), committee,
+      col("doc_uuid"))
       .dropDuplicates("filename")
   }
 
   /** Bulk sink inventory (J1's right side): list once, never probe
-    * per key (contra reference scraper.py:212-219 head_object loop). */
-  def inventory(spark: SparkSession, sinkDir: String): DataFrame = {
-    val p = new java.io.File(sinkDir)
-    if (!p.exists()) spark.emptyDataFrame.withColumn("filename", lit(""))
-      .select("filename").limit(0)
-    else spark.read.parquet(sinkDir).select("filename").distinct()
+    * per key (contra reference scraper.py:212-219 head_object loop).
+    * The known key schema makes a sink holding only a crashed write's
+    * `_temporary` debris read as empty, not fail schema inference. */
+  def inventory(spark: SparkSession, sinkDir: String): DataFrame =
+    if (!new java.io.File(sinkDir).exists())
+      spark.createDataFrame(java.util.List.of[Row](), inventorySchema)
+    else spark.read.schema(inventorySchema).parquet(sinkDir)
+      .select("filename").distinct()
+
+  private val inventorySchema = StructType.fromDDL("filename STRING")
+
+  /** The ingest tail, the only writer of a document sink: anti-join
+    * the [[named]] candidates against the [[inventory]] (J1/K5), so
+    * `acquire` never sees a held document (the reference's "filter
+    * before download", scraper.py:101-105); persist the acquired frame
+    * and count its `keep` and rejected rows in one aggregate job; append
+    * the kept rows, less the fetch's status columns, partitioned by
+    * municipality/committee (K1/K2), and the rejected rows' url/status
+    * to `errDir` if given (K7). Returns (landed, rejected). */
+  private[graft] def land(candidates: DataFrame, sinkDir: String,
+      keep: Column = lit(true), errDir: String = null)(
+      acquire: DataFrame => DataFrame): (Long, Long) = {
+    val todo = candidates.join(inventory(candidates.sparkSession, sinkDir),
+      Seq("filename"), "left_anti")
+    val acquired = acquire(todo).persist()
+    try {
+      val counts = acquired
+        .agg(count(when(keep, 1)), count(when(!keep, 1))).head()
+      val (n, rejected) = (counts.getLong(0), counts.getLong(1))
+      if (n > 0) acquired.filter(keep).drop("status", "content_type")
+        .write.mode("append").partitionBy("municipality", "committee")
+        .parquet(sinkDir)
+      if (errDir != null && rejected > 0) acquired.filter(!keep)
+        .select("url", "status", "content_type")
+        .write.mode("append").parquet(errDir)
+      (n, rejected)
+    } finally acquired.unpersist()
   }
 
   /** One ingest run: returns the number of newly-ingested documents.
-    * Content acquisition goes through the pluggable [[graft.fetch.Fetch.Fetcher]]
-    * (per-partition client; hermetic StaticFetcher by default); fetch
-    * failures become K7 error side output instead of aborting the run. */
+    * Content acquisition goes through the pluggable [[Fetch.Fetcher]]
+    * (hermetic StaticFetcher by default); fetch failures become K7
+    * error side output instead of aborting the run. */
   def run(spark: SparkSession, configCsv: String, portalDir: String,
       sinkDir: String, committee: String = "Oekonomi",
       mode: String = "ALL", limitPerMuni: Int = 100,
       today: java.sql.Date = java.sql.Date.valueOf("2024-01-01"),
       metricsOut: scala.collection.mutable.Map[String, Long] = null,
-      fetcher: graft.fetch.Fetch.Fetcher = graft.fetch.Fetch.StaticFetcher(),
+      fetcher: Fetch.Fetcher = Fetch.StaticFetcher(),
       errDir: String = null): Long = {
     val cand = candidates(spark, configCsv, portalDir, committee, mode,
       limitPerMuni, today)
@@ -182,33 +214,13 @@ object GenericIngest {
     val observed = cand.observe(obs,
       count(lit(1)).as("n_candidates"),
       count(col("meeting_date")).as("n_dated"))
-    val todo = observed.join(inventory(spark, sinkDir),
-      Seq("filename"), "left_anti")
-    // acquire AFTER all filters + the anti-join — never fetch a
-    // document that would be discarded (the reference's explicit
-    // "filter before download" rule, scraper.py:101-105, enforced by
-    // plan construction)
-    val fetched = graft.fetch.Fetch.fetchBinary(todo, "url", fetcher)
-      .persist()
-    try {
-      val (ok, errs) = graft.fetch.Fetch.partitionByStatus(fetched)
-      val n = ok.count()
-      if (metricsOut != null) {
-        obs.get.foreach { case (k, v) =>
-          metricsOut(k) = v.asInstanceOf[Long] }
-        metricsOut("n_ingested") = n
-        metricsOut("n_fetch_errors") = fetched.count() - n
-      }
-      if (errDir != null && fetched.count() - n > 0) {
-        errs.write.mode("append").parquet(errDir) // K7 side output
-      }
-      if (n > 0) {
-        ok.drop("status", "content_type")
-          .write.mode("append")
-          .partitionBy("municipality", "committee")
-          .parquet(sinkDir)
-      }
-      n
-    } finally fetched.unpersist()
+    val (n, failed) = land(observed, sinkDir, keep = col("status") < 400,
+      errDir)(Fetch.fetchBinary(_, "url", fetcher))
+    if (metricsOut != null) {
+      obs.get.foreach { case (k, v) => metricsOut(k) = v.asInstanceOf[Long] }
+      metricsOut("n_ingested") = n
+      metricsOut("n_fetch_errors") = failed
+    }
+    n
   }
 }

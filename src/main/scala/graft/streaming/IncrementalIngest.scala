@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.expr.Exprs
 import graft.pipeline.GenericIngest
 
 /** Incremental ingestion as Structured Streaming (SURVEY.md §2.11):
@@ -13,8 +12,9 @@ import graft.pipeline.GenericIngest
   * sink-existence dedup (scraper_utils.py:56-87) map to
   *
   *   readStream (file source, new listing exports only)
-  *     -> project/filter (same expression library as batch)
-  *     -> foreachBatch: anti-join sink inventory -> idempotent append
+  *     -> project/filter/naming (the batch pipeline's own)
+  *     -> foreachBatch: the batch ingest tail (GenericIngest.land:
+  *        anti-join sink inventory -> idempotent append)
   *   with Trigger.AvailableNow (one batch per scheduled run).
   *
   * State is the sink itself (exactly-once by document key), so a
@@ -34,23 +34,12 @@ object IncrementalIngest {
     StructField("url", StringType)))
 
   /** Transform a (micro-)batch of raw links into candidate documents —
-    * the same projection/filter/dedup surface as the batch pipeline. */
+    * the batch pipeline's projection and naming, then in-batch
+    * first-seen dedup by key. */
   def toCandidates(links: DataFrame, mode: String,
       today: java.sql.Date): DataFrame =
-    links
-      .withColumn("doc_uuid", Exprs.extractUuid(col("url")))
-      .withColumn("meeting_date",
-        Exprs.extractUrlDate(Exprs.urlPercentDecode(col("url"))))
-      .filter(col("doc_uuid").isNotNull)
-      .filter(
-        if (mode == "NEW") col("meeting_date").isNull ||
-          col("meeting_date") >= lit(today)
-        else lit(true))
-      .withColumn("filename", Exprs.sanitizeFilename(
-        Exprs.canonicalFilename(col("meeting_date"), col("municipality"),
-          lit("oekonomiudvalget"), col("doc_uuid"))))
-      .withColumn("committee", lit("Oekonomi"))
-      // in-batch first-seen dedup by key
+    GenericIngest.named(GenericIngest.dated(links, mode, today),
+      "Oekonomi", col("doc_uuid"))
       .dropDuplicates("filename")
 
   /** Run one AvailableNow pass over `incomingDir`; returns rows newly
@@ -67,16 +56,8 @@ object IncrementalIngest {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val todo = batch.join(
-          GenericIngest.inventory(batch.sparkSession, sinkDir),
-          Seq("filename"), "left_anti")
-          .withColumn("content", to_binary(col("doc_uuid"), lit("utf-8")))
-        val n = todo.count()
-        if (n > 0) {
-          todo.write.mode("append")
-            .partitionBy("municipality", "committee")
-            .parquet(sinkDir)
-        }
+        val (n, _) = GenericIngest.land(batch, sinkDir)(
+          _.withColumn("content", to_binary(col("doc_uuid"), lit("utf-8"))))
         appended.addAndGet(n)
         ()
       }

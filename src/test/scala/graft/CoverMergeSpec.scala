@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
 
 import graft.doc.MiniPdf
 import graft.fetch.Fetch
@@ -12,6 +13,27 @@ case class PdfFetcher() extends Fetch.Fetcher {
   def fetch(url: String): Fetch.FetchResult =
     Fetch.FetchResult(200, "application/pdf",
       MiniPdf.makePdf(Seq(MiniPdf.Page(Seq(s"content of $url")))))
+}
+
+/** [[PdfFetcher]] that counts every fetch. The counter is JVM-static:
+  * in local mode the executors share the driver's JVM, so the
+  * deserialized copies in each task all bump the same count. */
+case class CountingFetcher() extends Fetch.Fetcher {
+  def fetch(url: String): Fetch.FetchResult = {
+    CountingFetcher.calls.incrementAndGet()
+    PdfFetcher().fetch(url)
+  }
+}
+
+object CountingFetcher {
+  val calls = new AtomicLong(0L)
+
+  /** `run`'s result and the number of fetches it made. */
+  def counted(run: => Long): (Long, Long) = {
+    calls.set(0L)
+    val n = run
+    (n, calls.get())
+  }
 }
 
 /** End-to-end test for the cover+merge dataflow (RKSK shape: F7
@@ -54,5 +76,16 @@ class CoverMergeSpec extends SparkTestBase {
 
     val m2 = byName("2025-12-09_ringkoebing_skjern_oekonomiudvalget.pdf")
     assert(MiniPdf.pageCount(m2) == 2)
+  }
+
+  test("each item PDF is fetched once, and a no-op re-run fetches none") {
+    val sink = Files.createTempDirectory("graft_rksk_n_").resolve("docs").toString
+    def runOnce() = CountingFetcher.counted(CoverMergeScrape.run(spark,
+      "src/test/resources/fixtures/rksk", "ringkoebing_skjern", sink,
+      CountingFetcher()))
+    // 3 surviving item links over the 2 meetings
+    assert(runOnce() == ((2L, 3L)))
+    // both meetings are in the sink: no item work at all
+    assert(runOnce() == ((0L, 0L)))
   }
 }

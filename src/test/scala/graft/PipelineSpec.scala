@@ -144,4 +144,35 @@ class PipelineSpec extends SparkTestBase {
     assert(graft.fetch.Fetch.RetryingFetcher(always503, maxAttempts = 3)
       .fetch("http://x/f").status == 503)
   }
+
+  test("a sink left by a crashed first write reads as empty (K5)") {
+    val sink = tmpSink()
+    // a write that died before its first commit leaves only this
+    Files.createDirectories(java.nio.file.Paths.get(sink, "_temporary", "0"))
+    assert(GenericIngest.inventory(spark, sink).count() == 0)
+    assert(GenericIngest.run(spark, csv, portals, sink) == 5)
+    assert(spark.read.parquet(sink).count() == 5)
+  }
+
+  test("each missing document is fetched exactly once (K5)") {
+    val sink = tmpSink()
+    assert(CountingFetcher.counted(GenericIngest.run(spark, csv, portals,
+      sink, limitPerMuni = 1, fetcher = CountingFetcher())) == ((2L, 2L)))
+    assert(CountingFetcher.counted(GenericIngest.run(spark, csv, portals,
+      sink, fetcher = CountingFetcher())) == ((3L, 3L)))
+  }
+
+  test("K7 counters: ingested and failed fetches from one run (A2/K7)") {
+    val sink = tmpSink()
+    val errDir = Files.createTempDirectory("graft_err_").resolve("errs").toString
+    val metrics = scala.collection.mutable.Map.empty[String, Long]
+    val n = GenericIngest.run(spark, csv, portals, sink,
+      metricsOut = metrics,
+      fetcher = graft.fetch.Fetch.StaticFetcher(failPattern = "silkeborg"),
+      errDir = errDir)
+    assert(n == 3)
+    assert(metrics("n_ingested") == 3)
+    assert(metrics("n_fetch_errors") == 2)
+    assert(spark.read.parquet(errDir).count() == 2)
+  }
 }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{CorpusCuration, DeepScrape, Discovery, GenericIngest}
+import graft.pipeline.{CorpusCuration, CoverMergeScrape, DeepScrape,
+  Discovery, GenericIngest}
 import graft.streaming.{IncrementalIngest, StreamOps}
 
 /** Mechanical single-task-hazard sweep over EVERY gate query, the
@@ -998,8 +999,8 @@ class ScaleInvariantsSpec extends SparkTestBase {
       "one task") {
     // the surfaces a 100 TB user actually runs (r14 verdict): the
     // flagship entry(), both ingest dataflows, deep-scrape synthesis,
-    // end-to-end corpus curation, discovery, and the incremental
-    // ingest's batch projection. Fixture-sized inputs — the sweep
+    // the cover merge, end-to-end corpus curation, discovery, and the
+    // incremental ingest's batch projection. Fixture-sized inputs — the sweep
     // checks SHAPES, which don't change with scale.
     import spark.implicits._
     graft.parse.GraftFunctions.register(spark)
@@ -1020,6 +1021,9 @@ class ScaleInvariantsSpec extends SparkTestBase {
         spark, "src/test/resources/fixtures/portals3")),
       "deepscrape_docs" -> (() => DeepScrape.synthesizedDocs(spark,
         "src/test/resources/fixtures/kkpages", "listing", "kobenhavn")),
+      "covermerge_docs" -> (() => CoverMergeScrape.mergedDocs(spark,
+        "src/test/resources/fixtures/rksk", "ringkoebing_skjern",
+        PdfFetcher())),
       "curation_curated" -> (() => CorpusCuration.curate(spark, d001)._1),
       "curation_chunks" ->
         (() => CorpusCuration.curateToChunks(spark, d001)._1),
