@@ -148,48 +148,61 @@ object GraftSession {
     * memos on the PRE-cut plan and place the cut inside the build
     * block ([[graft.ops.TextOps.bigramNll]]); MemoStabilitySpec
     * enforces it mechanically for every gate query. */
-  def cut[T](ds: Dataset[T]): Dataset[T] = checkpoint(ds, None)._1
+  def cut[T](ds: Dataset[T]): Dataset[T] = checkpoint(ds, Nil)._1
 
-  /** [[cut]] fused with a per-round scalar witness read off the cut
-    * state — the components labSum, the eigenvector/HITS normalizers,
-    * the BFS frontier count. `witness` is ONE aggregate column (e.g.
-    * `count(lit(1))`, `sum(col("lab"))`) evaluated over the cut result
-    * and returned as a Long; a global aggregate computes every
-    * partition, and a non-aggregate column fails analysis, so the
-    * witness can never leave a lazy checkpoint partially materialized.
-    * See [[checkpoint]] for when this saves a job. */
-  def cutWith[T](ds: Dataset[T], witness: Column): (Dataset[T], Long) =
-    checkpoint(ds, Some(witness))
+  /** [[cut]] fused with per-round scalar witnesses read off the cut
+    * state — the components label sum, the eigenvector/HITS
+    * normalizers, the BFS frontier and k-truss edge counts. Each
+    * witness is a Long-valued aggregate column (`count(lit(1))`,
+    * `sum(col("lab"))`), returned in argument order; an aggregate over
+    * no rows that yields null (a `sum` of an empty round) reads 0.
+    * The witnesses are computed by the checkpoint's OWN job (see
+    * [[checkpoint]]), so a witnessed cut runs exactly the jobs of a
+    * plain one, in both modes. A non-aggregate witness fails analysis. */
+  def cutWith[T](ds: Dataset[T], witness: Column,
+      more: Column*): (Dataset[T], Seq[Long]) =
+    checkpoint(ds, witness +: more)
+
+  private val observations = new java.util.concurrent.atomic.AtomicLong
 
   /** The ONE checkpoint body: reads the local/reliable mode and
     * registers the cut origin for [[cut]] and [[cutWith]] alike.
     *
-    * Eager or lazy by one rule: LAZY only for a witnessed LOCAL cut.
-    * There the witness aggregation itself materializes the
-    * localCheckpoint's blocks — one driver job per round does both
-    * (r19), where an eager cut plus a separate witness paid two. A
-    * reliable checkpoint is always EAGER: a lazy one writes its files
-    * in a second job after the witness, and that job recomputes the
-    * round from the shuffle (the data is not cached), so every round's
-    * post-shuffle work ran twice. Eager, the write job computes the
-    * round once and the witness reads the files it wrote — the same
-    * job count, half the compute. A plain cut is eager in both modes:
-    * every caller materializes the shared intermediate immediately,
-    * so laziness would shift no cost (audited r13). */
+    * Always EAGER, in both modes: the checkpoint job computes the
+    * round once, and a reliable checkpoint writes its files from that
+    * same evaluation. Witnesses ride that job as a `Dataset.observe`
+    * under one uniquely named observation per cut, read back from the
+    * executed plan's collected metrics once the checkpoint returns, so
+    * no aggregate job runs over the cut. The observation sits on the
+    * top operator of the round's final stage, so its metrics count
+    * each row once. */
   private def checkpoint[T](ds: Dataset[T],
-      witness: Option[Column]): (Dataset[T], Long) = {
+      witnesses: Seq[Column]): (Dataset[T], Seq[Long]) = {
     val s = ds.sparkSession
     val reliable =
       s.conf.getOption("spark.graft.reliableCheckpoints").contains("true") &&
         s.sparkContext.getCheckpointDir.isDefined
-    val eager = reliable || witness.isEmpty
+    val name = s"graft_cut_${observations.incrementAndGet()}"
+    val observed =
+      if (witnesses.isEmpty) ds
+      else ds.observe(name, witnesses.head, witnesses.tail: _*)
     val out =
-      if (reliable) ds.checkpoint(eager) else ds.localCheckpoint(eager)
-    val w = witness.fold(0L)(c => out.agg(c).head().getLong(0))
+      if (reliable) observed.checkpoint() else observed.localCheckpoint()
+    val qe = observed.queryExecution
+    val values =
+      if (witnesses.isEmpty) Nil
+      else {
+        val row = qe.observedMetrics(name)
+        witnesses.indices.map(i => if (row.isNullAt(i)) 0L else row.getLong(i))
+      }
     out.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.foreach(registerCutOrigin(_, ds.queryExecution.optimizedPlan))
-    (out, w)
+    }.foreach(registerCutOrigin(_, qe.optimizedPlan match {
+      case m: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics =>
+        m.child
+      case p => p
+    }))
+    (out, values)
   }
 
   /** The ONE place the right-sizing policy lives (~64k rows per

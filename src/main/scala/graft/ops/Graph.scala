@@ -489,10 +489,9 @@ object Graph {
         .join(perRoundSide(dist.select(col("node")), nNodes),
           Seq("node"), "left_anti")
         .select(col("node"), lit(h.toLong).as("hops"))
-      // cutWith (r19): the frontier-emptiness probe is the cut's
-      // witness — one driver job per hop in local mode, where an eager
-      // cut + isEmpty paid two
-      val (cutNext, nNext) =
+      // the frontier-emptiness probe is the cut's witness, computed by
+      // the checkpoint's own job
+      val (cutNext, Seq(nNext)) =
         GraftSession.cutWith(sized(next), count(lit(1)))
       // an empty frontier ends the walk: every later round expands
       // nothing, so stopping here is result-identical to running out
@@ -1249,17 +1248,15 @@ object Graph {
       // first round only the fringe gets removed, so the anti-join
       // build side is a handful of ids — broadcast under the same
       // measured-bound gate as the rank/frontier tables — where the
-      // keep set stays node-sized. Materialize bad once: it is
-      // consumed three times (the count plus both anti-join builds),
-      // and the cut turns those into reads of a fringe-sized table.
-      val bad = GraftSession.cut(
+      // keep set stays node-sized. Materialize bad once: both
+      // anti-join builds then read a fringe-sized table. The broadcast
+      // is gated on bad's OWN measured count (the cut's witness, also
+      // the fixpoint check below) — not the edge count, which is
+      // orders of magnitude larger than the fringe and would withhold
+      // a broadcast the build side trivially fits
+      val (bad, Seq(nBad)) = GraftSession.cutWith(
         und.groupBy(col("u")).agg(count(lit(1)).as("dg"))
-          .filter(col("dg") < kDeg).select(col("u")))
-      // gate the broadcast on bad's OWN measured count (already paid
-      // for by the fixpoint check below) — not the edge count, which
-      // is orders of magnitude larger than the fringe and would
-      // withhold a broadcast the build side trivially fits
-      val nBad = bad.count()
+          .filter(col("dg") < kDeg).select(col("u")), count(lit(1)))
       if (nBad == 0L) {
         // fixed point: an empty bad set makes this and every
         // remaining round the identity, so skipping them returns
@@ -1337,9 +1334,9 @@ object Graph {
     require(kTruss >= 3, s"kTruss must be >= 3 (got $kTruss); " +
       "a 2-truss is the input edge set itself")
     val minTri = (kTruss - 2).toLong
-    var e = GraftSession.cut(
-      copurchaseEdges(s, d, minSupport).select(col("a"), col("b")))
-    var nEdges = e.count()
+    var (e, Seq(nEdges)) = GraftSession.cutWith(
+      copurchaseEdges(s, d, minSupport).select(col("a"), col("b")),
+      count(lit(1)))
     var i = 1
     var converged = false
     while (i <= rounds && !converged) {
@@ -1351,10 +1348,12 @@ object Graph {
         .join(adj.select(col("u").as("b"), col("v").as("c")),
           Seq("b", "c"), "left_semi")
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("tri"))
-      e = GraftSession.cut(e
+      // the edge count that detects the fixed point is the cut's witness
+      val (peeled, Seq(n2)) = GraftSession.cutWith(e
         .join(support.filter(col("tri") >= minTri)
-          .select(col("a"), col("b")), Seq("a", "b"), "left_semi"))
-      val n2 = e.count()
+          .select(col("a"), col("b")), Seq("a", "b"), "left_semi"),
+        count(lit(1)))
+      e = peeled
       if (n2 == nEdges) converged = true
       nEdges = n2
       i += 1
@@ -1512,10 +1511,9 @@ object Graph {
       // cut BEFORE the normalizer read: raw feeds both the dScale
       // scalar and the renormalized table, so an uncut raw would pay
       // the join+agg twice per round (once for .head(), once when the
-      // next round's broadcast collects x). cutWith (r19) takes the
-      // normalizer as the cut's witness — one driver job per round in
-      // local mode instead of two.
-      val (raw, xSum) = GraftSession.cutWith(edges
+      // next round's broadcast collects x). cutWith takes the
+      // normalizer as the cut's witness, inside the checkpoint's job.
+      val (raw, Seq(xSum)) = GraftSession.cutWith(edges
         .join(perRoundSide(x.withColumnRenamed("node", "src"), n), "src")
         .select(col("dst"), col("x"))
         .groupBy(col("dst")).agg(sum(col("x")).as("xr")),
@@ -1717,7 +1715,8 @@ object Graph {
     * every node's label to its own id, and measure the node count that
     * gates the per-round broadcasts (lab is one row per node, fixed
     * across rounds — the edge count would disqualify a build side far
-    * smaller than it).
+    * smaller than it) and the initial label sum, both as witnesses of
+    * the one state cut. Returns (edges, labels, node count, label sum).
     *
     * The edge table is memoized and PINNED hash-partitioned by v (r19,
     * replacing a per-call cut + compact): both consumers' rounds
@@ -1727,14 +1726,16 @@ object Graph {
     * the same symmetric table — share one build instead of cutting two
     * copies. */
   private[graft] def labelPropPrep(und0: DataFrame)
-      : (DataFrame, DataFrame, Long) = {
+      : (DataFrame, DataFrame, Long, Long) = {
     val und = IndexMemo.getOrBuild[DataFrame]("undEdges", "", Seq(und0)) {
       val built = GraftSession.persistCompactBy(und0, col("v"))
       (built, Seq(built))
     }
-    val lab = GraftSession.cut(und.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("lab")))
-    (und, lab, lab.count())
+    val (lab, Seq(nNodes, labSum)) = GraftSession.cutWith(
+      und.select(col("u").as("node")).distinct()
+        .select(col("node"), col("node").as("lab")),
+      count(lit(1)), sum(col("lab")))
+    (und, lab, nNodes, labSum)
   }
 
   /** One min-label propagation round over symmetric `und` from state
@@ -1743,43 +1744,46 @@ object Graph {
     * out so the round-plan audit tool can explain exactly the
     * expression the loop materializes.
     *
-    * The union form is KEPT here (r19, VERDICT r18 task 1 examined and
-    * partially declined): a join reformulation — aggregate proposals
-    * first, fold the state in by a node-keyed left join — was built
-    * and benched A/B at sf0.1 (q209: union+pin 1.06 s, join-form
-    * 1.36 s, both on like windows), and LOST: with `und` pinned
-    * hash(v), the union's proposal arm is already clustered by node,
-    * so the partial aggregation emits near-disjoint node-sized rows
-    * per partition and the one exchange moves ~state-sized bytes — the
-    * join form removed that exchange only to add a per-round SMJ stage
-    * (plus sorts), and at this fixture's 1-partition pin grain
-    * re-shuffled BOTH sides anyway. SSSP and LPA, whose proposal
-    * streams compress worse (weighted multi-edges / multi-label
-    * votes), DID win from the join form — see [[ssspRound]] and
-    * [[lpaRound]]. */
+    * Aggregate first, then fold the state in: the proposals are
+    * min-aggregated by `v` straight off the `und` pin (hashed by v), so
+    * that step plans no exchange, and each node's own label joins back
+    * through the SAME broadcast state side — a `ReusedExchange` of the
+    * broadcast the round already ships. The inner join keeps every
+    * node because `und` is symmetric (every labeled node is some edge's
+    * v, and every v is some edge's u). The round is one stage: with the
+    * checkpoint's job and the state broadcast, two driver jobs.
+    * Measured at sf0.1 (`runMain graft.Bench q209_components`, 4
+    * cores, runs alternated with each rival): this form 1.31-1.59 s
+    * over six runs; the union-then-aggregate form over the same
+    * witnessed cut 1.54-1.65 s over three, so removing its one
+    * exchange pays on its own. An earlier join form lost to the union
+    * form because it folded the state in with a non-broadcast left
+    * join, which planned a sort-merge join. */
   private[graft] def componentsRound(und: DataFrame, lab: DataFrame,
-      nNodes: Long): DataFrame =
-    und.join(perRoundSide(
-        lab.select(col("node").as("u"), col("lab")), nNodes), "u")
-      .select(col("v").as("node"), col("lab"))
-      .unionAll(lab)
-      .groupBy(col("node")).agg(min(col("lab")).as("lab"))
+      nNodes: Long): DataFrame = {
+    val state = perRoundSide(
+      lab.select(col("node").as("u"), col("lab")), nNodes)
+    und.join(state, "u")
+      .groupBy(col("v")).agg(min(col("lab")).as("p"))
+      .join(state, col("v") === col("u"))
+      .select(col("v").as("node"), least(col("p"), col("lab")).as("lab"))
+  }
 
   /** Core of [[components]]: min-label propagation over an explicit
     * symmetric (u, v) edge list, returning the (node, lab) table at
-    * the round-`rounds` (or earlier-fixpoint) state. */
+    * the round-`rounds` (or earlier-fixpoint) state. The input must
+    * hold both directions of every edge ([[componentsRound]] relies on
+    * it); an edgeless input yields an empty table. */
   private[graft] def componentLabels(und0: DataFrame,
       rounds: Int): DataFrame = {
-    val (und, lab0, nNodes) = labelPropPrep(und0)
+    val (und, lab0, nNodes, labSum0) = labelPropPrep(und0)
     var lab = lab0
-    var prev = lab.agg(sum(col("lab"))).head().getLong(0)
+    var prev = labSum0
     var i = 1
     var converged = false
     while (i <= rounds && !converged) {
-      // cutWith (r19): the label-sum witness materializes the lazily
-      // checkpointed round in local mode — one driver job per round
-      // where the eager cut + separate witness agg paid two
-      val (lab2, cur) = GraftSession.cutWith(
+      // the label-sum witness rides the round's checkpoint job
+      val (lab2, Seq(cur)) = GraftSession.cutWith(
         componentsRound(und, lab, nNodes), sum(col("lab")))
       lab = lab2
       if (cur == prev) converged = true
@@ -2018,13 +2022,13 @@ object Graph {
       // cut the RAW half-round table only: the normalized view is a
       // scalar projection over it (cutting both would double the
       // materializations per round for no lineage benefit). cutWith
-      // (r19) takes each normalizer as its half-round's witness — one
-      // driver job per half-round in local mode, not two.
-      val (aRaw, aSum) = GraftSession.cutWith(
+      // takes each normalizer as its half-round's witness, inside the
+      // checkpoint's job.
+      val (aRaw, Seq(aSum)) = GraftSession.cutWith(
         hitsAuthRound(dir, hub, nHubs, stateParts), sum(col("ar")))
       val aScale = math.max(aSum / RankScale, 1L)
       auth = aRaw.select(col("sup"), expr(s"ar DIV $aScale").as("a"))
-      val (hRaw, hSum) = GraftSession.cutWith(
+      val (hRaw, Seq(hSum)) = GraftSession.cutWith(
         hitsHubRound(dirC, auth, nHubs), sum(col("hr")))
       val hScale = math.max(hSum / RankScale, 1L)
       hub = hRaw.select(col("c"), expr(s"hr DIV $hScale").as("h"))
@@ -2074,7 +2078,7 @@ object Graph {
   /** See [[ssspRoundInputs]]; serves both components and LPA (they
     * prep the same symmetric thresholded co-purchase table). */
   private[graft] def labelPropRoundInputs(s: SparkSession, d: String,
-      minSupport: Int = 7): (DataFrame, DataFrame, Long) = {
+      minSupport: Int = 7): (DataFrame, DataFrame, Long, Long) = {
     val e = copurchaseEdges(s, d, minSupport)
     labelPropPrep(
       e.select(col("a").as("u"), col("b").as("v"))
@@ -2204,7 +2208,7 @@ object Graph {
   def lpaCommunities(s: SparkSession, d: String, minSupport: Int = 7,
       rounds: Int = 4): DataFrame = {
     val e = copurchaseEdges(s, d, minSupport)
-    val (und, lab0, nNodes) = labelPropPrep(
+    val (und, lab0, nNodes, _) = labelPropPrep(
       e.select(col("a").as("u"), col("b").as("v"))
         .unionAll(e.select(col("b").as("u"), col("a").as("v"))))
     var lab = lab0

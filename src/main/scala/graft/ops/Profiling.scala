@@ -445,10 +445,9 @@ object Profiling {
     * until the two final rounded divisions. */
   def lorenzDeciles(s: SparkSession, d: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val spend = GraftSession.cut(Tables.orders(s, d)
+    val (spend, Seq(n)) = GraftSession.cutWith(Tables.orders(s, d)
       .select(col("o_custkey"), cents.as("c"))
-      .groupBy(col("o_custkey")).agg(sum(col("c")).as("v")))
-    val n = spend.count()
+      .groupBy(col("o_custkey")).agg(sum(col("c")).as("v")), count(lit(1)))
     // DIV, not `/`: Divide on longs returns DOUBLE and a float decile
     // boundary could mis-bucket a rank at the edge
     val byDecile = scalableRank(spend, "v", "o_custkey", 1L << 22, "rk")

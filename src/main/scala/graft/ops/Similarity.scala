@@ -950,11 +950,11 @@ object Similarity {
       .agg(topk(col("vec_id"), col("cosine")).as("nn"))
       .select(explode(col("nn")("id")).as("vec_id"))
       .groupBy(col("vec_id")).agg(count(lit(1)).as("occ"))
-    val occCut = graft.GraftSession.cut(occ)
+    val (occCut, Seq(nRetrieved)) =
+      graft.GraftSession.cutWith(occ, count(lit(1)))
     val hist = occCut.groupBy(col("occ").as("k_occurrences"))
       .agg(count(lit(1)).as("n_vectors"))
     val nCorpus = emb.count()
-    val nRetrieved = occCut.count()
     hist.unionAll(s.range(1).select(lit(0L).as("k_occurrences"),
         lit(nCorpus - nRetrieved).as("n_vectors")))
       .orderBy(col("k_occurrences"))

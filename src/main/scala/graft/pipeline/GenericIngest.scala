@@ -160,17 +160,27 @@ object GenericIngest {
     * The known key schema makes a sink holding only a crashed write's
     * `_temporary` debris read as empty, not fail schema inference. */
   def inventory(spark: SparkSession, sinkDir: String): DataFrame =
-    if (!new java.io.File(sinkDir).exists())
-      spark.createDataFrame(java.util.List.of[Row](), inventorySchema)
-    else spark.read.schema(inventorySchema).parquet(sinkDir)
-      .select("filename").distinct()
+    held(spark, sinkDir, "filename")
 
-  private val inventorySchema = StructType.fromDDL("filename STRING")
+  /** The distinct `keys` of the documents the sink holds; `committee`
+    * is the sink's partition column. */
+  private def held(spark: SparkSession, sinkDir: String,
+      keys: String*): DataFrame =
+    (if (!new java.io.File(sinkDir).exists())
+      spark.createDataFrame(java.util.List.of[Row](), inventorySchema)
+    else spark.read.schema(inventorySchema).parquet(sinkDir))
+      .select(keys.map(col): _*).distinct()
+
+  private val inventorySchema =
+    StructType.fromDDL("filename STRING, committee STRING")
 
   /** The ingest tail, the only writer of a document sink: anti-join
-    * the [[named]] candidates against the [[inventory]] (J1/K5), so
-    * `acquire` never sees a held document (the reference's "filter
-    * before download", scraper.py:101-105); persist the acquired frame
+    * the [[named]] candidates against the sink's held (committee,
+    * filename) keys (J1/K5), so `acquire` never sees a held document
+    * (the reference's "filter before download", scraper.py:101-105).
+    * The key carries the committee because [[named]] gives every
+    * committee's documents the same P7 filename form, and the
+    * reference checks one bucket per committee. Persist the acquired frame
     * and count its `keep` and rejected rows in one aggregate job; append
     * the kept rows, less the fetch's status columns, partitioned by
     * municipality/committee (K1/K2), and the rejected rows' url/status
@@ -178,8 +188,9 @@ object GenericIngest {
   private[graft] def land(candidates: DataFrame, sinkDir: String,
       keep: Column = lit(true), errDir: String = null)(
       acquire: DataFrame => DataFrame): (Long, Long) = {
-    val todo = candidates.join(inventory(candidates.sparkSession, sinkDir),
-      Seq("filename"), "left_anti")
+    val todo = candidates.join(
+      held(candidates.sparkSession, sinkDir, "committee", "filename"),
+      Seq("committee", "filename"), "left_anti")
     val acquired = acquire(todo).persist()
     try {
       val counts = acquired

@@ -163,7 +163,7 @@ object Inspect {
         "relaxation round" -> Graph.ssspRound(edges, dist1, n))
     }
     if (fams("components") || fams("lpa")) {
-      val (und, lab0, n) = Graph.labelPropRoundInputs(spark, sfDir)
+      val (und, lab0, n, _) = Graph.labelPropRoundInputs(spark, sfDir)
       if (fams("components")) {
         val lab1 = GraftSession.cut(Graph.componentsRound(und, lab0, n))
         section("components", n)(

@@ -97,23 +97,70 @@ class GraphSpec extends SparkTestBase {
       assert(evaluations(GraftSession.cut(round).count()) == 1000L,
         s"plain cut, $mode mode")
       assert(evaluations {
-        val (out, total) = GraftSession.cutWith(round, sum(col("v")))
-        assert(total == 499500L)
+        val (out, Seq(total, n)) =
+          GraftSession.cutWith(round, sum(col("v")), count(lit(1)))
+        assert(total == 499500L && n == 1000L)
         assert(out.count() == 1000L)
       } == 1000L, s"witnessed cut, $mode mode")
+      // the witnesses ride the checkpoint's own job: a witnessed cut
+      // runs exactly the jobs of a plain one
+      val plain = jobsRun(GraftSession.cut(round))
+      val witnessed = jobsRun(
+        GraftSession.cutWith(round, sum(col("v")), count(lit(1))))
+      assert(witnessed == plain,
+        s"$mode mode: cutWith ran $witnessed jobs, cut $plain")
     }
     checkBothForms("local")
-    // the r19 saving: a witnessed local cut runs fewer jobs than a
-    // plain cut followed by a separate aggregate
-    val fused = jobsRun(GraftSession.cutWith(round, count(lit(1))))
-    val separate = jobsRun(
-      GraftSession.cut(round).agg(count(lit(1))).head())
-    assert(fused < separate, s"cutWith ran $fused jobs, cut + agg $separate")
     val ckDir = java.nio.file.Files
       .createTempDirectory("graft-ck-evals").toString
     GraftSession.enableReliableCheckpoints(spark, ckDir)
     try checkBothForms("reliable")
     finally spark.conf.set("spark.graft.reliableCheckpoints", "false")
+  }
+
+  test("components on a graph with no edges is an empty census") {
+    val none = Seq.empty[(Long, Long)].toDF("u", "v")
+    assert(Graph.componentLabels(none, 4).isEmpty)
+    // no supplier pair co-occurs in a million orders at sf0.001
+    val census = Graph.components(spark, sf("lineitem"), minSupport = 1000000)
+    assert(census.isEmpty)
+  }
+
+  test("componentLabels runs at most two jobs per round, the same in " +
+      "local and reliable mode") {
+    // two components, {1,2,3} (a path: 3 takes label 1 in round two) and
+    // {10,11}; both directions of every edge
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L))
+    val und = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      .toDF("u", "v")
+    // pin the edge table (memoized) before counting
+    Graph.componentLabels(und, 1).count()
+    val rounds = 8
+    def run(): (Int, Map[Long, Long]) = {
+      var labels: Map[Long, Long] = null
+      val jobs = jobsRun {
+        val lab = Graph.componentLabels(und, rounds)
+        labels = lab.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      (jobs, labels)
+    }
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
+    val (localJobs, localLabels) = run()
+    assert(localLabels == expected)
+    val ckDir = java.nio.file.Files
+      .createTempDirectory("graft-ck-components").toString
+    GraftSession.enableReliableCheckpoints(spark, ckDir)
+    val (reliableJobs, reliableLabels) =
+      try run()
+      finally spark.conf.set("spark.graft.reliableCheckpoints", "false")
+    assert(reliableLabels == expected)
+    assert(reliableJobs == localJobs,
+      s"reliable mode ran $reliableJobs jobs, local mode $localJobs")
+    // rounds 1 and 2 change labels, round 3 confirms the fixpoint:
+    // 3 rounds at <= 2 jobs each, plus the prep cut and the collect
+    val prep = jobsRun(Graph.labelPropPrep(und))
+    assert(localJobs <= 3 * 2 + prep + 1,
+      s"componentLabels ran $localJobs jobs (prep $prep)")
   }
 
   test("components and kCore under reliable checkpoints match local-cut") {

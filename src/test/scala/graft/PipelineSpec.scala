@@ -154,6 +154,22 @@ class PipelineSpec extends SparkTestBase {
     assert(spark.read.parquet(sink).count() == 5)
   }
 
+  test("one committee's documents do not block another's (J1/K5)") {
+    val sink = tmpSink()
+    // both committees' documents carry the same P7 filenames
+    assert(GenericIngest.run(spark, csv, portals, sink,
+      committee = "Oekonomi") == 5)
+    assert(GenericIngest.run(spark, csv, portals, sink,
+      committee = "Teknik") == 5)
+    assert(GenericIngest.run(spark, csv, portals, sink,
+      committee = "Teknik") == 0)
+    val stored = spark.read.parquet(sink)
+    assert(stored.groupBy("committee").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      Map("Oekonomi" -> 5L, "Teknik" -> 5L))
+    assert(GenericIngest.inventory(spark, sink).count() == 5)
+  }
+
   test("each missing document is fetched exactly once (K5)") {
     val sink = tmpSink()
     assert(CountingFetcher.counted(GenericIngest.run(spark, csv, portals,

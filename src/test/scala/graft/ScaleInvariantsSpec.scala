@@ -926,6 +926,13 @@ class ScaleInvariantsSpec extends SparkTestBase {
       "perRoundSide dist table (<=4M gate)",
     "Aggregate[node](InMemoryRelation,cut): forced broadcast of " +
       "Project(cut)" ->
+      "perRoundSide label table (<=4M gate)",
+    // aggregate-first components round: the proposal min is taken off
+    // the v-pinned edge cache and each node's own label folds back in
+    // through the same gated state broadcast, so the cut plan roots in
+    // the final least() Project
+    "Project(InMemoryRelation,cut): forced broadcast of " +
+      "Project(cut)" ->
       "perRoundSide label table (<=4M gate)")
 
   test("per-round cut() plans carry no single-task shapes") {
