@@ -25,6 +25,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    driver host's zone.
   *  - codegen class cache sized above the suite's distinct stages so
   *    steady-state runs never recompile.
+  *  - `file:` is [[fs.LocalFileSystem]]: local writes (sinks, error
+  *    output, reliable checkpoints, compaction) set their file modes
+  *    in-process instead of forking one `chmod` per file and directory.
   */
 object GraftSession {
 
@@ -50,6 +53,8 @@ object GraftSession {
       // net beyond it.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "4096")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[fs.LocalFileSystem].getName)
 
   /** Local session on `cpus` threads (SPARK_GRAFT_CPUS, default 32).
     * SPARK_GRAFT_CHECKPOINT_DIR, when set, switches the iterative

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Loaders for the driver-generated synthetic tables (TESTDATA.md).
   *
@@ -16,8 +18,34 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Reads with the table's schema from [[schemas]], so only the first
+    * load of a table runs `spark.read.parquet`'s footer-inference job;
+    * operators load tables about 300 times a gate pass. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val stamps =
+      try p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p)
+        .toSeq.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    if (stamps.isEmpty) spark.read.parquet(path)
+    else {
+      val settings = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.")
+      }
+      if (schemas.size > 4096) schemas.clear()
+      spark.read.schema(schemas.computeIfAbsent((stamps, settings),
+        _ => spark.read.parquet(path).schema)).parquet(path)
+    }
+  }
+
+  /** Inferred schemas keyed by each data file's path, length and
+    * modification time plus the session's parquet read settings, so a
+    * rewritten table, or a session reading nanos another way, is
+    * inferred afresh instead of read with a stale schema. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[AnyRef, StructType]
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -427,20 +427,6 @@ object Dedup {
       explodedTokenShingleHashes(docs, idCol, textCol, shingleK),
       bands, rowsPerBand, threshold, "band")
 
-  /** Near-dup pairs over the documents table (rows-only check: xxhash64
-    * has no DuckDB mirror; invariants covered by ScalaTest). */
-  def minHashPairsQuery(s: SparkSession, d: String): DataFrame =
-    minHashNearDupPairs(Tables.documents(s, d), "text", "doc_id",
-      shingleK = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
-
-  /** n-gram (character 5-gram) Jaccard near-dup pairs — same banded-LSH
-    * candidate generation, character shingles produced by the codegen'd
-    * exploder. */
-  def ngramJaccardPairsQuery(s: SparkSession, d: String): DataFrame =
-    lshNearDupPairsFromHashes(
-      explodedCharShingleHashes(Tables.documents(s, d), "doc_id", "text", 5),
-      bands = 8, rowsPerBand = 4, threshold = 0.7, tag = "cband")
-
   // ----------------------------------------- dup-cluster identification
 
   /** Connected components over a duplicate-pair edge list: every doc
@@ -673,11 +659,6 @@ object Dedup {
       .reduce(_ + _) // disjoint bits: sum == OR
     grouped.select(col("id"), packed.as("simhash"))
   }
-
-  /** SimHash sketches (rows-only; invariants in ScalaTest). */
-  def simHashQuery(s: SparkSession, d: String): DataFrame =
-    simHashDf(Tables.documents(s, d), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
 
   /** SimHash near-dup candidates with Hamming distance <= 3: pigeonhole
     * on 4 x 16-bit chunks (any pair within distance 3 agrees on >= 1

@@ -182,12 +182,6 @@ object TextOps {
       .orderBy(col("n").desc, col("term"))
       .limit(k)
 
-  /** Fingerprints (xxhash64 has no DuckDB mirror -> rows-only check;
-    * [[fingerprintMd5Query]] is the hash-matched twin of this shape). */
-  def fingerprintQuery(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(
-      col("doc_id"), fingerprint(col("text")).as("fp"))
-
   /** Oracle-checkable fingerprint: the SAME normalization as
     * [[fingerprint]] (trim + collapse whitespace runs) keyed by the
     * first 15 hex nibbles of md5(normalized text) decoded to a 60-bit

@@ -43,14 +43,51 @@ object GenericIngest {
     "Byraad" -> "-byraad", "Plan" -> "-plan")
 
   /** S1: CSV config scan with header mapping + trim
-    * (scraper.py:278-298). */
+    * (scraper.py:278-298). Columns are mapped by header name, so their
+    * order and any extra columns do not matter. The header is read on
+    * the driver ([[configSchema]]), so building this frame runs no
+    * Spark job. */
   def readConfigs(spark: SparkSession, csvPath: String): DataFrame =
-    spark.read.option("header", "true").csv(csvPath)
+    spark.read.schema(configSchema(spark, csvPath))
+      .option("header", "true").csv(csvPath)
       .select(
         trim(col("Base URL")).as("base_url"),
         trim(col("Start URL")).as("start_url"))
       .filter(col("base_url").isNotNull && (col("base_url") =!= ""))
       .withColumn("municipality", Exprs.municipalityFromUrl(col("base_url")))
+
+  /** The all-string schema a header-inferring CSV read of `csvPath`
+    * would give, from one header line read through the Hadoop
+    * `FileSystem`: the first non-empty line of the data files (names
+    * not starting with `_` or `.`) in name order, so a Spark-written
+    * CSV directory ([[Discovery.writeConfigCsv]]) reads like a file.
+    * The line is parsed and made safe with Spark's own CSV rules. No
+    * header line gives an empty schema, which fails on the first
+    * column lookup as inference would. */
+  private def configSchema(spark: SparkSession,
+      csvPath: String): StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.csv.CSVOptions
+    import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+    import org.apache.spark.sql.types.{StringType, StructField}
+    val conf = spark.sessionState.newHadoopConf()
+    val sql = spark.sessionState.conf
+    val opts = new CSVOptions(Map("header" -> "true"),
+      sql.csvColumnPruning, sql.sessionLocalTimeZone)
+    val path = new Path(csvPath)
+    val fs = path.getFileSystem(conf)
+    val files = Option(fs.globStatus(path)).toSeq.flatten
+      .flatMap(s => fs.listStatus(s.getPath))
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .map(_.getPath).sortBy(_.toString)
+    val header = files.iterator
+      .flatMap(CSVUtils.readHeaderLine(_, opts, conf)).nextOption()
+    StructType(header.toSeq.flatMap(line => CSVUtils.makeSafeHeader(
+      new com.univocity.parsers.csv.CsvParser(opts.asParserSettings)
+        .parseLine(line), sql.caseSensitiveAnalysis, opts))
+      .map(StructField(_, StringType)))
+  }
 
   /** Listing pages as (municipality, html) — one file per portal. */
   def readPortalPages(spark: SparkSession, portalDir: String): DataFrame =

@@ -59,30 +59,6 @@ class GraphSpec extends SparkTestBase {
     }
   }
 
-  /** Jobs started under a private job group while `body` runs, read
-    * from a listener after draining the async listener bus. */
-  private def jobsRun(body: => Unit): Int = {
-    val group = s"jobs-run-${System.nanoTime()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val sc = spark.sparkContext
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "job count probe")
-    try body
-    finally {
-      sc.clearJobGroup()
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      sc.removeSparkListener(l)
-    }
-    n.get
-  }
-
   test("cut and cutWith evaluate each round once in local and reliable " +
       "mode") {
     // a 1,000-row round whose UDF runs after a shuffle and counts its

@@ -25,6 +25,37 @@ class PipelineSpec extends SparkTestBase {
       r.getAs[String]("start_url").trim))
   }
 
+  private def configCsv(lines: String*): String = {
+    val f = Files.createTempDirectory("graft_cfg_").resolve("configs.csv")
+    Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    f.toString
+  }
+
+  test("config scan runs no Spark job (S1)") {
+    assert(jobsRun(GenericIngest.readConfigs(spark, csv)) == 0)
+  }
+
+  test("config scan maps columns by header name (S1)") {
+    val reordered = configCsv(
+      "Start URL,Note,Base URL",
+      "https://dagsordener.aarhus.dk/?x=1,first,https://dagsordener.aarhus.dk")
+    val quoted = configCsv(
+      "\"Base URL\",\"Start URL\"",
+      "https://dagsordener.aarhus.dk,\"https://dagsordener.aarhus.dk/?x=1\"")
+    for (path <- Seq(reordered, quoted)) {
+      val rows = GenericIngest.readConfigs(spark, path)
+        .select("base_url", "start_url", "municipality").collect()
+      assert(rows.map(_.toSeq) sameElements Array(Seq(
+        "https://dagsordener.aarhus.dk",
+        "https://dagsordener.aarhus.dk/?x=1", "aarhus")), path)
+    }
+  }
+
+  test("a header-only config reads as no rows (S1)") {
+    assert(GenericIngest.readConfigs(spark,
+      configCsv("Base URL,Start URL")).count() == 0)
+  }
+
   test("candidates: parse, validity filter, first-seen dedup (ALL mode)") {
     val cand = GenericIngest.candidates(spark, csv, portals, "Oekonomi",
       "ALL", 100, java.sql.Date.valueOf("2024-01-01")).collect()
@@ -73,6 +104,20 @@ class PipelineSpec extends SparkTestBase {
     assert(stored.select("municipality").distinct().count() == 2)
     val dirs = new java.io.File(sink).listFiles().map(_.getName)
     assert(dirs.exists(_.startsWith("municipality=")))
+  }
+
+  test("sink files and directories keep their count and modes (K1)") {
+    val sink = tmpSink()
+    assert(GenericIngest.run(spark, csv, portals, sink) == 5)
+    val w = Files.walk(java.nio.file.Paths.get(sink))
+    val modes = try w.toArray.toSeq.map { case p: java.nio.file.Path =>
+      (Files.isDirectory(p), java.nio.file.attribute.PosixFilePermissions
+        .toString(Files.getPosixFilePermissions(p)))
+    } finally w.close()
+    val (dirs, files) = modes.partition(_._1)
+    assert((files.length, dirs.length) == (6, 5))
+    assert(files.forall(_._2 == "rw-r--r--"), files)
+    assert(dirs.forall(_._2 == "rwxr-xr-x"), dirs)
   }
 
   test("observe metrics report candidates/dated/ingested counts (A2)") {
