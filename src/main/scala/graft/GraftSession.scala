@@ -25,8 +25,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    driver host's zone.
   *  - codegen class cache sized above the suite's distinct stages so
   *    steady-state runs never recompile.
-  *  - `file:` is [[fs.LocalFileSystem]]: local writes (sinks, error
-  *    output, reliable checkpoints, compaction) set their file modes
+  *  - `file:` is [[fs.LocalFileSystem]] (and [[fs.LocalFs]] through
+  *    `FileContext`): local writes (sinks, error output, reliable and
+  *    streaming checkpoints, compaction) set their file modes
   *    in-process instead of forking one `chmod` per file and directory.
   */
 object GraftSession {
@@ -55,6 +56,8 @@ object GraftSession {
         "4096")
       .config("spark.hadoop.fs.file.impl",
         classOf[fs.LocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[fs.LocalFs].getName)
 
   /** Local session on `cpus` threads (SPARK_GRAFT_CPUS, default 32).
     * SPARK_GRAFT_CHECKPOINT_DIR, when set, switches the iterative

@@ -1,9 +1,13 @@
 package graft.fs
 
+import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsServerDefaults,
+  Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** The engine's `file:` filesystem ([[graft.GraftSession.builder]] sets
@@ -16,6 +20,27 @@ import org.apache.hadoop.fs.permission.FsPermission
   * modes written are the same either way; only the process is gone. */
 class LocalFileSystem
     extends org.apache.hadoop.fs.LocalFileSystem(new NioRawLocalFileSystem)
+
+/** The engine's `file:` `AbstractFileSystem` ([[graft.GraftSession.builder]]
+  * sets it as `fs.AbstractFileSystem.file.impl`), for the callers that
+  * go through `FileContext` rather than `FileSystem`, such as a
+  * streaming query's checkpoint: Hadoop's `local.LocalFs` with
+  * [[NioRawLocalFileSystem]] underneath, so it forks no `chmod`
+  * either. */
+class LocalFs(uri: URI, conf: Configuration)
+    extends ChecksumFs(new RawLocalFs(uri, conf))
+
+/** Hadoop's `local.RawLocalFs` over [[NioRawLocalFileSystem]]. */
+class RawLocalFs(uri: URI, conf: Configuration)
+    extends DelegateToFileSystem(uri, new NioRawLocalFileSystem, conf,
+      "file", false) {
+  override def getUriDefaultPort: Int = -1
+  override def getServerDefaults(): FsServerDefaults =
+    LocalConfigKeys.getServerDefaults()
+  override def getServerDefaults(f: Path): FsServerDefaults =
+    LocalConfigKeys.getServerDefaults()
+  override def isValidName(src: String): Boolean = true
+}
 
 /** `RawLocalFileSystem` that applies permission bits in-process with
   * `Files.setPosixFilePermissions`. Bits NIO cannot express (sticky)

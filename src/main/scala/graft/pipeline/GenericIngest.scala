@@ -28,13 +28,16 @@ import graft.parse.GraftFunctions
   * sink ingests nothing (K5 exactly-once semantics via bulk inventory
   * listing + left_anti — never per-key existence probes).
   *
-  * Scale shape: one shuffle for the per-URL dedup window, one for the
-  * anti-join. The inventory grows with everything ever written —
-  * corpus-proportional over the crawl's lifetime — so its join
+  * Scale shape: one exchange by municipality serves both the per-URL
+  * dedup window and the per-municipality limit window; the anti-join's
+  * build side is the sink's held (committee, filename) keys as read,
+  * with no distinct. The inventory grows with everything ever written
+  * — corpus-proportional over the crawl's lifetime — so its join
   * strategy is left to stats/AQE (broadcast while it fits, shuffle
   * anti-join once it doesn't) rather than a forced hint; everything
-  * else is scan-local projection. Discovery order is an explicit
-  * column, never an implicit row order.
+  * else is scan-local projection. A phase is one job chain ending in
+  * the sink write. Discovery order is an explicit column, never an
+  * implicit row order.
   */
 object GenericIngest {
 
@@ -119,11 +122,13 @@ object GenericIngest {
 
     // D1: first-seen per URL in discovery order; then L3: the limit
     // budget counts only surviving rows, per municipality.
+    // One exchange by municipality satisfies both windows' clustering.
     val dedupW = Window.partitionBy(col("municipality"), col("url"))
       .orderBy(col("discovery_idx"))
     val limitW = Window.partitionBy(col("municipality"))
       .orderBy(col("discovery_idx"))
     val limited = projected
+      .repartition(fetchPartitions(spark), col("municipality"))
       .withColumn("rn", row_number().over(dedupW))
       .filter(col("rn") === 1)
       .withColumn("k", row_number().over(limitW))
@@ -189,53 +194,90 @@ object GenericIngest {
     }
     named(bounded.filter(col("doc_uuid").isNotNull), committee,
       col("doc_uuid"))
+      .repartition(fetchPartitions(spark), col("filename"))
       .dropDuplicates("filename")
   }
+
+  /** The partition count of the exchange a fetch runs behind: the
+    * session's shuffle partitions. A fixed count keeps AQE from
+    * coalescing the tiny URL rows into one task, so fetch concurrency
+    * stays the task slots ([[Fetch]]). */
+  private def fetchPartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** Bulk sink inventory (J1's right side): list once, never probe
     * per key (contra reference scraper.py:212-219 head_object loop).
     * The known key schema makes a sink holding only a crashed write's
     * `_temporary` debris read as empty, not fail schema inference. */
   def inventory(spark: SparkSession, sinkDir: String): DataFrame =
-    held(spark, sinkDir, "filename")
+    held(spark, sinkDir, "filename").distinct()
 
-  /** The distinct `keys` of the documents the sink holds; `committee`
-    * is the sink's partition column. */
+  /** The `keys` of the documents the sink holds, one row per document;
+    * `committee` is the sink's partition column. */
   private def held(spark: SparkSession, sinkDir: String,
-      keys: String*): DataFrame =
-    (if (!new java.io.File(sinkDir).exists())
+      keys: String*): DataFrame = {
+    val (fs, path) = sinkFs(spark, sinkDir)
+    (if (!fs.exists(path))
       spark.createDataFrame(java.util.List.of[Row](), inventorySchema)
     else spark.read.schema(inventorySchema).parquet(sinkDir))
-      .select(keys.map(col): _*).distinct()
+      .select(keys.map(col): _*)
+  }
 
   private val inventorySchema =
     StructType.fromDDL("filename STRING, committee STRING")
 
-  /** The ingest tail, the only writer of a document sink: anti-join
-    * the [[named]] candidates against the sink's held (committee,
-    * filename) keys (J1/K5), so `acquire` never sees a held document
-    * (the reference's "filter before download", scraper.py:101-105).
-    * The key carries the committee because [[named]] gives every
-    * committee's documents the same P7 filename form, and the
-    * reference checks one bucket per committee. Persist the acquired frame
-    * and count its `keep` and rejected rows in one aggregate job; append
-    * the kept rows, less the fetch's status columns, partitioned by
-    * municipality/committee (K1/K2), and the rejected rows' url/status
-    * to `errDir` if given (K7). Returns (landed, rejected). */
+  /** The sink's Hadoop `FileSystem` and path, so a `file://` or remote
+    * URI is looked up like a plain local path. */
+  private def sinkFs(spark: SparkSession, sinkDir: String) = {
+    val path = new org.apache.hadoop.fs.Path(sinkDir)
+    (path.getFileSystem(spark.sessionState.newHadoopConf()), path)
+  }
+
+  /** J1/K5: the [[named]] candidates whose (committee, filename) key
+    * the sink does not hold. The key carries the committee because
+    * [[named]] gives every committee's documents the same P7 filename
+    * form, and the reference checks one bucket per committee. The held
+    * keys are the anti-join's build side as read: duplicates cannot
+    * change a left-anti result, so no distinct runs. Split from [[land]]
+    * so plan sweeps (ScaleInvariantsSpec) audit the join a run makes. */
+  private[graft] def todo(candidates: DataFrame,
+      sinkDir: String): DataFrame =
+    candidates.join(
+      held(candidates.sparkSession, sinkDir, "committee", "filename"),
+      Seq("committee", "filename"), "left_anti")
+
+  /** The ingest tail, the only writer of a document sink: [[todo]], so
+    * `acquire` never sees a held document (the reference's "filter
+    * before download", scraper.py:101-105), then one append of the kept
+    * rows, less the fetch's status columns, partitioned by
+    * municipality/committee (K1/K2). The `keep` and rejected counts
+    * are an `Observation` on the acquired frame, read off the write's
+    * own job, so a run without `errDir` acquires each document once,
+    * inside that job. With `errDir`, the acquired frame is persisted
+    * for its second reader, the rejected rows' url/status (K7). A write
+    * that lands nothing adds no data file; when it found no sink it
+    * leaves none. Returns (landed, rejected). */
   private[graft] def land(candidates: DataFrame, sinkDir: String,
       keep: Column = lit(true), errDir: String = null)(
       acquire: DataFrame => DataFrame): (Long, Long) = {
-    val todo = candidates.join(
-      held(candidates.sparkSession, sinkDir, "committee", "filename"),
-      Seq("committee", "filename"), "left_anti")
-    val acquired = acquire(todo).persist()
+    val (fs, path) = sinkFs(candidates.sparkSession, sinkDir)
+    val existed = fs.exists(path)
+    val obs = new org.apache.spark.sql.Observation(
+      s"land-${java.util.UUID.randomUUID()}")
+    val observed = acquire(todo(candidates, sinkDir)).observe(obs,
+      count(when(keep, 1)).as("kept"), count(when(!keep, 1)).as("rejected"))
+    val acquired = if (errDir != null) observed.persist() else observed
     try {
-      val counts = acquired
-        .agg(count(when(keep, 1)), count(when(!keep, 1))).head()
-      val (n, rejected) = (counts.getLong(0), counts.getLong(1))
-      if (n > 0) acquired.filter(keep).drop("status", "content_type")
+      acquired.filter(keep).drop("status", "content_type")
         .write.mode("append").partitionBy("municipality", "committee")
         .parquet(sinkDir)
+      val counts = obs.get
+      val (n, rejected) = (counts("kept").asInstanceOf[Long],
+        counts("rejected").asInstanceOf[Long])
+      // an empty write into no sink leaves only the committer's marker
+      if (n == 0 && !existed && fs.listStatus(path).forall(s =>
+          Set("_SUCCESS", "._SUCCESS.crc")(s.getPath.getName)))
+        fs.delete(path, true)
       if (errDir != null && rejected > 0) acquired.filter(!keep)
         .select("url", "status", "content_type")
         .write.mode("append").parquet(errDir)

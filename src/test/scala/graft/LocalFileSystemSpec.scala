@@ -30,6 +30,13 @@ class LocalFileSystemSpec extends SparkTestBase {
       classOf[fs.LocalFileSystem])
   }
 
+  test("a GraftSession.builder session's FileContext resolves file: to " +
+      "the engine filesystem") {
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+      spark.sessionState.newHadoopConf())
+    assert(fc.getDefaultFileSystem.getClass == classOf[fs.LocalFs])
+  }
+
   test("the engine filesystem applies each of the 512 rwx modes exactly") {
     val dir = Files.createTempDirectory("graft_modes_")
     val file = Files.createFile(dir.resolve("f"))

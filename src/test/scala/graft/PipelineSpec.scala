@@ -2,7 +2,29 @@ package graft
 
 import java.nio.file.Files
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+import graft.fetch.Fetch
 import graft.pipeline.GenericIngest
+
+/** [[Fetch.StaticFetcher]] that counts every fetch on
+  * [[CountingFetcher]]'s JVM-static counter and records the partition
+  * it ran in. */
+case class CountingStaticFetcher(failPattern: String = "$^")
+    extends Fetch.Fetcher {
+  def fetch(url: String): Fetch.FetchResult = {
+    CountingFetcher.calls.incrementAndGet()
+    CountingStaticFetcher.partitions.add(
+      org.apache.spark.TaskContext.getPartitionId())
+    Fetch.StaticFetcher(failPattern).fetch(url)
+  }
+}
+
+object CountingStaticFetcher {
+  val partitions = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+}
 
 /** End-to-end tests for the generic-ingest dataflow (E2) against the
   * fixture portals: parse -> project -> filter -> dedup -> limit ->
@@ -235,5 +257,64 @@ class PipelineSpec extends SparkTestBase {
     assert(metrics("n_ingested") == 3)
     assert(metrics("n_fetch_errors") == 2)
     assert(spark.read.parquet(errDir).count() == 2)
+  }
+
+  test("a file:// URI sink is found on re-run (J1/K5)") {
+    val sink = java.nio.file.Paths.get(tmpSink()).toUri.toString
+    assert(sink.startsWith("file:/"))
+    assert(GenericIngest.run(spark, csv, portals, sink) == 5)
+    assert(GenericIngest.run(spark, csv, portals, sink) == 0)
+    assert(spark.read.parquet(sink).count() == 5)
+  }
+
+  test("an empty-sink run and a no-op re-run each take at most 4 jobs") {
+    val sink = tmpSink()
+    var n = -1L
+    assert(jobsRun { n = GenericIngest.run(spark, csv, portals, sink) } <= 4)
+    assert(n == 5)
+    assert(jobsRun { n = GenericIngest.run(spark, csv, portals, sink) } <= 4)
+    assert(n == 0)
+  }
+
+  test("land over no candidates returns (0, 0) and leaves no sink") {
+    val sink = tmpSink()
+    val none = GenericIngest.candidates(spark, csv, portals, "Oekonomi",
+      "ALL", 100, java.sql.Date.valueOf("2024-01-01")).filter("false")
+    val landed = Future(GenericIngest.land(none, sink)(
+      Fetch.fetchBinary(_, "url", Fetch.StaticFetcher())))
+    assert(Await.result(landed, 2.minutes) == ((0L, 0L)))
+    assert(!new java.io.File(sink).exists())
+  }
+
+  test("a run whose every fetch fails reports it and leaves no sink (K7)") {
+    val sink = tmpSink()
+    val metrics = scala.collection.mutable.Map.empty[String, Long]
+    assert(GenericIngest.run(spark, csv, portals, sink, metricsOut = metrics,
+      fetcher = Fetch.StaticFetcher(failPattern = ".")) == 0)
+    assert(metrics("n_fetch_errors") == 5)
+    assert(metrics("n_ingested") == 0)
+    assert(metrics("n_candidates") == 5)
+    assert(!new java.io.File(sink).exists())
+  }
+
+  test("with an error sink, rejected rows are written and each document " +
+      "is fetched once (K5/K7)") {
+    val sink = tmpSink()
+    val errDir = Files.createTempDirectory("graft_err_").resolve("errs")
+      .toString
+    assert(CountingFetcher.counted(GenericIngest.run(spark, csv, portals,
+      sink, fetcher = CountingStaticFetcher("silkeborg"),
+      errDir = errDir)) == ((3L, 5L)))
+    assert(spark.read.parquet(errDir).count() == 2)
+    assert(spark.read.parquet(sink).count() == 3)
+  }
+
+  test("the connector's fetch is not coalesced into one task") {
+    val sink = tmpSink()
+    CountingStaticFetcher.partitions.clear()
+    assert(GenericIngest.runFromConnector(spark,
+      "src/test/resources/fixtures/portals2", sink,
+      fetcher = CountingStaticFetcher()) == 8)
+    assert(CountingStaticFetcher.partitions.size > 1)
   }
 }

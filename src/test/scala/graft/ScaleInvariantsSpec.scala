@@ -1015,15 +1015,17 @@ class ScaleInvariantsSpec extends SparkTestBase {
     val csv = "src/test/resources/fixtures/municipalities.csv"
     val portals = "src/test/resources/fixtures/portals"
     val d001 = sf("")
+    // a sink holding the fixture documents, so ingest_todo's anti-join
+    // is planned against real held keys rather than pruned away
+    val heldSink = java.nio.file.Files.createTempDirectory("graft_sweep_")
+      .resolve("docs").toString
+    GenericIngest.run(spark, csv, portals, heldSink, limitPerMuni = 1)
     val surfaces: Seq[(String, () => DataFrame)] = Seq(
       "entry_flagship" -> (() => SparkEntry.entry(spark)),
       "ingest_candidates" -> (() => GenericIngest.candidates(
         spark, csv, portals, "Oekonomi", "ALL", 100, today)),
-      "ingest_todo" -> (() => GenericIngest.candidates(
-        spark, csv, portals, "Oekonomi", "NEW", 100, today)
-        .join(GenericIngest.inventory(spark,
-          "/tmp/graft_sweep_no_such_sink"), Seq("filename"),
-          "left_anti")),
+      "ingest_todo" -> (() => GenericIngest.todo(GenericIngest.candidates(
+        spark, csv, portals, "Oekonomi", "NEW", 100, today), heldSink)),
       "connector_candidates" -> (() => GenericIngest.connectorCandidates(
         spark, "src/test/resources/fixtures/portals3")),
       "deepscrape_docs" -> (() => DeepScrape.synthesizedDocs(spark,
