@@ -40,22 +40,13 @@ object Curation {
     * (`cum_before`) in a deterministic md5(doc_id)-ordered stream — the
     * shared substrate of [[budgetFill]] and [[packSequences]].
     *
-    * TWO-LEVEL window: a single per-source window serializes a giant
-    * source (one partition sorts the whole source — the 100 TB
-    * bottleneck), so the stream is cut within SUBSPLITS first and
-    * corrected after. The subsplit is the first two hex chars of the
-    * md5 order key — a PREFIX of the key, so ordering by (sub, k)
-    * IS ordering by k and the decomposition is exact:
-    *
-    *   cum_before(doc) = cum_in_sub(doc) + sub_offset(source, sub)
-    *
-    * where cum_in_sub comes from a window over (source, sub) — 256-way
-    * parallel per source — and sub_offset (tokens in all lower
-    * subsplits of the source) comes from a window over the tiny
-    * per-(source, sub) subtotal table, broadcast back. Equality with
-    * the single-window formulation is property-tested at sf0.01
-    * (CurationSpec). Costs one extra map-side-combined aggregation pass
-    * for the subtotals; buys the heavy sort 256x the parallelism. */
+    * A single per-source window serializes a giant source (one
+    * partition sorts the whole source — the 100 TB bottleneck), so the
+    * stream is a [[Profiling.prefixSum]] grouped by source over
+    * SUBSPLITS: the first two hex chars of the md5 order key, a PREFIX
+    * of the key, so the heavy sort runs 256-way parallel per source.
+    * Equality with the single-window formulation is property-tested
+    * at sf0.01 (CurationSpec). */
   private def tokenStream(s: SparkSession, d: String): DataFrame =
     tokenStreamOf(Tables.documents(s, d))
 
@@ -65,21 +56,9 @@ object Curation {
     val base = docs
       .select(col("doc_id"), col("source"), tok.as("n_tok"), key.as("k"))
       .withColumn("sub", substring(col("k"), 1, 2))
-    val wSub = Window.partitionBy(col("source"), col("sub"))
-      .orderBy(col("k"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val inSub = base.withColumn("cum_in_sub",
-      coalesce(sum(col("n_tok")).over(wSub), lit(0L)))
-    // subtotal table: sources x <=256 rows; its window is trivial
-    val wOff = Window.partitionBy(col("source")).orderBy(col("sub"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = base.groupBy(col("source"), col("sub"))
-      .agg(sum(col("n_tok")).as("sub_tok"))
-      .withColumn("sub_offset",
-        coalesce(sum(col("sub_tok")).over(wOff), lit(0L)))
-      .select(col("source"), col("sub"), col("sub_offset"))
-    inSub.join(broadcast(offsets), Seq("source", "sub"))
-      .withColumn("cum_before", col("sub_offset") + col("cum_in_sub"))
+    Profiling.prefixSum(base, "sub", Seq(col("k")),
+        Seq(col("n_tok") -> "cum_before"), inclusive = false,
+        groups = Seq("source"))
       .select(col("doc_id"), col("source"), col("n_tok"), col("k"),
         col("cum_before"))
   }
@@ -545,7 +524,10 @@ object Curation {
     * subsplit rows that pass the `cum >= r` predicate carry strictly
     * larger values than the owning row, so the `min` is untouched.
     * Returns one row (c1, c2); both NULL on an empty sample (the
-    * labeling branch then sends every doc to "tail", as before). */
+    * labeling branch then sends every doc to "tail", as before).
+    * Not a [[Profiling.prefixSum]]: it joins only the owning subsplits'
+    * offsets and windows after that filter, which prefixSum would run
+    * over every subsplit. */
   private[graft] def sampledTercileCuts(sample: DataFrame): DataFrame = {
     val hist = sample.groupBy(col("mean_nll")).agg(count(lit(1)).as("c"))
       .withColumn("sub", floor(col("mean_nll") * lit(64.0)).cast("long"))

@@ -136,20 +136,10 @@ object Profiling {
     val hist = GraftSession.cut(rows.groupBy(col("p"))
       .agg(count(lit(1)).as("c"))
       .withColumn("sub", floor(col("p") / lit(step)).cast("long")))
-    val wVal = Window.partitionBy(col("sub")).orderBy(col("p"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOff = Window.orderBy(col("sub"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = hist.groupBy(col("sub"))
-      .agg(sum(col("c")).as("sub_n"))
-      .withColumn("off", coalesce(sum(col("sub_n")).over(wOff), lit(0L)))
-      .select(col("sub"), col("off"))
     val n = hist.agg(sum(col("c")).as("n"))
-    hist
-      .withColumn("voff0", coalesce(sum(col("c")).over(wVal), lit(0L)))
-      .join(broadcast(offsets), "sub")
+    prefixSum(hist, "sub", Seq(col("p")), Seq(col("c") -> "voff"),
+        inclusive = false)
       .crossJoin(broadcast(n))
-      .withColumn("voff", col("off") + col("voff0"))
       // the buckets positions [voff, voff+c-1] span; for each, the
       // in-bucket positions are the intersection with the bucket's
       // position interval [ceil(b*n/B), ceil((b+1)*n/B)-1]
@@ -255,11 +245,10 @@ object Profiling {
     * ~3e9 rows per cohort — beyond that, bin values first (the q133
     * histogram) and run KS on the binned ECDF.
     *
-    * Scale shape: the cumulative counts use the q133 device — a
-    * DETERMINISTIC value-range sub-bucket key (v DIV step), a window
-    * WITHIN each sub-bucket, and a broadcast sub-bucket offset table
-    * (#subs rows) — so no global single-partition sort ever happens;
-    * the oracle states the same math as one window. */
+    * Scale shape: the cumulative counts are one [[prefixSum]] over
+    * value sub-buckets (v DIV step), so no global single-partition
+    * sort ever happens; the oracle states the same math as one
+    * window. */
   def ksTest(s: SparkSession, d: String): DataFrame = {
     val step = 1048576L // ~$10k of cents per sub-bucket
     val marg = Tables.orders(s, d)
@@ -276,24 +265,12 @@ object Profiling {
       // cut: the marginal feeds offsets, totals, and the rank pass —
       // one orders scan instead of three
       .transform(GraftSession.cut(_))
-    val wSub = Window.partitionBy(col("sub")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOff = Window.orderBy(col("sub"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = marg.groupBy(col("sub"))
-      .agg(sum(col("ca")).as("sa"), sum(col("cb")).as("sb"))
-      .withColumn("offa", coalesce(sum(col("sa")).over(wOff), lit(0L)))
-      .withColumn("offb", coalesce(sum(col("sb")).over(wOff), lit(0L)))
-      .select(col("sub"), col("offa"), col("offb"))
     val tot = marg.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-    marg
-      .withColumn("cwa", sum(col("ca")).over(wSub))
-      .withColumn("cwb", sum(col("cb")).over(wSub))
-      .join(broadcast(offsets), "sub")
+    prefixSum(marg, "sub", Seq(col("v")),
+        Seq(col("ca") -> "cuma", col("cb") -> "cumb"), inclusive = true)
       .crossJoin(broadcast(tot))
       .select(col("na"), col("nb"),
-        abs((col("offa") + col("cwa")) * col("nb")
-          - (col("offb") + col("cwb")) * col("na")).as("dn"))
+        abs(col("cuma") * col("nb") - col("cumb") * col("na")).as("dn"))
       .groupBy(col("na"), col("nb"))
       .agg(max(col("dn")).as("d_num"))
       .select(col("na").as("n_a"), col("nb").as("n_b"), col("d_num"),
@@ -338,56 +315,87 @@ object Profiling {
     * integer even when the double product sits at x.99999... */
   private def cents = round(col("o_totalprice") * 100, 0).cast("long")
 
+  /** Running sums over a global (or per-group) order without a
+    * single-partition sort of the rows: the two-level device every
+    * cumulative count and rank in this project is built on.
+    *
+    *  - level 1: a window WITHIN each sub-range — partitioned by
+    *    (`groups`, `sub`), ordered by `orderBy` — sums each value;
+    *  - level 2: one offsets table, the per-(`groups`, `sub`) totals
+    *    cumulated exclusively over `sub` by a window partitioned only
+    *    by `groups`, is broadcast back and added. That window's only
+    *    unpartitioned sort is over the sub-range totals.
+    *
+    * Contract: within a group, `sub` must not decrease as the
+    * `orderBy` key rises (`v DIV step`, `floor(v / step)`, a prefix of
+    * a string key), so (sub, orderBy) order IS orderBy order and the
+    * decomposition is exact. Each `values` pair names a value column
+    * and its running sum: over the rows up to and including the row
+    * itself, or (`inclusive = false`) strictly before it. Returns
+    * `df`'s columns plus the sums; rows with a NULL `sub` or group key
+    * drop out (the offsets join is inner). No cut, no eager job: the
+    * cost is one aggregate and one broadcast join. A task sorts the
+    * rows of one sub-range, so callers feed it a value histogram
+    * (bounded by distinct values per sub-range) or, as
+    * [[scalableRank]] does, a table whose sub-range key carries a
+    * unique tie. */
+  private[graft] def prefixSum(df: DataFrame, sub: String,
+      orderBy: Seq[Column], values: Seq[(Column, String)],
+      inclusive: Boolean, groups: Seq[String] = Nil): DataFrame = {
+    val keys = (groups :+ sub).map(col)
+    val wIn = Window.partitionBy(keys: _*).orderBy(orderBy: _*)
+      .rowsBetween(Window.unboundedPreceding,
+        if (inclusive) Window.currentRow else -1L)
+    val wOff = Window.partitionBy(groups.map(col): _*).orderBy(col(sub))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val ix = values.indices
+    val totals = ix.map(i => sum(values(i)._1).as(s"__ps_t$i"))
+    val offsets = df.groupBy(keys: _*).agg(totals.head, totals.tail: _*)
+      .select(keys ++ ix.map(i => coalesce(sum(col(s"__ps_t$i"))
+        .over(wOff), lit(0L)).as(s"__ps_o$i")): _*)
+    val within = ix.map { i =>
+      val w = sum(values(i)._1).over(wIn)
+      (if (inclusive) w else coalesce(w, lit(0L))).as(s"__ps_w$i")
+    }
+    df.select(col("*") +: within: _*)
+      .join(broadcast(offsets), groups :+ sub)
+      .select(df.columns.map(col) ++ ix.map(i =>
+        (col(s"__ps_o$i") + col(s"__ps_w$i")).as(values(i)._2)): _*)
+  }
+
   /** Global row-number over (v, tie) order WITHOUT a single-partition
-    * window AND without a data-dependent task bound: the ksTest
-    * two-level device generalized, hardened for degenerate value
-    * distributions (r15). Ranks decompose twice:
+    * window AND without a data-dependent task bound, hardened for
+    * degenerate value distributions (r15). Rows group by (exact v,
+    * `tie DIV tieStep`): for a FIXED value a tie-key range is a
+    * contiguous slice of the (v, tie) order, and because the tie key
+    * is unique per row a group holds at most `tieStep` rows NO MATTER
+    * how the values distribute (the r14 form ranked raw rows per
+    * value sub-bucket, so a constant-valued column re-concentrated
+    * the whole table into one sort task).
     *
-    *  - level 1: value sub-buckets `v DIV step` — exclusive offsets
-    *    from the tiny bucket-count table (range/step rows, the only
-    *    global sort), broadcast back;
-    *  - level 2 (the degenerate-distribution guard): within a
-    *    sub-bucket, rows group by (exact v, `tie DIV tieStep`). For a
-    *    FIXED value, a tie-key range is a contiguous slice of the
-    *    (v, tie) order, so the decomposition stays exact — and
-    *    because the tie key is unique per row, a group holds at most
-    *    `tieStep` rows NO MATTER how the values distribute. The r14
-    *    form ranked raw rows per sub-bucket, so a constant-valued
-    *    column (all rows in one sub) re-concentrated the whole table
-    *    into one sort task; now a constant column just means level-2
-    *    groups of <= tieStep rows each. Level-2 offsets cumulate over
-    *    the (sub, v, tie-range) count table, partitioned by sub —
-    *    per task <= distinct level-2 groups per sub, bounded by
-    *    step (distinct values) + tie-domain/tieStep.
-    *
-    * The final row window partitions by (v, tie-range): its input
-    * sorts in tasks of <= tieStep rows. One extra map-side-combined
-    * aggregate + group-table shuffle versus the r14 form — the
-    * OOM-ceiling price, same trade as the q119 subsplit device. */
+    * Each group's offset is a [[prefixSum]] of the group counts over
+    * value sub-buckets `v DIV step` — per task <= distinct groups per
+    * sub-bucket, bounded by step (distinct values) + tie-domain /
+    * tieStep. The final row window partitions by (v, tie-range): its
+    * input sorts in tasks of <= tieStep rows. One extra
+    * map-side-combined aggregate + group-table shuffle versus the r14
+    * form — the OOM-ceiling price, same trade as the q119 subsplit
+    * device. */
   private[graft] def scalableRank(df: DataFrame, v: String, tie: String,
       step: Long, out: String, tieStep: Long = 1L << 22): DataFrame = {
-    val wOff = Window.orderBy(col("__sub"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOff2 = Window.partitionBy(col("__sub"))
-      .orderBy(col(v), col("__sub2"))
-      .rowsBetween(Window.unboundedPreceding, -1)
     val wRn = Window.partitionBy(col(v), col("__sub2")).orderBy(col(tie))
     val sub = df.withColumn("__sub", expr(s"$v DIV $step"))
       .withColumn("__sub2", expr(s"$tie DIV $tieStep"))
     val l2 = sub.groupBy(col("__sub"), col(v), col("__sub2"))
       .agg(count(lit(1)).as("__c"))
-    val offs1 = l2.groupBy(col("__sub")).agg(sum(col("__c")).as("__sc"))
-      .withColumn("__off1", coalesce(sum(col("__sc")).over(wOff), lit(0L)))
-      .select(col("__sub"), col("__off1"))
-    val offs2 = l2.join(broadcast(offs1), "__sub")
-      .withColumn("__off", col("__off1") +
-        coalesce(sum(col("__c")).over(wOff2), lit(0L)))
+    val offs = prefixSum(l2, "__sub", Seq(col(v), col("__sub2")),
+        Seq(col("__c") -> "__off"), inclusive = false)
       .select(col(v), col("__sub2"), col("__off"))
     // group-level offsets join AFTER the row window, on the window's
     // own (v, tie-range) partitioning — the row side is not
-    // re-shuffled; offs2 (group-table-sized, histogram-scale) is.
+    // re-shuffled; offs (group-table-sized, histogram-scale) is.
     sub.withColumn("__rn", row_number().over(wRn))
-      .join(offs2, Seq(v, "__sub2"))
+      .join(offs, Seq(v, "__sub2"))
       .withColumn(out, col("__off") + col("__rn"))
       .drop("__sub", "__sub2", "__rn", "__off")
   }
@@ -648,9 +656,9 @@ object Profiling {
     * doubled (2·R, 2·U) so tie half-ranks stay INTEGER and the whole
     * statistic hash-matches with zero float folds; auc_a = U/(n₁n₂)
     * is the probability a random URGENT total exceeds a random LOW
-    * one. Ranks come from the value-marginal table (distinct cents,
-    * not rows) under the ksTest two-level cumulative device; the
-    * rank-weighted sum accumulates in DECIMAL(38,0) / HUGEINT. */
+    * one. Ranks come from a [[prefixSum]] over the value-marginal
+    * table (distinct cents, not rows); the rank-weighted sum
+    * accumulates in DECIMAL(38,0) / HUGEINT. */
   def mannWhitney(s: SparkSession, d: String): DataFrame = {
     val dec = "decimal(38,0)"
     val step = 1048576L
@@ -664,19 +672,8 @@ object Profiling {
       .withColumn("sub", expr(s"v DIV $step"))
       // cut: marginal feeds offsets + the rank-weighted aggregate
       .transform(GraftSession.cut(_))
-    val wSub = Window.partitionBy(col("sub")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOff = Window.orderBy(col("sub"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = marg.groupBy(col("sub"))
-      .agg(sum(col("c1") + col("c2")).as("sc"))
-      .withColumn("off", coalesce(sum(col("sc")).over(wOff), lit(0L)))
-      .select(col("sub"), col("off"))
-    val ag = marg
-      .withColumn("cw", sum(col("c1") + col("c2")).over(wSub))
-      .join(broadcast(offs), "sub")
-      .withColumn("before",
-        col("off") + col("cw") - col("c1") - col("c2"))
+    val ag = prefixSum(marg, "sub", Seq(col("v")),
+        Seq((col("c1") + col("c2")) -> "before"), inclusive = false)
       .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"),
         sum(col("c1").cast(dec) * (lit(2L) * col("before")
           + col("c1") + col("c2") + 1L)).as("r2x"))
@@ -778,13 +775,11 @@ object Profiling {
   /** Per-group equi-depth histogram: order-total deciles WITHIN each
     * order priority — the grouped variant of q133, and the shape a
     * stratified sampler reads before drawing per-stratum quantile
-    * boundaries. Positions decompose per (group, value sub-bucket)
-    * over the (g, v) HISTOGRAM — the cumulative window partitions on
-    * (g, sub), the offsets window on g over its sub-bucket counts —
-    * so adding groups adds parallelism, never a bigger global sort,
-    * and per-task rows are bounded by distinct values per (g, sub)
-    * at ANY value distribution. Bucket assignment is exact integer
-    * arithmetic per group. */
+    * boundaries. Positions are a [[prefixSum]] grouped by g over the
+    * (g, v) HISTOGRAM, so adding groups adds parallelism, never a
+    * bigger global sort, and per-task rows are bounded by distinct
+    * values per (g, sub) at ANY value distribution. Bucket assignment
+    * is exact integer arithmetic per group. */
   def groupedEquiDepth(s: SparkSession, d: String,
       buckets: Int = 10): DataFrame = {
     val step = 1048576L
@@ -797,20 +792,10 @@ object Profiling {
       .select(col("o_orderpriority").as("g"), cents.as("v"))
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
       .withColumn("sub", expr(s"v DIV $step")))
-    val wVal = Window.partitionBy(col("g"), col("sub")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOff = Window.partitionBy(col("g")).orderBy(col("sub"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = hist.groupBy(col("g"), col("sub"))
-      .agg(sum(col("c")).as("sub_n"))
-      .withColumn("off", coalesce(sum(col("sub_n")).over(wOff), lit(0L)))
-      .select(col("g"), col("sub"), col("off"))
     val ns = hist.groupBy(col("g")).agg(sum(col("c")).as("n"))
-    hist
-      .withColumn("voff0", coalesce(sum(col("c")).over(wVal), lit(0L)))
-      .join(broadcast(offs), Seq("g", "sub"))
+    prefixSum(hist, "sub", Seq(col("v")), Seq(col("c") -> "voff"),
+        inclusive = false, groups = Seq("g"))
       .join(broadcast(ns), "g")
-      .withColumn("voff", col("off") + col("voff0"))
       .withColumn("bucket", explode(sequence(
         expr(s"(voff * $buckets) DIV n"),
         expr(s"((voff + c - 1) * $buckets) DIV n"))))
@@ -1018,8 +1003,8 @@ object Profiling {
   /** Winsorized mean of order totals: values clipped to the exact
     * [p05, p95] rank quantiles before averaging — the robust location
     * estimate a pipeline reports when whales/glitches poison the
-    * plain mean. Quantile bounds come from the value-marginal
-    * cumulative table (the ksTest device, distinct cents not rows);
+    * plain mean. Quantile bounds come from a [[prefixSum]] over the
+    * value marginal (distinct cents, not rows);
     * the clipped numerator Σ c·clamp(v) is exact BIGINT; one double
     * division at the end. Two orders scans total (marginal is cut). */
   def winsorizedMean(s: SparkSession, d: String): DataFrame = {
@@ -1028,17 +1013,8 @@ object Profiling {
       .select(cents.as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("c"))
       .withColumn("sub", expr(s"v DIV $step")))
-    val wSub = Window.partitionBy(col("sub")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOff = Window.orderBy(col("sub"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = marg.groupBy(col("sub")).agg(sum(col("c")).as("sc"))
-      .withColumn("off", coalesce(sum(col("sc")).over(wOff), lit(0L)))
-      .select(col("sub"), col("off"))
-    val cum = marg
-      .withColumn("cw", sum(col("c")).over(wSub))
-      .join(broadcast(offs), "sub")
-      .withColumn("cum", col("off") + col("cw"))
+    val cum = prefixSum(marg, "sub", Seq(col("v")),
+      Seq(col("c") -> "cum"), inclusive = true)
     val tot = marg.agg(sum(col("c")).as("n"))
     val bounds = cum.crossJoin(broadcast(tot))
       .agg(max(col("n")).as("n"),
@@ -1092,28 +1068,19 @@ object Profiling {
     val rows = Tables.lineitem(s, d)
       .select(expr("CAST(round(l_quantity, 0) AS LONG)").as("a"),
         expr("CAST(round(l_extendedprice * 100, 0) AS LONG)").as("b"))
-    // per-column doubled-average-rank tables via the two-level
-    // cumulative device: the price marginal is near row-count-sized,
-    // so its cumulative runs partitioned by value sub-bucket (never a
-    // single-partition window) and joins back by value WITHOUT a
-    // broadcast hint — AQE broadcasts the ~50-row quantity table on
-    // its own and shuffle-joins the wide price table
+    // per-column doubled-average-rank tables, a [[prefixSum]] over
+    // each value marginal: the price marginal is near row-count-sized,
+    // so it joins back by value WITHOUT a broadcast hint — AQE
+    // broadcasts the ~50-row quantity table on its own and
+    // shuffle-joins the wide price table
     def rankTable(c: String, step: Long): DataFrame = {
       val marg = rows.groupBy(col(c)).agg(count(lit(1)).as("cnt"))
         .withColumn("sub", expr(s"$c DIV $step"))
-      val wSub = Window.partitionBy(col("sub")).orderBy(col(c))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wOff = Window.orderBy(col("sub"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offs = marg.groupBy(col("sub")).agg(sum(col("cnt")).as("sc"))
-        .withColumn("off",
-          coalesce(sum(col("sc")).over(wOff), lit(0L)))
-        .select(col("sub"), col("off"))
-      marg.withColumn("cw", sum(col("cnt")).over(wSub))
-        .join(broadcast(offs), "sub")
-        // doubled average rank of the tied block ending at off + cw
-        .select(col(c), (lit(2L) * (col("off") + col("cw")
-          - col("cnt")) + col("cnt") + 1L).as(s"r2_$c"))
+      prefixSum(marg, "sub", Seq(col(c)), Seq(col("cnt") -> "cum"),
+          inclusive = true)
+        // doubled average rank of the tied block ending at cum
+        .select(col(c), (lit(2L) * (col("cum") - col("cnt"))
+          + col("cnt") + 1L).as(s"r2_$c"))
     }
     val ranked = rows
       .join(rankTable("a", 8L), "a")
@@ -1167,27 +1134,17 @@ object Profiling {
   /** Median absolute deviation and robust outlier count over order
     * totals — the robust-scale companion to q166's winsorized mean
     * (a MAD-based fence survives the contaminated tails that wreck a
-    * z-score fence). Two rank passes over VALUE MARGINALS, both under
-    * the two-level cumulative device: the median from the cents
+    * z-score fence). Two rank passes over VALUE MARGINALS, each a
+    * [[prefixSum]]: the median from the cents
     * marginal, then the MAD as the median of the |v − med| marginal
     * (re-grouped — deviations from both sides collide). The outlier
     * fence |v − med| > 3·MAD stays entirely in exact integers: no
     * 1.4826 consistency constant, no float compare. */
   def madOutliers(s: SparkSession, d: String): DataFrame = {
     val step = 1048576L
-    def cumulate(m: DataFrame, v: String): DataFrame = {
-      val wSub = Window.partitionBy(col("sub")).orderBy(col(v))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wOff = Window.orderBy(col("sub"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offs = m.groupBy(col("sub")).agg(sum(col("c")).as("sc"))
-        .withColumn("off",
-          coalesce(sum(col("sc")).over(wOff), lit(0L)))
-        .select(col("sub"), col("off"))
-      m.withColumn("cw", sum(col("c")).over(wSub))
-        .join(broadcast(offs), "sub")
-        .withColumn("cum", col("off") + col("cw"))
-    }
+    def cumulate(m: DataFrame, v: String): DataFrame =
+      prefixSum(m, "sub", Seq(col(v)), Seq(col("c") -> "cum"),
+        inclusive = true)
     val marg = GraftSession.cut(Tables.orders(s, d)
       .select(cents.as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("c"))

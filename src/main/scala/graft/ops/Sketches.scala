@@ -209,9 +209,9 @@ object Sketches {
     * so unlike an opaque t-digest the whole sketch is hash-checkable.
     * Scale shape: the sample is TakeOrderedAndProject (per-partition
     * top-k, merged on the driver — no global sort); the EXACT
-    * quantiles come from the value-marginal cumulative table under
-    * the ksTest two-level device (distinct cents, not rows, cross the
-    * shuffle); every rank boundary is exact integer ceil arithmetic.
+    * quantiles come from a [[Profiling.prefixSum]] over the value
+    * marginal (distinct cents, not rows, cross the shuffle); every
+    * rank boundary is exact integer ceil arithmetic.
     * One row: n, k, exact and estimated p50/p90/p99 in cents. */
   def quantileSketch(s: SparkSession, d: String,
       k: Int = 256): DataFrame = {
@@ -239,21 +239,12 @@ object Sketches {
     val marg = graft.GraftSession.cut(
       vals.groupBy(col("v")).agg(count(lit(1)).as("c"))
         .withColumn("sub", expr(s"v DIV $step")))
-    val wSub = Window.partitionBy(col("sub")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOff = Window.orderBy(col("sub"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = marg.groupBy(col("sub")).agg(sum(col("c")).as("sc"))
-      .withColumn("off", coalesce(sum(col("sc")).over(wOff), lit(0L)))
-      .select(col("sub"), col("off"))
     val tot = marg.agg(sum(col("c")).as("n"))
     // ceil(q·n) as exact integer arithmetic: (n·qnum + qden-1) DIV qden
     def rank(qn: Int, qd: Int): Column =
       expr(s"(n * $qn + ${qd - 1}) DIV $qd")
-    val exact = marg
-      .withColumn("cw", sum(col("c")).over(wSub))
-      .join(broadcast(offs), "sub")
-      .withColumn("cum", col("off") + col("cw"))
+    val exact = Profiling.prefixSum(marg, "sub", Seq(col("v")),
+        Seq(col("c") -> "cum"), inclusive = true)
       .crossJoin(broadcast(tot))
       .agg(max(col("n")).as("n_rows"),
         min(when(col("cum") >= rank(1, 2), col("v"))).as("p50_exact"),

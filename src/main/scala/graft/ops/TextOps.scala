@@ -819,8 +819,8 @@ object TextOps {
     * Machinery: per-doc token counts come from one projection
     * (size(split)), new-type counts from the distinct-type MIN-doc
     * table ([[noveltyScore]]'s device on unigrams); the two cumulative
-    * series use the q133 subsplit window (per-subsplit cumsum +
-    * broadcast offsets, no global sort), and the four OLS sums fold
+    * series are one [[Profiling.prefixSum]] over doc_id subsplits (no
+    * global sort), and the four OLS sums fold
     * in checkpoint order (the q106 device) before one closed-form
     * division — every float op identical on both engines. */
   def heapsFit(s: SparkSession, d: String): DataFrame = {
@@ -837,23 +837,12 @@ object TextOps {
       .select(col("doc_id"), col("ntok"),
         coalesce(col("nnew"), lit(0L)).as("nnew"))
       .withColumn("sub", expr("doc_id DIV 100"))
-    val wSub = Window.partitionBy(col("sub")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOff = Window.orderBy(col("sub"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = base.groupBy(col("sub"))
-      .agg(sum(col("ntok")).as("st"), sum(col("nnew")).as("sv"))
-      .withColumn("offt", coalesce(sum(col("st")).over(wOff), lit(0L)))
-      .withColumn("offv", coalesce(sum(col("sv")).over(wOff), lit(0L)))
-      .select(col("sub"), col("offt"), col("offv"))
-    val pts = base
-      .withColumn("cwt", sum(col("ntok")).over(wSub))
-      .withColumn("cwv", sum(col("nnew")).over(wSub))
-      .join(broadcast(offsets), "sub")
+    val pts = Profiling.prefixSum(base, "sub", Seq(col("doc_id")),
+        Seq(col("ntok") -> "cumt", col("nnew") -> "cumv"),
+        inclusive = true)
       .filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"),
-        log((col("offt") + col("cwt")).cast("double")).as("x"),
-        log((col("offv") + col("cwv")).cast("double")).as("y"))
+      .select(col("doc_id"), log(col("cumt").cast("double")).as("x"),
+        log(col("cumv").cast("double")).as("y"))
     // two-level deterministic fold (r14): pts is corpus/10 rows, so a
     // whole-table ungrouped sorted collect is the q119 single-task
     // class (tens of GB of structs at 10^9 documents). The regression
@@ -1215,33 +1204,22 @@ object TextOps {
     * budget takes the top X% by quality, how many tokens is that".
     * The score quantizes to exact micro-units (round(q·1e6)) so the
     * ranking key is an INTEGER — no float ordering crosses the
-    * engines — and the rank runs under the two-level sub-bucket
-    * device on the descending-shifted key (1e6 − micro: keeps the
-    * key non-negative, where Spark's DIV truncates toward zero but
-    * DuckDB's // floors, so a negative key would shift bucket edges).
+    * engines — and the rank is a [[Profiling.scalableRank]] on the
+    * descending-shifted key (1e6 − micro), tied on doc_id, so a
+    * narrow score distribution still sorts in bounded tasks.
     * Cumulative window folds over the TEN decile rows. */
   def qualityTokenCurve(s: SparkSession, d: String): DataFrame = {
-    val step = 65536L
     val base = graft.GraftSession.cut(Tables.documents(s, d)
       .select(col("doc_id"),
         (lit(1000000L) - round(qualityScore(col("text")) * 1e6, 0)
           .cast("long")).as("negq"),
-        tokenCount(col("text")).cast("long").as("n_tokens"))
-      .withColumn("sub", expr(s"negq DIV $step")))
-    val wSub = Window.partitionBy(col("sub"))
-      .orderBy(col("negq"), col("doc_id"))
-    val wOff = Window.orderBy(col("sub"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = base.groupBy(col("sub")).agg(count(lit(1)).as("c"))
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .select(col("sub"), col("off"))
+        tokenCount(col("text")).cast("long").as("n_tokens")))
     val n = base.agg(count(lit(1)).as("n"))
     val wCum = Window.orderBy(col("decile"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    base.withColumn("rn", row_number().over(wSub))
-      .join(broadcast(offs), "sub")
+    Profiling.scalableRank(base, "negq", "doc_id", 65536L, "rk")
       .crossJoin(broadcast(n))
-      .withColumn("decile", expr("((off + rn - 1) * 10) DIV n"))
+      .withColumn("decile", expr("((rk - 1) * 10) DIV n"))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("tokens"))
@@ -1253,33 +1231,24 @@ object TextOps {
     * whether a "quality" score is secretly a length score (a diagonal
     * grid means the two signals are confounded and a length-balanced
     * sample must stratify on both). Both keys are exact integers
-    * (micro-unit quality, token count) ranked under the two-level
-    * device; output is the 10×10 cell-count grid. */
+    * (micro-unit quality, token count), each ranked by
+    * [[Profiling.scalableRank]] tied on doc_id; the two decile tables
+    * are independent and join back on doc_id. Output is the 10×10
+    * cell-count grid. */
   def qualityLengthGrid(s: SparkSession, d: String): DataFrame = {
     val base = graft.GraftSession.cut(Tables.documents(s, d)
       .select(col("doc_id"),
         (lit(1000000L) - round(qualityScore(col("text")) * 1e6, 0)
           .cast("long")).as("negq"),
         tokenCount(col("text")).cast("long").as("toks")))
-    def decileBy(df: DataFrame, v: String, step: Long,
-        out: String): DataFrame = {
-      val wSub = Window.partitionBy(col("__s"))
-        .orderBy(col(v), col("doc_id"))
-      val wOff = Window.orderBy(col("__s"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val sub = df.withColumn("__s", expr(s"$v DIV $step"))
-      val offs = sub.groupBy(col("__s")).agg(count(lit(1)).as("c"))
-        .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-        .select(col("__s"), col("off"))
-      val n = df.agg(count(lit(1)).as("__n"))
-      sub.withColumn("rn", row_number().over(wSub))
-        .join(broadcast(offs), "__s")
+    val n = base.agg(count(lit(1)).as("__n"))
+    def decileBy(v: String, step: Long, out: String): DataFrame =
+      Profiling.scalableRank(base.select(col("doc_id"), col(v)), v,
+          "doc_id", step, "__rk")
         .crossJoin(broadcast(n))
-        .withColumn(out, expr("((off + rn - 1) * 10) DIV __n"))
-        .drop("__s", "rn", "off", "__n")
-    }
-    decileBy(decileBy(base, "negq", 65536L, "q_dec"),
-      "toks", 16L, "len_dec")
+        .select(col("doc_id"), expr("((__rk - 1) * 10) DIV __n").as(out))
+    decileBy("negq", 65536L, "q_dec")
+      .join(decileBy("toks", 16L, "len_dec"), "doc_id")
       .groupBy(col("q_dec"), col("len_dec"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("q_dec"), col("len_dec"))
@@ -1611,40 +1580,33 @@ object TextOps {
     * vocabulary size N, the fraction of all token OCCURRENCES covered
     * by the N most frequent types — the "how big must the vocab be"
     * design curve for tokenizer budgeting (the complement of the OOV
-    * rate under a top-N vocab). Ranking runs over the AGGREGATED
-    * (type, count) table, never the token stream, via the two-level
-    * subsplit rank (sub-bucket window + broadcast offsets — the
-    * scalableRank device), so no plan stage sorts a row-stream in one
-    * partition; the per-N sums then read the bounded ranked table
-    * once through a small explode. Counts are exact BIGINTs; the
-    * coverage division is the only float, round-6. */
+    * rate under a top-N vocab). Reordering equal-count types never
+    * moves a top-N sum, so no type is ranked: a [[Profiling.prefixSum]]
+    * over the (count -> number of types) histogram, descending, gives
+    * each count's types their rank interval, and each top-N sum takes
+    * the interval's intersection with [1, N] (the [[Profiling]]
+    * equi-depth arithmetic). Per-task rows are bounded by distinct
+    * counts per sub-range (16), not types. Counts are exact BIGINTs;
+    * the coverage division is the only float, round-6. */
   def vocabCoverage(s: SparkSession, d: String,
       vocabSizes: Seq[Int] = Seq(100, 300, 1000, 3000)): DataFrame = {
-    val vocab = graft.GraftSession.cut(
+    // (-cnt) DIV 16 rises as cnt falls
+    val hist = graft.GraftSession.cut(
       Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("t"))
-        .groupBy(col("t")).agg(count(lit(1)).as("cnt")))
-    // two-level DESCENDING rank: sub-bucket on -cnt (value-range
-    // partitioning), window inside buckets, broadcast running offsets
-    val wSub = Window.partitionBy(col("__sub"))
-      .orderBy(col("cnt").desc, col("t"))
-    val wOff = Window.orderBy(col("__sub"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val sub = vocab.withColumn("__sub", expr("(-cnt) DIV 16"))
-    val offs = sub.groupBy(col("__sub")).agg(count(lit(1)).as("__c"))
-      .withColumn("__off", coalesce(sum(col("__c")).over(wOff), lit(0L)))
-      .select(col("__sub"), col("__off"))
-    val ranked = sub.withColumn("__rn", row_number().over(wSub))
-      .join(broadcast(offs), "__sub")
-      .select(col("cnt"), (col("__off") + col("__rn")).as("rk"))
-    val total = vocab.agg(sum(col("cnt")).as("total_tokens"),
-      count(lit(1)).as("n_types"))
-    ranked
-      .select(col("cnt"), col("rk"),
+        .groupBy(col("t")).agg(count(lit(1)).as("cnt"))
+        .groupBy(col("cnt")).agg(count(lit(1)).as("n_t"))
+        .withColumn("__sub", expr("(-cnt) DIV 16")))
+    val total = hist.agg(sum(col("cnt") * col("n_t")).as("total_tokens"),
+      sum(col("n_t")).as("n_types"))
+    Profiling.prefixSum(hist, "__sub", Seq(col("cnt").desc),
+        Seq(col("n_t") -> "before"), inclusive = false)
+      .select(col("cnt"), col("n_t"), col("before"),
         explode(array(vocabSizes.map(lit(_)): _*)).as("vocab_size"))
-      .filter(col("rk") <= col("vocab_size"))
+      .filter(col("before") < col("vocab_size"))
       .groupBy(col("vocab_size").cast("long").as("vocab_size"))
-      .agg(sum(col("cnt")).as("covered_tokens"))
+      .agg(sum(col("cnt") * (least(col("before") + col("n_t"),
+        col("vocab_size")) - col("before"))).as("covered_tokens"))
       .crossJoin(broadcast(total))
       .select(col("vocab_size"), col("covered_tokens"),
         col("total_tokens"), col("n_types"),

@@ -86,7 +86,12 @@ object CoverMergeScrape {
       DocKernels.makeCoverUdf(col("title"),
         date_format(col("meeting_date"), "yyyy-MM-dd"),
         col("participants")).as("pdf")): _*)
+    // filename is a grouping key, so the aggregate plans no second
+    // exchange; the fixed width keeps AQE from coalescing the merges
+    // into one task
     covers.unionByName(fetched)
+      .repartition(GenericIngest.fetchPartitions(todo.sparkSession),
+        col("filename"))
       .groupBy(meeting: _*)
       .agg(DocKernels.mergePdfs(col("idx"), col("pdf")).as("pdf"))
       .select("municipality", "committee", "filename", "meeting_date", "pdf")

@@ -113,6 +113,11 @@ object DeepScrape {
       .withColumn("section",
         concat(lit("<h2>Punkt "), col("number"), lit(": "), col("title"),
           lit("</h2><p>"), col("content"), lit("</p>")))
+      // filename is a grouping key, so the aggregate plans no second
+      // exchange; the fixed width keeps AQE from coalescing PDF
+      // synthesis into one task
+      .repartition(GenericIngest.fetchPartitions(pages.sparkSession),
+        col("filename"))
       .groupBy(todo.columns.toSeq.map(col): _*)
       .agg(sort_array(collect_list(struct(col("number"), col("section"))))
         .as("parts"))

@@ -201,8 +201,9 @@ object GenericIngest {
   /** The partition count of the exchange a fetch runs behind: the
     * session's shuffle partitions. A fixed count keeps AQE from
     * coalescing the tiny URL rows into one task, so fetch concurrency
-    * stays the task slots ([[Fetch]]). */
-  private def fetchPartitions(spark: SparkSession): Int =
+    * stays the task slots ([[Fetch]]); the PDF builders of
+    * [[DeepScrape]] and [[CoverMergeScrape]] run behind it too. */
+  private[graft] def fetchPartitions(spark: SparkSession): Int =
     spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** Bulk sink inventory (J1's right side): list once, never probe

@@ -88,4 +88,15 @@ class CoverMergeSpec extends SparkTestBase {
     // both meetings are in the sink: no item work at all
     assert(runOnce() == ((0L, 0L)))
   }
+
+  test("the PDF merges are not coalesced into one task") {
+    // the merges run in the tasks of the stage that reads the groupBy
+    // exchange; AQE coalesced that tiny exchange into one task. Its
+    // width is read, not the tasks that got rows
+    val docs = CoverMergeScrape.mergedDocs(spark,
+      "src/test/resources/fixtures/rksk", "ringkoebing_skjern",
+      PdfFetcher())
+    assert(docs.rdd.getNumPartitions ==
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
 }

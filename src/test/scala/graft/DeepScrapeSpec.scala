@@ -62,4 +62,15 @@ class DeepScrapeSpec extends SparkTestBase {
     assert(text.indexOf("Punkt 1") < text.indexOf("Punkt 2"))
     assert(!text.contains("bilagstekst"))
   }
+
+  test("PDF synthesis is not coalesced into one task") {
+    // the PDFs are built in the tasks of the stage that reads the
+    // groupBy exchange; AQE coalesced that tiny exchange into one task.
+    // Its width is read, not the tasks that got rows: the two fixture
+    // meetings hash to one partition either way
+    val docs = DeepScrape.synthesizedDocs(spark, pagesDir, "listing",
+      "kobenhavn")
+    assert(docs.rdd.getNumPartitions ==
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Curation, Profiling}
+import graft.ops.{Curation, Profiling, TextOps}
 
 /** The r14 verdict's degenerate-distribution hazard, closed: the
   * value-range subsplit devices (equi-depth histograms, tercile
@@ -226,5 +226,19 @@ class DegenerateDistributionSpec extends SparkTestBase {
       "madOutliers" -> (() => Profiling.madOutliers(spark, d)),
       "spearman" -> (() => Profiling.spearman(spark, d))))
       assertBoundedWindows(mk, label, Set("v", "rec", "freq", "mon"))
+  }
+
+  test("the text-score ranks carry the invariant") {
+    // q185/q197 ranked raw rows in windows partitioned only by a
+    // score sub-range (negq DIV 65536: ~16 sub-ranges over the whole
+    // score range), and q237 ranked every vocabulary type
+    val d = sf("")
+    for ((label, mk, valueCols) <- Seq[(String, () => DataFrame, Set[String])](
+      ("qualityTokenCurve", () => TextOps.qualityTokenCurve(spark, d),
+        Set("negq")),
+      ("qualityLengthGrid", () => TextOps.qualityLengthGrid(spark, d),
+        Set("negq", "toks")),
+      ("vocabCoverage", () => TextOps.vocabCoverage(spark, d), Set())))
+      assertBoundedWindows(mk, label, valueCols)
   }
 }

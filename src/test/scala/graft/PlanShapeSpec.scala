@@ -86,22 +86,37 @@ class PlanShapeSpec extends SparkTestBase {
     // above an Aggregate — i.e. over the sub-bucket offsets table
     // (value-range sized), never over the raw row stream. A future
     // edit that ranks rows with a bare Window.orderBy funnels the
-    // whole table through one task and fails here.
+    // whole table through one task and fails here. A grouped device
+    // (groupedEquiDepth, by `g`) holds its offsets window to the same
+    // rule per group: partitioned by the group keys alone.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      for ((name, mk) <- Seq[(String, () => DataFrame)](
-        "rfmSegments" ->
-          (() => graft.ops.Profiling.rfmSegments(spark, sf(""))),
-        "mannWhitney" ->
-          (() => graft.ops.Profiling.mannWhitney(spark, sf(""))),
-        "giniSpend" ->
-          (() => graft.ops.Profiling.giniSpend(spark, sf(""))),
-        "perplexityBuckets" ->
-          (() => graft.ops.Curation.perplexityBuckets(spark, sf(""))))) {
+      for ((name, mk, groupKeys) <- Seq[(String, () => DataFrame, Set[String])](
+        ("rfmSegments",
+          () => graft.ops.Profiling.rfmSegments(spark, sf("")), Set()),
+        ("mannWhitney",
+          () => graft.ops.Profiling.mannWhitney(spark, sf("")), Set()),
+        ("giniSpend",
+          () => graft.ops.Profiling.giniSpend(spark, sf("")), Set()),
+        ("perplexityBuckets",
+          () => graft.ops.Curation.perplexityBuckets(spark, sf("")), Set()),
+        ("qualityTokenCurve",
+          () => graft.ops.TextOps.qualityTokenCurve(spark, sf("")), Set()),
+        ("qualityLengthGrid",
+          () => graft.ops.TextOps.qualityLengthGrid(spark, sf("")), Set()),
+        ("vocabCoverage",
+          () => graft.ops.TextOps.vocabCoverage(spark, sf("")), Set()),
+        ("groupedEquiDepth",
+          () => graft.ops.Profiling.groupedEquiDepth(spark, sf("")),
+          Set("g")))) {
         val plan = mk().queryExecution.executedPlan
         val globals = plan.collect {
           case w: org.apache.spark.sql.execution.window.WindowExec
-              if w.partitionSpec.isEmpty => w
+              if w.partitionSpec.forall {
+                case a: org.apache.spark.sql.catalyst.expressions
+                    .AttributeReference => groupKeys(a.name)
+                case _ => false
+              } => w
         }
         assert(globals.nonEmpty, s"$name: offset window expected")
         globals.foreach { w =>

@@ -259,4 +259,62 @@ class PropertySpec extends SparkTestBase {
       assert(got == want, s"edges $es")
     }
   }
+
+  /** prefixSum against the single-window running sums it decomposes
+    * (the tokenStreamSingleWindow reference, generalised): for every
+    * grouping, frame, sub-range shape and two value columns at once,
+    * each row's sums must equal one window over the whole group. */
+  test("property: prefixSum equals the single-window running sum") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import graft.ops.Profiling
+    val rowGen = for {
+      g <- Gen.oneOf("a", "b", "c")
+      k <- Gen.choose(-300L, 300L)
+      a <- Gen.choose(0L, 1000L)
+      b <- Gen.choose(-50L, 50L)
+    } yield (g, k, a, b)
+    val rows = sample(rowGen, 1500).zipWithIndex
+      .map { case ((g, k, a, b), id) => (id.toLong, g, k, a, b) }
+      .toDF("id", "g", "k", "a", "b")
+    // a constant order key, kept non-foldable (a literal would be
+    // folded out of the partition specs, which is not the data case)
+    val constant = rows.withColumn("k",
+      when(col("id") >= 0, 7L).otherwise(0L))
+    def sums(df: DataFrame) = df.select(col("id"), col("sa"), col("sb"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
+      .toMap
+    def reference(df: DataFrame, groups: Seq[String],
+        inclusive: Boolean) = {
+      val w = Window.partitionBy(groups.map(col): _*)
+        .orderBy(col("k"), col("id"))
+        .rowsBetween(Window.unboundedPreceding,
+          if (inclusive) Window.currentRow else -1L)
+      sums(df.select(col("id"),
+        coalesce(sum(col("a")).over(w), lit(0L)).as("sa"),
+        coalesce(sum(col("b")).over(w), lit(0L)).as("sb")))
+    }
+    def twoLevel(df: DataFrame, sub: String, groups: Seq[String],
+        inclusive: Boolean) =
+      sums(Profiling.prefixSum(df.withColumn("sub", expr(sub)), "sub",
+        Seq(col("k"), col("id")), Seq(col("a") -> "sa", col("b") -> "sb"),
+        inclusive, groups))
+    for {
+      (df, sub) <- Seq(
+        rows -> "k DIV 40", // negative keys: DIV truncates toward 0
+        rows -> "k DIV 100000", // every row in one sub-range
+        constant -> "k DIV 16")
+      groups <- Seq(Nil, Seq("g"))
+      inclusive <- Seq(true, false)
+    } {
+      val want = reference(df, groups, inclusive)
+      assert(want.size == 1500)
+      assert(twoLevel(df, sub, groups, inclusive) == want,
+        s"sub=$sub groups=$groups inclusive=$inclusive")
+    }
+    // the contract is load-bearing: a sub-range key that FALLS as the
+    // order key rises puts the offsets in the wrong order
+    assert(twoLevel(rows, "-k DIV 40", Nil, true) !=
+      reference(rows, Nil, true))
+  }
 }
