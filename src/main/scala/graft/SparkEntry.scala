@@ -790,6 +790,20 @@ object SparkEntry {
       graft.ops.Retrieval.rrfFusion(s, d)),
   )
 
+  /** The [[queries]] named on a main's command line, in the order
+    * given; no names selects every query, sorted by name. `Left` is the
+    * usage message when a name is unknown: the unknown names, then
+    * every valid one. */
+  def select(names: Seq[String]): Either[String, Seq[(String, Q)]] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    if (unknown.nonEmpty)
+      Left(s"unknown query ${unknown.mkString(", ")}; " +
+        s"queries: ${all.keys.toSeq.sorted.mkString(", ")}")
+    else if (names.isEmpty) Right(all.toSeq.sortBy(_._1))
+    else Right(names.map(n => n -> all(n)))
+  }
+
   /** Shared decimal-sum fragment (see Relational.dsum). The scale-4
     * inner cast is load-bearing beyond determinism: DuckDB's
     * decimal->double cast goes through hugeint units and loses an ulp

@@ -6,11 +6,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, only @ _*) = args
+    val selected = SparkEntry.select(only).fold(
+      msg => { System.err.println(s"Verify: $msg"); sys.exit(2) }, identity)
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only.contains(n) }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

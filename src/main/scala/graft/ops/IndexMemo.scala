@@ -28,7 +28,7 @@ import org.apache.spark.sql.DataFrame
 private[graft] object IndexMemo {
 
   private final case class Entry(inputs: Seq[DataFrame], value: AnyRef,
-      pinned: Seq[DataFrame], tag: String = "", nanos: Long = 0L)
+      pinned: Seq[DataFrame], tag: String)
 
   private val cache = new ConcurrentHashMap[String, Entry]
 
@@ -60,12 +60,14 @@ private[graft] object IndexMemo {
   }
 
   /** Cumulative wall nanos spent inside `build` since startup (or the
-    * last reset). The bench reads this to keep memoized-index builds
-    * OUT of per-query timings: a timed run whose counter moved paid a
-    * build and is re-run, and the total lands in the record's
-    * `memo_build_s` field — without it, the build bill lands on
-    * whichever query touches a shared index first, which made
-    * cross-round per-query comparison noise (VERDICT r11 §wrong-2). */
+    * last [[clear]]). Every executed build stays billed, including one
+    * the FIFO bound or a collision has since evicted: the counters are
+    * a bill of work done, and no entry carries a bill of its own. The
+    * bench reads this to keep memoized-index builds OUT of per-query
+    * timings: a timed run whose counter moved paid a build and is
+    * re-run, and the total lands in the record's `memo_build_s` field
+    * — without it, the build bill lands on whichever query touches a
+    * shared index first. */
   private val buildNanosAcc = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] def buildNanos: Long = buildNanosAcc.get()
 
@@ -96,59 +98,6 @@ private[graft] object IndexMemo {
     b.result()
   }
 
-  /** Wall nanos of the builds whose entries are LIVE (still serving
-    * from the cache) — the SERVING bill, vs [[buildNanos]]' cumulative
-    * executed bill. The two differ when a build was evicted and
-    * re-run ([[evictTag]] — the bench does this for builds whose wall
-    * window a calibration probe flagged as a host stall, or whose
-    * bill implausibly exceeds the prior round's): the cumulative
-    * field keeps billing every executed build honestly, while this
-    * one prices the builds that actually serve the run — the
-    * cross-round-comparable figure (VERDICT r17 task 1: official runs
-    * billed 2x the builder's clean-window build cost on identical
-    * code because unbracketed stall windows landed in first-touch
-    * builds). A re-run key serves at the MIN wall observed across its
-    * executed builds this session — the build-side analog of the
-    * per-query best-of-N protocol, so a rebuild that lands in a
-    * second slow window cannot inflate the serving bill it was meant
-    * to clean. */
-  private[graft] def liveBuildNanos: Long = {
-    var acc = 0L
-    cache.values.forEach(e => acc += e.nanos)
-    acc
-  }
-
-  /** Per-tag serving bill — [[liveBuildNanos]] split by tag. */
-  private[graft] def liveBuildNanosByTag: Map[String, Long] = {
-    val m = scala.collection.mutable.Map.empty[String, Long]
-    cache.values.forEach(e =>
-      if (e.tag.nonEmpty) m.updateWith(e.tag)(v =>
-        Some(v.getOrElse(0L) + e.nanos)))
-    m.toMap
-  }
-
-  /** Evict every live entry under `tag`, releasing its pinned
-    * DataFrames. Callers holding a returned value recompute on next
-    * use — degraded, never wrong, the same contract as FIFO eviction.
-    * The bench uses this to RETRY a build whose wall window was
-    * host-stalled: the re-entered getOrBuild rebuilds in a clean
-    * window, the new entry serves, and [[liveBuildNanos]] prices the
-    * clean build while [[buildNanos]] keeps the honest cumulative. */
-  private[graft] def evictTag(tag: String): Unit = {
-    val q = tagQueues.remove(tag)
-    if (q != null) {
-      val evicted = q.synchronized {
-        val out = Seq.newBuilder[Entry]
-        while (!q.isEmpty) {
-          val e = cache.remove(q.removeFirst())
-          if (e != null) out += e
-        }
-        out.result()
-      }
-      evicted.foreach(e => release(e.pinned))
-    }
-  }
-
   /** Pluggable monotonic task-metric clock: cumulative (executor task
     * run ms, JVM GC ms) across the application, snapshotted around
     * every build so [[buildTaskMsByTag]] can attribute a tag's WALL
@@ -160,11 +109,6 @@ private[graft] object IndexMemo {
     * task time still reads unambiguously as a host stall. */
   @volatile private[graft] var taskClock: () => (Long, Long) =
     () => (0L, 0L)
-
-  /** Min executed build nanos per memo key this session. Deliberately
-    * NOT cleared by [[evictTag]] — surviving eviction is what lets a
-    * rebuilt key serve at its best observed cost. */
-  private val minNanosByKey = new ConcurrentHashMap[String, java.lang.Long]
 
   private val buildTaskMsByTagMap =
     new ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]
@@ -265,14 +209,7 @@ private[graft] object IndexMemo {
       _ => new java.util.concurrent.atomic.AtomicLong).addAndGet(elapsed)
     buildCountsMap.computeIfAbsent(tag,
       _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
-    // min over this session's executed builds of the key: the serving
-    // bill's best-of-N (see liveBuildNanos). Recorded before the race
-    // is resolved — a lost race's elapsed is still a real measurement
-    // of this build.
-    val bestNanos = minNanosByKey.compute(key,
-      (_, v) => if (v == null) elapsed else math.min(v, elapsed))
-    val prev =
-      cache.putIfAbsent(key, Entry(inputs, value, pinned, tag, bestNanos))
+    val prev = cache.putIfAbsent(key, Entry(inputs, value, pinned, tag))
     if (prev == null) {
       // plans register on the WINNER path only (ADVICE r15): a lost
       // race's pinned copies are released below, so appending their
@@ -316,11 +253,11 @@ private[graft] object IndexMemo {
   }
 
   /** Release every memoized index (tolerant of stopped sessions).
-    * Resets the build counters with the plans they describe (ADVICE
-    * r15): a sidecar read after N clear/rebuild cycles in one JVM
-    * should bill the LIVE indexes, not every incarnation ever built.
-    * The bench never calls this mid-run, so its startup-to-emit
-    * deltas are unaffected. */
+    * Resets the build counters with the plans they describe: a sidecar
+    * read after N clear/rebuild cycles in one JVM bills the builds
+    * since the last clear, not every incarnation ever built. The bench
+    * never calls this mid-run, so its startup-to-emit deltas are
+    * unaffected. */
   def clear(): Unit = {
     cache.values.forEach(e => release(e.pinned))
     cache.clear()
@@ -331,6 +268,5 @@ private[graft] object IndexMemo {
     buildCountsMap.clear()
     buildTaskMsByTagMap.clear()
     buildGcMsByTagMap.clear()
-    minNanosByKey.clear()
   }
 }

@@ -91,13 +91,11 @@ object Inspect {
 
   private def withQueries(sub: String, names: Seq[String])(
       body: Seq[(String, SparkEntry.Q)] => Unit): Int = {
-    val all = SparkEntry.queries
-    val unknown = names.filterNot(all.contains)
-    if (names.isEmpty || unknown.nonEmpty)
-      usageError((if (names.isEmpty) s"$sub needs at least one query"
-        else s"unknown query ${unknown.mkString(", ")}") +
-        s"; queries: ${all.keys.toSeq.sorted.mkString(", ")}")
-    else { body(names.map(n => n -> all(n))); 0 }
+    if (names.isEmpty)
+      usageError(s"$sub needs at least one query; " +
+        s"queries: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
+    else SparkEntry.select(names).fold(usageError,
+      qs => { body(qs); 0 })
   }
 
   private def header(title: String): Unit =

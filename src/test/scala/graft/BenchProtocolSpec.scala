@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Tests for the stall-proof measurement protocol in [[Bench.measure]],
@@ -57,500 +59,7 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(calls == 6)
   }
 
-  private def withBenchDir(files: (String, String)*)(
-      body: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("bench-prev")
-    try {
-      files.foreach { case (n, c) =>
-        java.nio.file.Files.write(dir.resolve(n),
-          c.getBytes("UTF-8"))
-      }
-      body(dir.toString)
-    } finally {
-      files.foreach { case (n, _) =>
-        java.nio.file.Files.deleteIfExists(dir.resolve(n)) }
-      java.nio.file.Files.deleteIfExists(dir)
-    }
-  }
-
   private val Sf = "/root/testdata/sf0.1"
-
-  test("latestPrevBench picks the highest round and parses its fields") {
-    val r8 = s"""{"metric":"total","value":10.0,"unit":"sec","sf":"$Sf",""" +
-      """"cal":0.2,"stalled":[],"queries":{"q1":0.5,"q2":0.5}}"""
-    val r9 = s"""{"metric":"total","value":12.0,"unit":"sec","sf":"$Sf",""" +
-      """"cal":0.3,"stalled":["q3"],"queries":{"q1":0.6,"q2":0.6,"q3":9.9}}"""
-    withBenchDir("BENCH_r08.json" -> r8, "BENCH_r09.json" -> r9) { dir =>
-      val Some(p) = Bench.latestPrevBench(dir)
-      assert(p.name == "BENCH_r09.json" && p.cal == 0.3 && p.sfDir == Sf)
-      assert(p.stalled == Set("q3"))
-      assert(p.queries == Map("q1" -> 0.6, "q2" -> 0.6, "q3" -> 9.9))
-    }
-  }
-
-  test("latestPrevBench unescapes the driver's wrapped tail form") {
-    // the committed BENCH_r*.json wraps the bench line escaped inside
-    // its own JSON: {"n":9,...,"tail":"...\"cal\":0.154..."}
-    val inner = s"""{\\"metric\\":\\"total\\",\\"value\\":12.0,""" +
-      s"""\\"sf\\":\\"$Sf\\",\\"cal\\":0.15,\\"stalled\\":[],""" +
-      """\"queries\":{\"q1\":0.6}}"""
-    val wrapped = s"""{"n": 9, "rc": 0, "sf": 0.1, "tail": "$inner"}"""
-    withBenchDir("BENCH_r09.json" -> wrapped) { dir =>
-      val Some(p) = Bench.latestPrevBench(dir)
-      assert(p.cal == 0.15 && p.sfDir == Sf)
-      assert(p.queries == Map("q1" -> 0.6))
-    }
-  }
-
-  test("reverifyTargets flags stall survivors, not honest movers") {
-    val prev = Some(Bench.PrevBench("BENCH_r12.json", Sf, cal = 0.2,
-      stalled = Set("q5"),
-      queries = Map("q1" -> 0.5, "q2" -> 0.03, "q3" -> 2.0, "q4" -> 0.5,
-        "q5" -> 0.5)))
-    val results = Seq(
-      // 7.9 s vs a 0.5 s prior: the r12 q43-class survivor — flagged
-      "q1_a" -> Bench.Measured(7.9, 3, stalled = false),
-      // 0.09 vs 0.03: >2.5x but under the +0.25 s floor — micro-query
-      // jitter, not a stall
-      "q2_b" -> Bench.Measured(0.09, 3, stalled = false),
-      // 3.0 vs 2.0: a real 1.5x regression to REPORT, not re-measure
-      "q3_c" -> Bench.Measured(3.0, 3, stalled = false),
-      // already flagged stalled: the record self-describes it
-      "q4_d" -> Bench.Measured(9.0, 0, stalled = true),
-      // prior itself stalled: no trustworthy bar to compare against
-      "q5_e" -> Bench.Measured(7.0, 3, stalled = false),
-      // no prior entry at all
-      "q6_f" -> Bench.Measured(7.0, 3, stalled = false))
-    assert(Bench.reverifyTargets(results, prev, Sf, cal = 0.2) ==
-      Seq("q1_a"))
-    // a 2x-slower host raises the bar: 1.9 s on cal 0.4 vs prior 0.5 s
-    // on cal 0.2 is within the host-adjusted 2.5x band
-    val slow = Seq("q1_a" -> Bench.Measured(1.9, 3, stalled = false))
-    assert(Bench.reverifyTargets(slow, prev, Sf, cal = 0.4).isEmpty)
-    // scale-factor mismatch or no prior: nothing to adjudicate
-    assert(Bench.reverifyTargets(results, prev, "/other/sf", 0.2).isEmpty)
-    assert(Bench.reverifyTargets(results, None, Sf, 0.2).isEmpty)
-  }
-
-  test("sidecar priors cover queries the truncated official record " +
-      "dropped — and never override ones it kept") {
-    // official record: only q1 survived the stdout truncation; the
-    // sidecar carries q1 (at a DIFFERENT, tighter value) and q2
-    val official = Some(Bench.PrevBench("BENCH_r12.json", Sf, cal = 0.2,
-      stalled = Set.empty, queries = Map("q1" -> 5.0)))
-    val sidecar = Some(Bench.PrevBench("BENCH_full_local.json", Sf,
-      cal = 0.2, stalled = Set.empty,
-      queries = Map("q1" -> 0.5, "q2" -> 0.1)))
-    val results = Seq(
-      // 6.0 vs official 5.0: fine there; the sidecar's 0.5 would flag
-      // it, but the official record takes precedence for q1
-      "q1_a" -> Bench.Measured(6.0, 3, stalled = false),
-      // q2 is MISSING from the official record: the sidecar's 0.1
-      // prior flags this 3.0 s stall survivor
-      "q2_b" -> Bench.Measured(3.0, 3, stalled = false))
-    assert(Bench.reverifyTargetsMerged(results, official, sidecar,
-      Sf, 0.2) == Seq("q2_b"))
-    // no sidecar: only official priors apply
-    assert(Bench.reverifyTargetsMerged(results, official, None,
-      Sf, 0.2).isEmpty)
-    // no official record: the sidecar alone adjudicates both
-    assert(Bench.reverifyTargetsMerged(results, None, sidecar,
-      Sf, 0.2).toSet == Set("q1_a", "q2_b"))
-    // an official record at a DIFFERENT sf adjudicates nothing AND
-    // must not mask the sidecar's priors for the keys it carries
-    val otherSf = official.map(_.copy(sfDir = "/other/sf"))
-    assert(Bench.reverifyTargetsMerged(results, otherSf, sidecar,
-      Sf, 0.2).toSet == Set("q1_a", "q2_b"))
-  }
-
-  test("sidecarPrevBench parses the full-precision sidecar file") {
-    val line = s"""{"metric":"total","value":10.0,"sf":"$Sf",""" +
-      """"cal":0.15,"cal_med":0.11,"stalled":[],""" +
-      """"queries":{"q1":0.6,"q2":0.1}}"""
-    withBenchDir("BENCH_full_local.json" -> line) { dir =>
-      val Some(p) = Bench.sidecarPrevBench(dir)
-      assert(p.cal == 0.15 && p.calMed.contains(0.11) &&
-        p.queries == Map("q1" -> 0.6, "q2" -> 0.1))
-    }
-    withBenchDir() { dir =>
-      assert(Bench.sidecarPrevBench(dir).isEmpty)
-    }
-  }
-
-  test("reverifyTargets prefers steady-state medians when both sides " +
-      "carry one") {
-    // startup cals say host is 2x slower (0.4 vs 0.2) which would
-    // excuse 1.9 s vs a 0.5 s prior; the steady-state medians say the
-    // hosts ran at the SAME speed, so the survivor is flagged
-    val prevMed = Some(Bench.PrevBench("BENCH_r13.json", Sf, cal = 0.2,
-      stalled = Set.empty, queries = Map("q1" -> 0.5),
-      calMed = Some(0.1)))
-    val r = Seq("q1_a" -> Bench.Measured(1.9, 3, stalled = false))
-    assert(Bench.reverifyTargets(r, prevMed, Sf, cal = 0.4,
-      calMed = Some(0.1)) == Seq("q1_a"))
-    // either side missing a median: fall back to startup cals (2x
-    // slower host, within band — not flagged)
-    assert(Bench.reverifyTargets(r, prevMed, Sf, cal = 0.4,
-      calMed = None).isEmpty)
-    val prevNoMed = Some(prevMed.get.copy(calMed = None))
-    assert(Bench.reverifyTargets(r, prevNoMed, Sf, cal = 0.4,
-      calMed = Some(0.1)).isEmpty)
-  }
-
-  test("calPair picks steady-state medians only when both sides " +
-      "carry one") {
-    // r14 activation check: r13 was the first record to EMIT cal_med,
-    // so r14 is the first comparison where both sides carry it — the
-    // normalizer must switch to the medians there and keep the startup
-    // fallback everywhere else (the path r13 itself exercised)
-    val withMed = Bench.PrevBench("BENCH_r13.json", Sf, cal = 0.2,
-      stalled = Set.empty, queries = Map("q1" -> 0.5),
-      calMed = Some(0.1))
-    assert(Bench.calPair(0.4, Some(0.12), withMed) == (0.12, 0.1))
-    assert(Bench.calPair(0.4, None, withMed) == (0.4, 0.2))
-    val noMed = withMed.copy(calMed = None)
-    assert(Bench.calPair(0.4, Some(0.12), noMed) == (0.4, 0.2))
-    assert(Bench.calPair(0.4, None, noMed) == (0.4, 0.2))
-  }
-
-  test("uniform ~2x host drift is self-labeled and widens the " +
-      "reverify set") {
-    // the r13 adjudication, mechanized: 24 shared queries uniformly
-    // 2.1x their prior (cal ratio 1.0) — each individually under the
-    // spike-calibrated 2.5x trigger, so the old rule certified all of
-    // them. The median calnorm ratio reads the drift; the flag
-    // tightens the factor to 1.8x and the whole cohort re-runs.
-    val prior = Some(Bench.PrevBench("BENCH_r13.json", Sf, cal = 0.2,
-      stalled = Set.empty,
-      queries = (1 to 24).map(i => s"q$i" -> 2.0).toMap,
-      calMed = Some(0.1)))
-    val drifted = (1 to 24).map(i =>
-      s"q${i}_x" -> Bench.Measured(4.2, 3, stalled = false))
-    val ratios = Bench.calnormRatiosMerged(drifted, prior, None, Sf,
-      cal = 0.2, calMed = Some(0.1))
-    val med = Bench.sharedMedianRatio(ratios)
-    assert(med.exists(m => m > 2.0 && m < 2.2))
-    assert(Bench.isHostDrift(med))
-    // r15: the calnorm spike rule now flags the 2.1x cohort even at
-    // factor 2.5 (each mover is >2.0x calnorm and >+0.25 s), so the
-    // drift-tightened factor is a second line of defense for the
-    // 1.8-2.0x band rather than the only one
-    assert(Bench.reverifyTargetsMerged(drifted, prior, None, Sf, 0.2,
-      calMed = Some(0.1), factor = 2.5).size == 24)
-    assert(Bench.reverifyTargetsMerged(drifted, prior, None, Sf, 0.2,
-      calMed = Some(0.1), factor = 1.8).size == 24)
-    // a 1.9x drifted cohort sits under the spike rule: only the
-    // tightened factor catches it — the band the tightening still owns
-    val drifted19 = (1 to 24).map(i =>
-      s"q${i}_x" -> Bench.Measured(3.8, 3, stalled = false))
-    assert(Bench.reverifyTargetsMerged(drifted19, prior, None, Sf, 0.2,
-      calMed = Some(0.1), factor = 2.5).isEmpty)
-    assert(Bench.reverifyTargetsMerged(drifted19, prior, None, Sf, 0.2,
-      calMed = Some(0.1), factor = 1.8).size == 24)
-    // an in-band run neither flags nor widens
-    val clean = (1 to 24).map(i =>
-      s"q${i}_x" -> Bench.Measured(2.1, 3, stalled = false))
-    val cleanMed = Bench.sharedMedianRatio(Bench.calnormRatiosMerged(
-      clean, prior, None, Sf, cal = 0.2, calMed = Some(0.1)))
-    assert(cleanMed.exists(m => m > 1.0 && m < 1.1))
-    assert(!Bench.isHostDrift(cleanMed))
-    // under 20 shared queries the median is sampling noise: no label,
-    // no tightening (a targeted run never self-labels drift)
-    assert(Bench.sharedMedianRatio(ratios.take(19)).isEmpty)
-    assert(!Bench.isHostDrift(None))
-    // the median normalizes by calPair like everything else: the same
-    // 2.1x raw drift on a host whose medians say it runs 2.1x slower
-    // is NOT drift
-    val slowHost = Bench.sharedMedianRatio(Bench.calnormRatiosMerged(
-      drifted, prior, None, Sf, cal = 0.42, calMed = Some(0.21)))
-    assert(slowHost.exists(m => m > 0.95 && m < 1.05))
-    assert(!Bench.isHostDrift(slowHost))
-    // sidecar priors feed the median for keys the official record
-    // dropped — same merge rule as the reverify set
-    val officialTrunc = Some(prior.get.copy(
-      queries = prior.get.queries.filter(_._1 == "q1")))
-    val sidecar = Some(prior.get.copy(name = "BENCH_full_local.json"))
-    val merged = Bench.calnormRatiosMerged(drifted, officialTrunc,
-      sidecar, Sf, cal = 0.2, calMed = Some(0.1))
-    assert(merged.size == 24)
-  }
-
-  test("a single 2.4x mover on an in-band record is re-run (spike " +
-      "rule, drift-independent)") {
-    // the r14 q106 numbers verbatim: 0.42 s prior -> 0.99 s measured,
-    // prior cal_med 0.098 vs 0.090 now (cal ratio 0.918, in band, no
-    // host_drift), raw ratio 2.36x UNDER the 2.5x trigger — but
-    // calnorm 2.57x and +0.57 s absolute. The r14 protocol certified
-    // it; the spike rule re-runs it regardless of drift state.
-    val prior = Some(Bench.PrevBench("BENCH_r14.json", Sf, cal = 0.147,
-      stalled = Set.empty,
-      queries = (1 to 20).map(i => s"q$i" -> 1.0).toMap +
-        ("q106" -> 0.42),
-      calMed = Some(0.098)))
-    val inBand = (1 to 20).map(i =>
-      s"q${i}_x" -> Bench.Measured(0.92, 3, stalled = false))
-    val results = inBand :+
-      ("q106_unigram_nll" -> Bench.Measured(0.99, 3, stalled = false))
-    val med = Bench.sharedMedianRatio(Bench.calnormRatiosMerged(
-      results, prior, None, Sf, cal = 0.14, calMed = Some(0.09)))
-    assert(!Bench.isHostDrift(med)) // record is in band: factor stays 2.5
-    assert(Bench.reverifyTargetsMerged(results, prior, None, Sf,
-      cal = 0.14, calMed = Some(0.09), factor = 2.5) ==
-      Seq("q106_unigram_nll"))
-    // the same mover under the absolute floor (0.2 -> 0.42 s) stays
-    // certified: micro-query jitter is not a spike
-    val tiny = inBand :+
-      ("q106_unigram_nll" -> Bench.Measured(0.42, 3, stalled = false))
-    val priorTiny = prior.map(p => p.copy(
-      queries = p.queries + ("q106" -> 0.2)))
-    assert(Bench.reverifyTargetsMerged(tiny, priorTiny, None, Sf,
-      cal = 0.14, calMed = Some(0.09), factor = 2.5).isEmpty)
-  }
-
-  test("sharedMedianRatio averages the two middles for even n — the " +
-      "drift flag cannot flip on shared-set parity") {
-    // 20 ratios straddling the 1.2 edge: ten at 1.19, ten at 1.23.
-    // The upper-middle form read 1.23 (host_drift); the true median
-    // is 1.21 — still drifted here, but symmetric: the mirrored set
-    // at the 0.8 edge must agree regardless of parity
-    val even = Seq.fill(10)(1.19) ++ Seq.fill(10)(1.23)
-    assert(Bench.sharedMedianRatio(even)
-      .exists(m => math.abs(m - 1.21) < 1e-9))
-    val odd = even :+ 1.19
-    assert(Bench.sharedMedianRatio(odd).contains(1.19))
-    // lower edge: half at 0.7 (drifted alone), half at 0.95 (clean)
-    // averages to 0.825 — in band; a lower-middle "median" would have
-    // read 0.7 and flagged drift on parity alone
-    val lower = Seq.fill(10)(0.7) ++ Seq.fill(10)(0.95)
-    val lowerMed = Bench.sharedMedianRatio(lower)
-    assert(lowerMed.exists(m => math.abs(m - 0.825) < 1e-9))
-    assert(!Bench.isHostDrift(lowerMed))
-  }
-
-  test("calnorm ratios share reverify's clean-side rule and ship " +
-      "named in the sidecar fragment") {
-    val prior = Some(Bench.PrevBench("BENCH_r14.json", Sf, cal = 0.2,
-      stalled = Set.empty, queries = Map("q1" -> 0.5, "q2" -> 0.5)))
-    // a 0.0 s measurement is clean (only -1 marks failure): it must
-    // feed the drift median exactly as reverify would adjudicate it
-    val results = Seq(
-      "q1_a" -> Bench.Measured(0.0, 3, stalled = false),
-      "q2_b" -> Bench.Measured(1.0, 3, stalled = false),
-      "q3_c" -> Bench.Measured(-1.0, 0, stalled = false))
-    val named = Bench.calnormRatiosNamed(results, prior, Sf, cal = 0.2)
-    assert(named.toMap == Map("q1" -> 0.0, "q2" -> 2.0))
-  }
-
-  test("prevComparisonJson normalizes by the calibration ratio") {
-    // prev: cal 0.2, q1+q2 = 1.0s. now: cal 0.4 (host 2x slower),
-    // q1+q2 = 2.0s -> raw ratio 2.0, cal ratio 2.0, normalized 1.0.
-    // q3 was stalled before and q4 is stalled now: both excluded.
-    val prev = s"""{"value":10.0,"sf":"$Sf","cal":0.2,"stalled":["q3"],""" +
-      """"queries":{"q1":0.5,"q2":0.5,"q3":9.9,"q4":0.1}}"""
-    withBenchDir("BENCH_r09.json" -> prev) { dir =>
-      val now = Seq(
-        "q1_a" -> Bench.Measured(1.0, 3, stalled = false),
-        "q2_b" -> Bench.Measured(1.0, 3, stalled = false),
-        "q3_c" -> Bench.Measured(0.2, 3, stalled = false),
-        "q4_d" -> Bench.Measured(7.0, 0, stalled = true),
-        "q9_new" -> Bench.Measured(0.3, 3, stalled = false))
-      val json = Bench.prevComparisonJson(0.4, Sf, now, dir)
-      assert(json.contains("\"prev\":\"BENCH_r09.json\""))
-      assert(json.contains("\"shared_q\":2"))
-      assert(json.contains("\"cal_ratio_vs_prev\":2"))
-      assert(json.contains("\"shared_ratio_calnorm\":1"))
-    }
-  }
-
-  test("prevComparisonJson is empty across scale factors or no prior") {
-    val prev = s"""{"value":10.0,"sf":"$Sf","cal":0.2,"stalled":[],""" +
-      """"queries":{"q1":0.5}}"""
-    val now = Seq("q1_a" -> Bench.Measured(1.0, 3, stalled = false))
-    withBenchDir("BENCH_r09.json" -> prev) { dir =>
-      // a local sf0.001 run must not compare itself to the sf0.1 record
-      assert(Bench.prevComparisonJson(0.4, "/root/testdata/sf0.001",
-        now, dir) == "")
-    }
-    withBenchDir() { dir =>
-      assert(Bench.prevComparisonJson(0.4, Sf, now, dir) == "")
-    }
-  }
-
-  test("a host-inflated confirmed mover is labeled host-window; a " +
-      "plausible one confirmed-vs-best (r15 verdict task 3)") {
-    // best ever: 0.4 s at cal 0.10. The host now runs at the same
-    // speed (calNow 0.10, hostFactor 1.0), so the plausible band tops
-    // out at 0.8 s: a 1.2 s "confirmed" re-run exceeds anything ever
-    // measured for this query host-adjusted -> the documented stall
-    // window, not the code.
-    assert(Bench.reverifyLabel(1.2, (0.4, 0.10), 0.10) == "host-window")
-    // 0.7 s is inside the band -> a real measurement
-    assert(
-      Bench.reverifyLabel(0.7, (0.4, 0.10), 0.10) == "confirmed-vs-best")
-    // a slower host stretches the band: cal 0.10 -> 0.20 doubles it,
-    // so the same 1.2 s reads as plausible
-    assert(
-      Bench.reverifyLabel(1.2, (0.4, 0.10), 0.20) == "confirmed-vs-best")
-    // a FASTER host never shrinks the band below the raw best (the
-    // max(1, ...) clamp): 0.7 stays plausible at calNow 0.05
-    assert(
-      Bench.reverifyLabel(0.7, (0.4, 0.10), 0.05) == "confirmed-vs-best")
-  }
-
-  test("reverifyLabels cover only confirmed movers with a prior") {
-    val results = Seq(
-      "q1_a" -> Bench.Measured(1.2, 3, stalled = false),
-      "q2_b" -> Bench.Measured(0.5, 3, stalled = false))
-    val best = Map("q1" -> (0.4, 0.10))
-    // q2 has no best-known prior -> no label; q1 labels host-window
-    val ls = Bench.reverifyLabels(Seq("q1_a", "q2_b"), best, results, 0.10)
-    assert(ls == Seq("q1" -> "host-window"))
-  }
-
-  test("mergedBestKnown seeds from the prior's best_known and queries, " +
-      "keeps the min, and folds this run in") {
-    val prior = Bench.PrevBench("BENCH_full_local.json", Sf, 0.12,
-      Set("q4"), Map("q1" -> 0.6, "q2" -> 0.5, "q4" -> 9.9),
-      calMed = Some(0.10),
-      bestKnown = Map("q1" -> (0.45, 0.08), "q3" -> (1.0, 0.09)))
-    val results = Seq(
-      "q1_a" -> Bench.Measured(0.40, 3, stalled = false), // new best
-      "q2_b" -> Bench.Measured(0.9, 3, stalled = false), // worse: keep
-      "q5_e" -> Bench.Measured(0.2, 0, stalled = true)) // stalled: skip
-    val m = Bench.mergedBestKnown(Some(prior), Sf, results, 0.07)
-    assert(m("q1") == (0.40, 0.07)) // this run set a new best
-    assert(m("q2") == (0.5, 0.10)) // prior queries value survives
-    assert(m("q3") == (1.0, 0.09)) // prior best_known carries forward
-    assert(!m.contains("q4")) // stalled prior value is no prior
-    assert(!m.contains("q5")) // stalled current value is no best
-    // a different-SF prior seeds nothing
-    val other = Bench.mergedBestKnown(Some(prior),
-      "/root/testdata/sf0.001", results, 0.07)
-    assert(!other.contains("q3"))
-  }
-
-  test("a prior without cal_med seeds best_known only from its own " +
-      "best_known map (the calPair like-with-like rule)") {
-    // ADVICE r16: a queries-seeded entry stores the prior's
-    // normalizer; with no cal_med that would be a STARTUP cal, later
-    // compared against a steady-state median by reverifyLabel — the
-    // two families diverge ~60% on this host, enough to flip a label
-    val prior = Bench.PrevBench("BENCH_r9.json", Sf, 0.12,
-      Set.empty, Map("q1" -> 0.6, "q2" -> 0.5), calMed = None,
-      bestKnown = Map("q3" -> (1.0, 0.09)))
-    val m = Bench.mergedBestKnown(Some(prior), Sf, Nil, 0.07)
-    assert(!m.contains("q1") && !m.contains("q2"),
-      "queries of a pre-cal_med record must not seed best_known")
-    assert(m("q3") == (1.0, 0.09)) // its best_known still carries
-  }
-
-  test("upgradeSecondChance flips only re-run host-window labels, " +
-      "to the DISTINCT reproduced label (ADVICE r17)") {
-    val labels = Seq("q1" -> "host-window", "q2" -> "host-window",
-      "q3" -> "confirmed-vs-best")
-    val up = Bench.upgradeSecondChance(labels, Set("q1", "q3")).toMap
-    // q1: re-run AND still out of band in a fresh window -> a
-    // reproduced measurement, not a window — and distinguishable
-    // from a first-pass in-band confirmation
-    assert(up("q1") == "reproduced-vs-best")
-    // q2: flagged but not re-run (cap) -> label stands
-    assert(up("q2") == "host-window")
-    assert(up("q3") == "confirmed-vs-best")
-  }
-
-  test("fullReverifyLabels labels every reverified query " +
-      "(VERDICT r17 task 7)") {
-    val targets = Seq("q1_a", "q2_b", "q3_c", "q4_d")
-    val confirmed = Seq("q2_b", "q3_c")
-    val labels = Seq("q2" -> "host-window") // q3 has no best-known
-    val m = Bench.fullReverifyLabels(targets, confirmed, labels).toMap
-    assert(m == Map("q1" -> "rescued", "q2" -> "host-window",
-      "q3" -> "confirmed-no-prior", "q4" -> "rescued"))
-  }
-
-  test("buildSuspect applies the reverify rule to build bills (r18)") {
-    // 2.5x AND +0.25 s over the prior, host-adjusted
-    assert(Bench.buildSuspect(1.0, Some((0.3, 0.10)), 0.10))
-    assert(!Bench.buildSuspect(0.7, Some((0.3, 0.10)), 0.10),
-      "2.33x is under the 2.5x trigger")
-    assert(!Bench.buildSuspect(0.3, Some((0.1, 0.10)), 0.10),
-      "3x but only +0.2 s absolute — micro-build jitter")
-    // slower host now: the bar scales up
-    assert(!Bench.buildSuspect(1.0, Some((0.3, 0.10)), 0.15))
-    // faster host now never LOWERS the bar below the raw prior
-    assert(!Bench.buildSuspect(0.7, Some((0.3, 0.15)), 0.05))
-    // no prior -> never a suspect (the probe bracket still covers it)
-    assert(!Bench.buildSuspect(99.0, None, 0.10))
-  }
-
-  test("priorBuildBest folds per-tag minima with their own cal (r18)") {
-    val a = Bench.PrevBench("a", Sf, 0.12, Set.empty, Map.empty,
-      calMed = Some(0.08),
-      buildSecs = Map("tagX" -> 2.0, "tagY" -> 0.5))
-    val b = Bench.PrevBench("b", Sf, 0.10, Set.empty, Map.empty,
-      calMed = None, buildSecs = Map("tagX" -> 1.5))
-    val other = Bench.PrevBench("c", "/elsewhere", 0.10, Set.empty,
-      Map.empty, buildSecs = Map("tagZ" -> 9.0))
-    val m = Bench.priorBuildBest(Seq(a, b, other), Sf)
-    assert(m("tagX") == (1.5, 0.10)) // b's min, with b's startup cal
-    assert(m("tagY") == (0.5, 0.08)) // a's, with a's cal_med
-    assert(!m.contains("tagZ"), "different-SF priors adjudicate nothing")
-  }
-
-  test("currentRound is one past the newest official record; " +
-      "sidecarPriors folds rolling + round-stamped files") {
-    val mk = (total: Double, bk: String) =>
-      s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""sf":"$Sf","cal":0.12,"cal_med":0.08,""" +
-        s""""best_known":$bk,"stalled":[],"queries":{"q1":0.6}}"""
-    withBenchDir(
-      "BENCH_r15.json" -> mk(9.0, "{}"),
-      "BENCH_r16.json" -> mk(9.0, "{}"),
-      "BENCH_full_local.json" -> mk(8.0, """{"q1":[0.5,0.08]}"""),
-      "BENCH_full_r16.json" -> mk(8.5, """{"q1":[0.41,0.07]}"""),
-      "BENCH_full_r16_prev.json" -> mk(8.4, """{"q2":[1.2,0.07]}""")) {
-      dir =>
-        assert(Bench.currentRound(dir) == 17)
-        val ps = Bench.sidecarPriors(dir)
-        assert(ps.size == 3, s"got ${ps.map(_.name)}")
-        // every record's best_known is reachable for min-folding
-        val keys = ps.flatMap(_.bestKnown.keys).toSet
-        assert(keys == Set("q1", "q2"))
-    }
-  }
-
-  test("sidecar best_known round-trips through parseBenchFile") {
-    val line = s"""{"metric":"total","value":9.0,"unit":"sec",""" +
-      s""""sf":"$Sf","cal":0.12,"cal_med":0.08,""" +
-      """"best_known":{"q1":[0.45,0.08],"q3":[1.0,0.09]},""" +
-      """"stalled":[],"queries":{"q1":0.6}}"""
-    withBenchDir("BENCH_full_local.json" -> line) { dir =>
-      val Some(p) = Bench.sidecarPrevBench(dir)
-      assert(p.bestKnown == Map("q1" -> (0.45, 0.08), "q3" -> (1.0, 0.09)))
-      // the queries map is NOT polluted by best_known entries
-      assert(p.queries == Map("q1" -> 0.6))
-    }
-  }
-
-  test("calDisagreement flags a >15% normalizer split, not agreement " +
-      "(r15 verdict task 5)") {
-    // the r15 figures: cal 0.147 -> 0.125 (ratio 0.85) while cal_med
-    // 0.090 -> 0.061 (ratio 0.678) — 25% apart, flagged
-    val prior = Bench.PrevBench("BENCH_r14.json", Sf, 0.147,
-      Set.empty, Map.empty, calMed = Some(0.090))
-    assert(Bench.calDisagreement(0.125, Some(0.061), Some(prior), Sf))
-    // agreeing normalizers (both ~0.85): not flagged
-    assert(!Bench.calDisagreement(0.125, Some(0.0765), Some(prior), Sf))
-    // either median missing -> no basis, not flagged
-    assert(!Bench.calDisagreement(0.125, None, Some(prior), Sf))
-    val noMed = prior.copy(calMed = None)
-    assert(!Bench.calDisagreement(0.125, Some(0.061), Some(noMed), Sf))
-    assert(!Bench.calDisagreement(0.125, Some(0.061), None, Sf))
-    // a prior at a DIFFERENT scale factor adjudicates nothing — a
-    // local sf0.001 run must not self-flag against the sf0.1 record
-    assert(!Bench.calDisagreement(0.125, Some(0.061), Some(prior),
-      "/root/testdata/sf0.001"))
-  }
 
   test("assembleLine fits the tail budget at 180+ queries, keeps prev") {
     val results = (1 to 185).map { i =>
@@ -571,5 +80,69 @@ class BenchProtocolSpec extends AnyFunSuite {
     val small = Bench.assembleLine(results.take(20), 2.0, 0.15, Sf,
       "[]", prev)
     assert(small.contains("\"q001\":0.01") && !small.contains("q_total"))
+  }
+
+  test("every shedding level of assembleLine is one JSON object with " +
+      "the header fields") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.databind.DeserializationFeature
+        .FAIL_ON_TRAILING_TOKENS)
+    // the level a line was assembled at: (decimals, queries reported),
+    // read back from the parsed line; q_reported is absent when the
+    // whole suite is reported, and the fallback reports no queries
+    def levelOf(line: String): (Int, Int) = {
+      val o = mapper.readTree(line)
+      assert(o.isObject, line)
+      Seq("metric", "value", "unit", "sf", "cal", "stalled", "queries")
+        .foreach(k => assert(o.has(k), s"no $k in $line"))
+      assert(o.get("stalled").isArray && o.get("queries").isObject, line)
+      val qs = o.get("queries")
+      val decimals = qs.fieldNames.asScala
+        .map(k => qs.get(k).asText.dropWhile(_ != '.').drop(1).length)
+        .maxOption.getOrElse(0)
+      val reported = Option(o.get("q_reported")).map(_.asInt)
+        .getOrElse(qs.size)
+      (decimals, reported)
+    }
+    // each value carries a nonzero third decimal, so the decimals a
+    // line kept show in its widest value; stalled names eat the budget
+    // so that the later levels are reached
+    val levels = (for {
+      n <- 20 to 300 by 5
+      k <- 0 to 270 by 10
+    } yield {
+      val results = (1 to n).map(i =>
+        f"q$i%03d_op" -> Bench.Measured(1.111 + i / 1000.0, 3,
+          stalled = false))
+      val stalled = (1 to k).map(i => "\"" + f"q$i%03d" + "\"")
+        .mkString("[", ",", "]")
+      val line = Bench.assembleLine(results, 42.0, 0.15, Sf, stalled,
+        ""","cal_med":0.1,"memo_build_s":1.5,"memo_builds_n":3""")
+      assert(line.length <= 1900 || levelOf(line)._2 == 0)
+      levelOf(line) match {
+        case (d, q) if q == n => (d, Int.MaxValue)
+        case lv => lv
+      }
+    }).toSet
+    assert(levels == Set((3, Int.MaxValue), (2, Int.MaxValue),
+      (1, Int.MaxValue), (2, 130), (2, 110), (2, 90), (2, 70), (2, 50),
+      (2, 30), (0, 0)))
+    // a shed line points at the sidecar its scale factor writes
+    val local = Bench.assembleLine((1 to 185).map(i =>
+      f"q$i%03d_op" -> Bench.Measured(1.111 + i / 1000.0, 3,
+        stalled = false)), 42.0, 0.15, "/root/testdata/sf0.001", "[]", "")
+    assert(mapper.readTree(local).get("queries_full").asText ==
+      "BENCH_full_local.sf0.001.json", local)
+  }
+
+  test("SparkEntry.select: no names is every query; an unknown name " +
+      "is refused with the valid names") {
+    val all = SparkEntry.queries.keys.toSeq.sorted
+    assert(SparkEntry.select(Nil).map(_.map(_._1)) == Right(all))
+    assert(SparkEntry.select(Seq("q01_pricing_summary")).map(_.map(_._1))
+      == Right(Seq("q01_pricing_summary")))
+    val Left(msg) = SparkEntry.select(Seq("q01_pricing_summary", "q209"))
+    assert(msg.startsWith("unknown query q209; queries: "), msg)
+    assert(all.forall(msg.contains), msg)
   }
 }

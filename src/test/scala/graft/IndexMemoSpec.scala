@@ -193,48 +193,18 @@ class IndexMemoSpec extends SparkTestBase {
     val tag = "specBuildCount"
     def count() = graft.ops.IndexMemo.buildCounts.getOrElse(tag, 0L)
     val c0 = count()
+    val nanos0 = graft.ops.IndexMemo.buildNanos
     graft.ops.IndexMemo.getOrBuild[org.apache.spark.sql.DataFrame](
       tag, "", Seq(df)) { (df, Seq.empty) }
     assert(count() == c0 + 1, "a build must increment its tag's count")
+    assert(graft.ops.IndexMemo.buildNanos > nanos0,
+      "an executed build must raise the cumulative build nanos")
     graft.ops.IndexMemo.getOrBuild[org.apache.spark.sql.DataFrame](
       tag, "", Seq(df)) { (df, Seq.empty) }
     assert(count() == c0 + 1, "a memo hit must not move the count")
     graft.ops.IndexMemo.getOrBuild[org.apache.spark.sql.DataFrame](
       tag, "p2", Seq(df)) { (df, Seq.empty) }
     assert(count() == c0 + 2, "new params are a distinct build")
-  }
-
-  test("evictTag releases the tag's pins and the live bill re-prices " +
-      "on rebuild while the cumulative keeps both builds (r18)") {
-    val df = Seq(1L, 2L, 3L).toDF("x")
-    val tag = "specEvictLive"
-    def liveOf = graft.ops.IndexMemo.liveBuildNanosByTag.getOrElse(tag, 0L)
-    val before = pinnedIds
-    val cum0 = graft.ops.IndexMemo.buildNanos
-    graft.ops.IndexMemo.getOrBuild[org.apache.spark.sql.DataFrame](
-      tag, "", Seq(df)) {
-      val p = df.persist(); p.count(); (p, Seq(p))
-    }
-    val live1 = liveOf
-    assert(live1 > 0, "a live entry must carry its build's wall bill")
-    val built = pinnedIds -- before
-    assert(built.nonEmpty, "build should pin a block")
-    graft.ops.IndexMemo.evictTag(tag)
-    assert(pinnedIds.intersect(built).isEmpty,
-      "evictTag must release the tag's pinned blocks")
-    assert(liveOf == 0L, "an evicted entry must leave the live bill")
-    val cum1 = graft.ops.IndexMemo.buildNanos
-    assert(cum1 > cum0, "the cumulative bill keeps the evicted build")
-    // rebuild: a NEW live bill, cumulative bills both executions
-    graft.ops.IndexMemo.getOrBuild[org.apache.spark.sql.DataFrame](
-      tag, "", Seq(df)) {
-      val p = df.persist(); p.count(); (p, Seq(p))
-    }
-    assert(liveOf > 0)
-    assert(graft.ops.IndexMemo.buildNanos > cum1,
-      "a rebuild after eviction is a second executed build")
-    assert(graft.ops.IndexMemo.buildCounts(tag) == 2L)
-    graft.ops.IndexMemo.evictTag(tag)
   }
 
   test("taskClock deltas land on the building tag (r18)") {
@@ -287,34 +257,5 @@ class IndexMemoSpec extends SparkTestBase {
     val grown = pinnedIds -- after1
     assert(grown.isEmpty,
       s"basket memo storage grew across repeated calls: new ids $grown")
-  }
-
-  test("serving bill: live <= cumulative; eviction never leaves a " +
-      "tag unbuilt (VERDICT r18 task 8)") {
-    import graft.ops.IndexMemo
-    import org.apache.spark.sql.DataFrame
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "t")
-    val tag = "memoSpecLiveBill"
-    IndexMemo.evictTag(tag)
-    var builds = 0
-    def call(): DataFrame =
-      IndexMemo.getOrBuild[DataFrame](tag, "", Seq(df)) {
-        builds += 1
-        val p = df.persist(); p.count(); (p, Seq(p))
-      }
-    call(); call()
-    assert(builds == 1, "second call must be a memo hit")
-    assert(IndexMemo.liveBuildNanosByTag.contains(tag))
-    // evicting a suspect tag removes its serving-bill entry, and the
-    // next getOrBuild REBUILDS it — the tag is never left unbuilt
-    IndexMemo.evictTag(tag)
-    assert(!IndexMemo.liveBuildNanosByTag.contains(tag))
-    call()
-    assert(builds == 2, "post-eviction call must rebuild")
-    assert(IndexMemo.liveBuildNanosByTag.contains(tag))
-    // the serving bill prices live entries at the min executed wall,
-    // so it can never exceed the honest cumulative bill
-    assert(IndexMemo.liveBuildNanos <= IndexMemo.buildNanos)
-    IndexMemo.evictTag(tag)
   }
 }
