@@ -25,9 +25,9 @@ import scala.collection.mutable.ArrayBuffer
   * recorded 173 s for a suite that re-ran clean at 22 s). A stall window
   * can span all three timed runs of consecutive queries, so best-of-N
   * alone cannot save the record. Every timed run is bracketed by a
-  * calibration probe — a fixed 32-partition job whose clean time is
-  * measured at startup; if either adjacent probe exceeds 8x the calibrated
-  * baseline (min 0.5 s), the host was stalling in that window and the run
+  * calibration probe — a fixed 32-partition job; if either adjacent probe
+  * exceeds 8x the steady-state probe time ([[probeLimit]], min 0.5 s), the
+  * host was stalling in that window and the run
   * is discarded and retried. A probe that finds the host mid-stall waits
   * (bounded by a global stall budget) for the window to pass before the
   * next timed run. Queries that exhaust their attempts without a single
@@ -78,6 +78,17 @@ object Bench {
     * host-pause-inflated and the query belongs in the JSON's stalled list.
     */
   final case class Measured(best: Double, cleanRuns: Int, stalled: Boolean)
+
+  /** The stall bracket's limit over every probe taken since warm-up: 8x
+    * the steady-state probe time, min 0.5 s. The steady time is the
+    * fastest probe so far: JIT warm-up only shortens a probe and a host
+    * stall only lengthens one, so the running minimum falls to the steady
+    * time within the first few queries and no stall can loosen it. The
+    * startup calibration alone is taken mid-JIT: an sf0.001 run read it
+    * at 0.285 s against a suite median of 0.109 s, which flagged a stall
+    * only at 21x the steady probe. */
+  def probeLimit(probes: Iterable[Double]): Double =
+    math.max(0.5, 8 * probes.min)
 
   /** Collect timed runs until `wantClean` of them are bracketed by clean
     * calibration probes, up to `maxAttempts` runs total. `run` returns the
@@ -170,7 +181,6 @@ object Bench {
     def runMedian(): Option[Double] =
       if (probeLog.size < 50) None
       else { val sorted = probeLog.sorted; Some(sorted(sorted.size / 2)) }
-    val probeLimit = math.max(0.5, calibration * 8)
 
     // Global bound on time spent waiting for stall windows to pass, so a
     // pathologically-stalling host degrades to flagged-raw numbers instead
@@ -178,12 +188,12 @@ object Bench {
     var stallBudget = 240.0
     def probeOk(): Boolean = {
       var p = probe()
-      while (p > probeLimit && stallBudget > 0) {
+      while (p > probeLimit(probeLog) && stallBudget > 0) {
         stallBudget -= p + 1.0
         Thread.sleep(1000)
         p = probe()
       }
-      p <= probeLimit
+      p <= probeLimit(probeLog)
     }
 
     def onceOf(name: String, fn: SparkEntry.Q)(): Double = {

@@ -10,7 +10,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    runtime re-planning is what absorbs the skew and size estimates
   *    no static plan survives at 100 TB. The salted operators in
   *    [[ops.Skew]] remain for keys hot enough to beat even AQE's
-  *    splitting.
+  *    splitting. The one exception is a [[cut]] whose plan has no
+  *    shuffle (a fixpoint round against hash-pinned state): it runs
+  *    its static plan, since AQE would have nothing to re-plan (see
+  *    [[checkpoint]]).
   *  - `spark.sql.shuffle.partitions`: core count locally; on a
   *    cluster size it to ~2-3x total executor cores and let AQE
   *    coalesce down — partitions must be small enough to fit executor
@@ -183,7 +186,15 @@ object GraftSession {
     * executed plan's collected metrics once the checkpoint returns, so
     * no aggregate job runs over the cut. The observation sits on the
     * top operator of the round's final stage, so its metrics count
-    * each row once. */
+    * each row once.
+    *
+    * The cut runs [[cutPlan]]'s plan: planned once with exchanges
+    * inserted, and run adaptively only when that plan has a shuffle.
+    * A typical round (a broadcast-gated join against a cache pinned by
+    * hash, then an aggregate that needs no exchange) has none, so it
+    * pays no adaptive loop, and its `LogicalRDD` keeps the static
+    * plan's output partitioning. The caller's session settings are
+    * neither read for this nor changed. */
   private def checkpoint[T](ds: Dataset[T],
       witnesses: Seq[Column]): (Dataset[T], Seq[Long]) = {
     val s = ds.sparkSession
@@ -194,9 +205,10 @@ object GraftSession {
     val observed =
       if (witnesses.isEmpty) ds
       else ds.observe(name, witnesses.head, witnesses.tail: _*)
+    val planned = cutPlan(observed)
     val out =
-      if (reliable) observed.checkpoint() else observed.localCheckpoint()
-    val qe = observed.queryExecution
+      if (reliable) planned.checkpoint() else planned.localCheckpoint()
+    val qe = planned.queryExecution
     val values =
       if (witnesses.isEmpty) Nil
       else {
@@ -212,6 +224,12 @@ object GraftSession {
     }))
     (out, values)
   }
+
+  /** `ds` as a cut executes it: its static plan when that plan has no
+    * shuffle, else its adaptive plan. `Inspect rounds` explains this
+    * plan. */
+  private[graft] def cutPlan[T](ds: Dataset[T]): Dataset[T] =
+    org.apache.spark.sql.execution.ShuffleGatedExecution(ds)
 
   /** The ONE place the right-sizing policy lives (~64k rows per
     * partition, capped at the session's shuffle partitions so cluster

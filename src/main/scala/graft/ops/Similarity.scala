@@ -195,7 +195,7 @@ object Similarity {
     * spread you actually measure is the accuracy bill for running
     * downstream dedup/ANN at outDim/inDim of the vector cost. Pairs
     * are (id, id + sampleMod) anchor joins — no window, no self-join;
-    * projections and distances fold in index order (each a literal
+    * projections and distances fold in index order (each a
     * left-assoc chain, mirrored term-for-term in the oracle), and the
     * per-pair ratio is nano-quantized to BIGINT before the sum, so
     * mean/min/max are partition-order invariant and hash-exact. */
@@ -209,21 +209,26 @@ object Similarity {
         col("embedding").as("ea"))
       .join(anchors.select((col("vec_id") - sampleMod).as("a_id"),
         col("embedding").as("eb")), "a_id")
-    def el(e: String, i: Int) =
-      element_at(col(e), i + 1).cast("double")
     // three explicit stages so every float op has one site, mirrored
     // term-for-term by the oracle's CTE chain: element diffs, then
     // sign-projected diffs (projection is linear, so projecting the
     // DIFF is the cheap and numerically identical formulation), then
-    // the two squared norms
-    val dd = pairs.select(col("a_id") +:
-      (0 until inDim).map(i => (el("ea", i) - el("eb", i)).as(s"d$i")): _*)
+    // the two squared norms. The diffs are one array and each sum is
+    // one fold over it: as 64 diff and 16x64 term columns the stage's
+    // generated method outgrew the JVM's 64 KB limit and fell back to
+    // interpreted execution on every planning. Each fold starts from
+    // its first term and adds the rest in index order, the oracle's
+    // left-associated chain.
+    def chain(terms: Column): Column =
+      aggregate(slice(terms, 2, inDim - 1), element_at(terms, 1),
+        (acc, t) => acc + t)
+    val dd = pairs.select(col("a_id"), zip_with(col("ea"), col("eb"),
+      (a, b) => a.cast("double") - b.cast("double")).as("d"))
     val pj = dd.select(col("a_id") +:
       ((0 until outDim).map { j =>
-        (0 until inDim).map(i => col(s"d$i") * lit(w(i)(j)))
-          .reduce(_ + _).as(s"p$j")
-      } :+ (0 until inDim).map(i => col(s"d$i") * col(s"d$i"))
-        .reduce(_ + _).as("st")): _*)
+        chain(zip_with(col("d"), typedLit(w.map(_(j))),
+          (x, sign) => x * sign)).as(s"p$j")
+      } :+ chain(transform(col("d"), x => x * x)).as("st")): _*)
     pj
       .select(col("a_id"),
         (0 until outDim).map(j => col(s"p$j") * col(s"p$j"))

@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.col
 
@@ -25,9 +26,11 @@ import graft.ops.{Graph, IndexMemo}
   *   - `rounds [family...]` explains one steady-state round of each
   *     fixpoint family (default: all of [[Families]]) over the real
   *     pinned inputs, with the per-round broadcast choice the operator
-  *     makes. A query-level explain cannot show these: every round
-  *     passes through a lineage cut, so the query's plan reads an
-  *     opaque checkpoint scan.
+  *     makes and whether the round's cut runs adaptively. The plan
+  *     explained is the one the cut executes ([[GraftSession.cutPlan]]).
+  *     A query-level explain cannot show these: every round passes
+  *     through a lineage cut, so the query's plan reads an opaque
+  *     checkpoint scan.
   *
   * Run from the repo root: `sbt "runMain graft.tools.Inspect plan
   * q01_pricing_summary"`. Per-query timing is `sbt "runMain graft.Bench
@@ -101,7 +104,7 @@ object Inspect {
   private def header(title: String): Unit =
     println(s"\n========== $title ==========")
 
-  /** Runs `df`, so the formatted plan is AQE's final one. */
+  /** Runs `df`, so an adaptive plan prints as AQE's final one. */
   private def explainRun(df: DataFrame): Unit = {
     df.collect()
     df.explain("formatted")
@@ -135,8 +138,10 @@ object Inspect {
     * rounds all see a cut round output; the initial state is a
     * synthetic seed), then explain the NEXT round's expression — both
     * half-rounds for HITS. The header names the node count and the
-    * state side the operator's broadcast gate picks for it. What to
-    * look for: whether the per-round aggregation plans an Exchange between
+    * state side the operator's broadcast gate picks for it, and
+    * whether the round's cut runs adaptively or its static plan (no
+    * shuffle for AQE to re-plan). What to look for: whether the
+    * per-round aggregation plans an Exchange between
     * its partial and final HashAggregate (none when the pinned edge
     * table's hash partitioning reaches it through the broadcast join),
     * and that the state-side Exchange moves node-sized rows, never
@@ -148,8 +153,20 @@ object Inspect {
       val side =
         if (Graph.broadcastsRoundSide(nNodes)) "broadcast"
         else "shuffled (above the broadcast bound)"
-      header(s"$family: $nNodes nodes, state side $side")
-      rounds.foreach { case (label, df) =>
+      val cuts = rounds.map { case (label, df) =>
+        (label, GraftSession.cutPlan(df))
+      }
+      val modes = cuts.map { case (label, df) =>
+        val adaptive = df.queryExecution.executedPlan
+          .isInstanceOf[AdaptiveSparkPlanExec]
+        label -> (if (adaptive) "adaptive" else "static")
+      }
+      val cut = modes.map(_._2).distinct match {
+        case Seq(mode) => s"round cut $mode"
+        case _ => modes.map { case (l, m) => s"$l cut $m" }.mkString(", ")
+      }
+      header(s"$family: $nNodes nodes, $cut, state side $side")
+      cuts.foreach { case (label, df) =>
         println(s"-- $label")
         explainRun(df)
       }

@@ -59,6 +59,20 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(calls == 6)
   }
 
+  test("probeLimit is 8x the steady probe time: the fastest probe so far") {
+    // an sf0.001 run's mid-JIT startup probes, then its steady ones
+    val startup = Seq(0.31, 0.285, 0.29)
+    val steady = startup ++ Seq(0.15, 0.112, 0.109, 0.11)
+    assert(Bench.probeLimit(startup) == 8 * 0.285)
+    assert(Bench.probeLimit(steady) == 8 * 0.109)
+    // a 1 s probe is a stall against the steady time (keyed on the
+    // startup figure, only a probe above 2.28 s was one)
+    assert(1.0 > Bench.probeLimit(steady))
+    // a stalled probe never loosens the limit
+    assert(Bench.probeLimit(steady :+ 4.2) == Bench.probeLimit(steady))
+    assert(Bench.probeLimit(Seq(0.02, 0.03)) == 0.5)
+  }
+
   private val Sf = "/root/testdata/sf0.1"
 
   test("assembleLine fits the tail budget at 180+ queries, keeps prev") {

@@ -62,6 +62,35 @@ class InspectSpec extends SparkTestBase {
     }
   }
 
+  test("rounds says whether each round's cut runs adaptively and " +
+      "explains the plan that cut executes") {
+    val (code, out, _) = inspect("rounds", "components", "lpa", "pagerank")
+    assert(code == 0)
+    val secs = sections(out).toMap
+    assert(secs.size == 3)
+    // the root node of each explained plan (cached inputs print their
+    // own adaptive build plans further down)
+    def roots(body: String): Seq[String] = body.split("\n").toSeq
+      .sliding(2).collect { case Seq(h, root)
+        if h.trim == "== Physical Plan ==" => root.trim }.toSeq
+    secs.foreach { case (title, body) =>
+      val adaptive = roots(body).map(_.startsWith("AdaptiveSparkPlan"))
+      assert(adaptive.nonEmpty, s"$title:\n$body")
+      if (title.contains("round cut static"))
+        assert(!adaptive.contains(true), s"$title:\n$body")
+      else {
+        assert(title.contains("round cut adaptive"), title)
+        assert(!adaptive.contains(false), s"$title:\n$body")
+      }
+    }
+    // both rounds join a broadcast state against an edge table pinned
+    // by hash on the aggregation key: no shuffle, so no adaptive loop
+    Seq("components", "pagerank").foreach { f =>
+      assert(secs.keys.exists(t => t.startsWith(s"$f:") &&
+        t.contains("round cut static")), secs.keys)
+    }
+  }
+
   test("an unknown subcommand, query or family fails with the valid " +
       "choices and leaves the session usable") {
     val cases = Seq(

@@ -472,6 +472,40 @@ class SimilaritySpec extends SparkTestBase {
     assert(row.getDouble(2) > 0.0)
   }
 
+  test("jlDistortion compiles as whole-stage code and matches the " +
+      "oracle's folds term for term") {
+    val d = sf("embeddings")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val row =
+      try Similarity.jlDistortion(spark, d).head()
+      finally spark.conf.unset("spark.sql.codegen.fallback")
+    val emb = graft.Tables.embeddings(spark, d)
+      .select($"vec_id", $"embedding").as[(Long, Array[Float])]
+      .collect().toMap
+    val w = Similarity.jlSigns(64, 16)
+    def round(x: Double, scale: Int): Double =
+      BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
+    // jlDistortionSql's chains: left-associated, in index order
+    val rq = emb.keys.filter(_ % 7 == 0).toSeq.sorted
+      .flatMap(a => emb.get(a + 7).map(emb(a) -> _))
+      .map { case (ea, eb) =>
+        val dd = Array.tabulate(64)(i => ea(i).toDouble - eb(i).toDouble)
+        val sp = (0 until 16).map { j =>
+          val p = (0 until 64).map(i => dd(i) * w(i)(j)).reduce(_ + _)
+          p * p
+        }.reduce(_ + _)
+        (sp, (0 until 64).map(i => dd(i) * dd(i)).reduce(_ + _))
+      }
+      .collect { case (sp, st) if st > 0.0 =>
+        round((sp / 16.0) / st * 1e9, 0).toLong }
+    assert(rq.nonEmpty)
+    assert(row.getLong(0) == rq.size.toLong)
+    assert(row.getDouble(1) ==
+      round(rq.sum.toDouble / (rq.size.toDouble * 1e9), 6))
+    assert(row.getDouble(2) == round(rq.min.toDouble / 1e9, 6))
+    assert(row.getDouble(3) == round(rq.max.toDouble / 1e9, 6))
+  }
+
   test("anchorCross chunked fallback is row-identical to the broadcast " +
       "path") {
     // force the chunked path with a tiny bound: the union of disjoint

@@ -37,11 +37,17 @@ abstract class SparkTestBase extends AnyFunSuite {
     try body
     finally {
       sc.clearJobGroup()
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      drainListenerBus()
       sc.removeSparkListener(l)
     }
     n.get
+  }
+
+  /** Blocks until every event posted so far reached its listeners. */
+  protected def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
   }
 }
 
