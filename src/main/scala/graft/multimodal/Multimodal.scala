@@ -544,7 +544,7 @@ object Multimodal {
     * a container-level hash misses by construction). Frames hash
     * partition-locally during extraction, the shuffle carries only
     * (hash, id) pairs, and hash buckets above `maxBucketSize` are
-    * dropped like every banded-join cap here (a corpus of black
+    * dropped ([[graft.ops.Dedup.cappedBucketPairs]]: a corpus of black
     * frames would otherwise quadratically explode one bucket); the
     * pair count is bounded by bucket² per shared hash, never corpus².
     * Emits (id_a, id_b, shared_frames), id_a < id_b. */
@@ -556,16 +556,8 @@ object Multimodal {
         (f.media_id, Codecs.contentHash(f.frame))))
       .toDF("media_id", "fhash")
       .distinct() // a frame repeated WITHIN one video counts once
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("fhash"))
-    val capped = hashed
-      .withColumn("bsz", count(lit(1)).over(w))
-      .filter(col("bsz") <= maxBucketSize)
-      .drop("bsz")
-    capped.select(col("fhash"), col("media_id").as("id_a"))
-      .join(capped.select(col("fhash"), col("media_id").as("id_b")),
-        Seq("fhash"))
-      .filter(col("id_a") < col("id_b"))
+    graft.ops.Dedup.cappedBucketPairs(hashed, Seq("fhash"), "media_id",
+        maxBucketSize, "video-frames")
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("shared_frames"))
       .filter(col("shared_frames") >= minShared)
@@ -616,20 +608,10 @@ object Multimodal {
       .select(col("media_id"), col("ahash"), explode(bands).as("bk"))
       .select(col("media_id"), col("ahash"),
         col("bk.band").as("band"), col("bk.key").as("key"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("key"))
-    val capped = banded
-      .withColumn("bsz", count(lit(1)).over(w))
-      .filter(col("bsz") <= maxBucketSize)
-      .drop("bsz")
-    val a = capped.select(col("band"), col("key"),
-      col("media_id").as("id_a"), col("ahash").as("h_a"))
-    val b = capped.select(col("band"), col("key"),
-      col("media_id").as("id_b"), col("ahash").as("h_b"))
-    a.join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
+    graft.ops.Dedup.cappedBucketPairs(banded, Seq("band", "key"),
+        "media_id", maxBucketSize, "ahash", Seq("ahash"))
       .select(col("id_a"), col("id_b"),
-        expr("bit_count(h_a ^ h_b)").cast("long").as("hamming"))
+        expr("bit_count(ahash_a ^ ahash_b)").cast("long").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
       .orderBy(col("id_a"), col("id_b"))

@@ -680,33 +680,26 @@ object Curation {
       rowsPerBand: Int = 2, maxBucketSize: Int = 1000): DataFrame = {
     val raw = minhashMd5(s, d, numHashes)
     val bands = numHashes / rowsPerBand
-    // Memoized CAPPED banded key table: the signatures, the band keys,
-    // and the degenerate-bucket cap ([[Dedup.lshNearDupPairsFromHashes]]'s
-    // guard — a bucket of B members is B^2/2 candidate pairs) are all
-    // build-once work; per-call cost is just the equi-join over the
-    // cached fixed-width keys. The cap is mirrored in the DuckDB
-    // oracle, so the guard itself is hash-checked; no sf0.01 bucket
-    // approaches it, so the oracle result is the uncapped one.
-    val banded = IndexMemo.getOrBuild[DataFrame]("md5BandIdx",
+    // Memoized capped pair rows (one per shared band): the
+    // signatures, the band keys and the [[Dedup.cappedBucketPairs]]
+    // self-join are all build-once work; per call, the band count is
+    // one aggregation over the cached fixed-width pairs. The cap is
+    // mirrored in the DuckDB oracle, so the guard itself is
+    // hash-checked; no sf0.01 bucket approaches it, so the oracle
+    // result is the uncapped one.
+    val shared = IndexMemo.getOrBuild[DataFrame]("md5BandIdx",
       s"$numHashes,$rowsPerBand,$maxBucketSize", Seq(raw)) {
-      val idx = raw.select(col("doc_id"),
+      val pairs = Dedup.cappedBucketPairs(raw.select(col("doc_id"),
         posexplode(array((0 until bands).map { b =>
           md5(concat_ws("|",
             lit(b.toString) +:
               (0 until rowsPerBand).map(r => col(s"sig_${b * rowsPerBand + r}")): _*))
-        }: _*)).as(Seq("band", "bkey")))
-        .withColumn("bsz", count(lit(1)).over(
-          Window.partitionBy(col("band"), col("bkey"))))
-        .filter(col("bsz") <= maxBucketSize)
-        .select(col("doc_id"), col("band"), col("bkey"))
+        }: _*)).as(Seq("band", "bkey"))),
+        Seq("band", "bkey"), "doc_id", maxBucketSize, "md5-band")
         .persist()
-      (idx, Seq(idx))
+      (pairs, Seq(pairs))
     }
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+    shared.groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_bands"))
   }
 
@@ -730,8 +723,9 @@ object Curation {
     * numHashes+1 times on the 32M-gram char corpus at sf0.1.
     *
     * Scale shape, mirroring the xxhash64 path: the banded join ships
-    * (doc_id, band, bkey) only, degenerate buckets are capped (windowed
-    * bsz guard, mirrored in the oracle), and the verify joins the
+    * (doc_id, band, bkey) only, degenerate buckets are capped
+    * ([[Dedup.cappedBucketPairs]], mirrored in the oracle), and the
+    * verify joins the
     * CANDIDATE list back onto per-doc BOUNDED key sketches (~#docs
     * rows, array payload <= `kmvBuckets` regardless of document
     * length; intersection via codegen'd array_intersect) instead of
@@ -804,32 +798,18 @@ object Curation {
         .agg(sigs.head,
           (sigs.tail :+ collect_set(col("mh")).as("hs")): _*)
         .persist()
-      val bandedIdx = combined.select(col("doc_id"),
+      // the deduplicated candidate list is the build-once/probe-many
+      // artifact (bounded by the bucket cap), built, measured and
+      // released like Dedup.buildLshPairIndex's
+      val built = Dedup.materializeCappedPairs(combined.select(col("doc_id"),
         posexplode(array((0 until bands).map { b =>
           md5(concat_ws("|",
             lit(b.toString) +:
               (0 until rowsPerBand).map(r =>
                 col(s"sig_${b * rowsPerBand + r}").cast("string")): _*))
-        }: _*)).as(Seq("band", "bkey")))
-        .withColumn("bsz", count(lit(1)).over(
-          Window.partitionBy(col("band"), col("bkey"))))
-        .filter(col("bsz") <= maxBucketSize)
-        .select(col("doc_id"), col("band"), col("bkey"))
-        .persist()
-      // the deduplicated candidate list is the build-once/probe-many
-      // artifact (bounded by the bucket cap); materialize it, measure
-      // it, and drop the banded intermediates — exactly the
-      // Dedup.buildLshPairIndex lifecycle
-      val p = bandedIdx.as("a")
-        .join(bandedIdx.as("b"),
-          col("a.band") === col("b.band") &&
-            col("a.bkey") === col("b.bkey") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
-        .persist()
-      val n = p.count()
-      bandedIdx.unpersist()
+        }: _*)).as(Seq("band", "bkey"))),
+        Seq("band", "bkey"), "doc_id", maxBucketSize, s"md5-lsh[$seed]",
+        pins = Seq(combined))(_.distinct())
       // per-DOC key sets (corpus-cardinality rows with a bounded array
       // payload), not an exploded key table: the verify step joins the
       // small candidate list back to ~#docs rows, never re-scanning
@@ -837,7 +817,8 @@ object Curation {
       // shape as the xxhash64 path (Dedup.lshNearDupPairsFromHashes)
       val gs = combined.select(col("doc_id"), col("hs"),
         size(col("hs")).cast("long").as("n"))
-      ((p, gs, java.lang.Long.valueOf(n)), Seq(p, combined))
+      ((built.pairs, gs, java.lang.Long.valueOf(built.rows)),
+        Seq(built.pairs, combined))
     }
     // broadcast the candidate list when its MEASURED size allows, so
     // the verify joins never shuffle the per-doc set table (its array
@@ -1197,37 +1178,29 @@ object Curation {
       maxHamming: Int = 3, maxBucketSize: Int = 1000,
       seed: String = ""): DataFrame = {
     val raw = simhashMd5(s, d, seed)
-    // Memoized CAPPED chunk table: sketching, chunk explosion, and the
-    // degenerate-bucket cap (the same guard as
-    // [[Dedup.simHashNearDups]]) happen once; per-call cost is the
-    // equi-join over cached fixed-width keys plus the popcount filter.
-    // Because the cap is plain windowed arithmetic, the DuckDB oracle
-    // mirrors IT too, so the scale guard itself is hash-checked (at
-    // sf0.01 no bucket approaches the cap; results are identical to
-    // the uncapped join).
-    val chunked = IndexMemo.getOrBuild[DataFrame]("simhash60Chunks",
+    // Memoized capped pair rows (one per shared chunk, both sketches
+    // carried): sketching, chunk explosion and the
+    // [[Dedup.cappedBucketPairs]] self-join happen once; per call, one
+    // dedup of the cached pairs plus the popcount filter. Because the
+    // cap is plain windowed arithmetic, the DuckDB oracle mirrors IT
+    // too, so the scale guard itself is hash-checked (at sf0.01 no
+    // bucket approaches the cap; results are identical to the uncapped
+    // join).
+    val shared = IndexMemo.getOrBuild[DataFrame]("simhash60Chunks",
       s"$maxBucketSize,$seed", Seq(raw)) {
-      val idx = raw.select(col("doc_id"), col("simhash60"),
+      val pairs = Dedup.cappedBucketPairs(raw.select(col("doc_id"),
+        col("simhash60"),
         posexplode(transform(sequence(lit(0), lit(3)),
           c => call_function("shiftright", col("simhash60"), c * 15)
             .bitwiseAND(0x7FFF)))
-          .as(Seq("chunk", "ckey")))
-        .withColumn("bsz", count(lit(1)).over(
-          Window.partitionBy(col("chunk"), col("ckey"))))
-        .filter(col("bsz") <= maxBucketSize)
-        .select(col("doc_id"), col("simhash60"), col("chunk"), col("ckey"))
-        .persist()
-      (idx, Seq(idx))
+          .as(Seq("chunk", "ckey"))),
+        Seq("chunk", "ckey"), "doc_id", maxBucketSize, s"simhash60[$seed]",
+        Seq("simhash60")).persist()
+      (pairs, Seq(pairs))
     }
-    val l = chunked.select(col("chunk"), col("ckey"),
-      col("doc_id").as("id_a"), col("simhash60").as("sh_a"))
-    val r = chunked.select(col("chunk"), col("ckey"),
-      col("doc_id").as("id_b"), col("simhash60").as("sh_b"))
-    l.join(r, Seq("chunk", "ckey"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("hamming",
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long"))
+    shared.dropDuplicates("id_a", "id_b")
+      .withColumn("hamming", bit_count(
+        col("simhash60_a").bitwiseXOR(col("simhash60_b"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }

@@ -167,14 +167,10 @@ object Dedup {
   /** As [[lshNearDupPairs]], over pre-exploded (id, h) shingle hashes —
     * the entry point for codegen'd shingle producers.
     *
-    * Degenerate-bucket guard: a bucket of B docs yields B^2/2 candidate
-    * pairs, and web corpora reliably produce degenerate buckets
-    * (boilerplate pages, empty documents). Buckets larger than
-    * `maxBucketSize` are dropped from candidate generation — their
-    * members can still pair through their other (bands-1) buckets, the
-    * standard production-LSH cap. The drop is logged, never silent:
-    * the banded table is persisted (fixed-width rows, bands x corpus),
-    * so the overflow count is one cheap cached aggregation.
+    * Degenerate-bucket guard: the [[cappedBucketPairs]] cap at
+    * `maxBucketSize`, the standard production-LSH cap; members of a
+    * dropped bucket can still pair through their other (bands-1)
+    * buckets.
     *
     * Lifecycle: the signature index and the (bounded) candidate-pair
     * list are the build-once/probe-many artifacts — memoized per
@@ -185,8 +181,9 @@ object Dedup {
     * table is unpersisted as soon as the pair list materializes.
     *
     * Verification joins move the shingle sets, so which side builds
-    * matters: the bucket-size aggregation yields an exact pre-distinct
-    * bound on candidate pairs, and the pair side is broadcast only
+    * matters: the build observes an exact pre-distinct bound on
+    * candidate pairs ([[materializeCappedPairs]]), and the pair side
+    * is broadcast only
     * while that bound is at most `maxBroadcastPairs`; past that the
     * verify join falls back to a shuffled equi-join on id — linear,
     * skew handled by AQE. */
@@ -227,51 +224,134 @@ object Dedup {
       rowsPerBand: Int, tag: String, maxBucketSize: Int)
       : (LshPairIndex, Seq[DataFrame]) = {
     val index = signatureIndex(exploded, bands * rowsPerBand).persist()
-    val wb = Window.partitionBy(col("band"), col("bucket"))
-    val sized = bandKeys(index, bands, rowsPerBand, tag)
-      .select(col("id"), col("band"), col("bucket")) // sh pruned out
-      .withColumn("bsz", count(lit(1)).over(wb))
-      .persist()
+    // only the index and the pair list outlive the build
+    val built = materializeCappedPairs(
+      bandKeys(index, bands, rowsPerBand, tag)
+        .select(col("id"), col("band"), col("bucket")), // sh pruned out
+      Seq("band", "bucket"), "id", maxBucketSize, s"lsh[$tag]",
+      pins = Seq(index))(_.distinct())
+    (LshPairIndex(index, built.pairs, built.pairBound),
+      Seq(index, built.pairs))
+  }
+
+  /** Capped-bucket pairs: the one self-join behind every banded
+    * candidate generator (MinHash-LSH, SimHash, SRP cosine, winnowing,
+    * blocked name linkage, frame and perceptual-hash media dups).
+    * `members` holds one row per (member, bucket): the `bucket` key
+    * columns, the member `id` and the `carry` columns.
+    *
+    * The cap contract: a bucket of B members is B(B-1)/2 candidate
+    * pairs, and real corpora reliably grow degenerate buckets
+    * (boilerplate pages, empty documents, stop-grams, surname skew). A
+    * bucket of more than `maxBucketSize` members is dropped whole (a
+    * `count(*) OVER (PARTITION BY bucket)` filter, which the DuckDB
+    * oracles mirror), so a kept bucket yields at most
+    * cap(cap-1)/2 pairs; members of a dropped bucket still pair through
+    * every other bucket they share. The dropped-membership count is
+    * observed on one side of the join, inside the query's own job, and
+    * logged under `tag` once the first run that drops any completes. An
+    * adaptive plan that finds the pairs empty replaces the observed
+    * subtree, and then that run logs nothing.
+    *
+    * Output: one row per (pair, shared bucket), oriented `id_a < id_b`,
+    * each carried column `c` as `c_a` and `c_b`. Callers reduce it
+    * (distinct pairs, a shared-bucket count, a verify filter). Only the
+    * bucket keys, ids and carried columns move through the join's
+    * exchanges. [[materializeCappedPairs]] is the memoized-build form;
+    * [[lshNearDupNewVsIndex]]'s probe is a join against a stored
+    * index, not a self-join, and caps its matches per probe doc. */
+  private[graft] def cappedBucketPairs(members: DataFrame,
+      bucket: Seq[String], id: String, maxBucketSize: Int, tag: String,
+      carry: Seq[String] = Nil): DataFrame = {
+    val sized = withBucketSize(members, bucket)
+    val stats = org.apache.spark.sql.Observation()
+    stats.future.foreach(r => warnDropped(tag, r, maxBucketSize))(
+      scala.concurrent.ExecutionContext.parasitic)
+    pairUp(capStats(sized, maxBucketSize, _.observe(stats, _, _)), sized,
+      bucket, id, maxBucketSize, carry)
+  }
+
+  /** A [[materializeCappedPairs]] result: the persisted reduced pairs,
+    * their row count, the dropped memberships and the exact
+    * pre-reduction pair bound (a kept bucket of B members adds
+    * B(B-1)/2). */
+  private[graft] final case class CappedPairs(pairs: DataFrame, rows: Long,
+      dropped: Long, pairBound: Long)
+
+  /** [[cappedBucketPairs]] reduced by `reduce`, persisted and counted:
+    * the build-once artifact of a memoized pair index. The membership
+    * table is persisted for the two join sides and observed before the
+    * cap, so the dropped count and the pair bound ride the pair count's
+    * own job. The membership cache is released once the pairs are
+    * built; on any throw, so are `pins` (what the caller persisted for
+    * this build) and the pairs. */
+  private[graft] def materializeCappedPairs(members: DataFrame,
+      bucket: Seq[String], id: String, maxBucketSize: Int, tag: String,
+      carry: Seq[String] = Nil, pins: Seq[DataFrame] = Nil)(
+      reduce: DataFrame => DataFrame): CappedPairs = {
+    val name = s"graft_cap_${capObservations.incrementAndGet()}"
+    val sized = capStats(withBucketSize(members, bucket), maxBucketSize,
+      _.observe(name, _, _)).persist()
     var pairs: DataFrame = null
-    // a throw before the memo takes ownership would lose the handles
-    // and pin the blocks for the session lifetime
-    def releaseOnFailure[T](body: => T): T =
-      try body catch { case t: Throwable =>
-        Seq(Option(index), Option(sized), Option(pairs)).flatten.foreach {
-          df => try df.unpersist() catch { case _: Throwable => () } }
-        throw t
-      }
-    releaseOnFailure {
-    // one aggregation over the cached banded table yields both the
-    // overflow count (for the log) and an exact pre-distinct bound on
-    // candidate pairs: a kept bucket of size B contributes B rows of
-    // (B-1)/2 each = B(B-1)/2 pairs. One extra job per build, total.
-    val st = sized.agg(
-      sum(when(col("bsz") > maxBucketSize, 1L).otherwise(0L))
-        .as("dropped"),
-      sum(when(col("bsz") <= maxBucketSize, col("bsz") - 1L)
-        .otherwise(0L)).as("pair_bound_x2")).head()
-    val dropped = Option(st.get(0)).fold(0L)(_.asInstanceOf[Long])
-    val pairBound = Option(st.get(1)).fold(0L)(_.asInstanceOf[Long]) / 2
-    if (dropped > 0)
-      log.warn(s"lsh[$tag]: dropped $dropped (doc, bucket) memberships " +
-        s"in buckets larger than $maxBucketSize; members can still " +
-        "pair through their other bands")
-    val banded = sized.filter(col("bsz") <= maxBucketSize)
-      .select(col("band"), col("bucket"), col("id"))
-    // materialize the deduplicated candidate ids (bounded by the bucket
-    // cap: at most pair_bound rows of two longs each), then drop the
-    // banded table — only the index and the pair list outlive the build
-    pairs = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
-      .join(banded.select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-      .persist()
-    pairs.count()
-    sized.unpersist()
-    (LshPairIndex(index, pairs, pairBound), Seq(index, pairs))
+    try {
+      pairs = reduce(pairUp(sized, sized, bucket, id, maxBucketSize, carry))
+        .persist()
+      val rows = pairs.count()
+      // read off the membership cache's own plan: an empty pair list
+      // lets the adaptive plan of the count drop the subtree that ran it
+      val st = sized.sparkSession.sharedState.cacheManager
+        .lookupCachedData(
+          sized.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        .flatMap(c => org.apache.spark.sql.execution.CollectMetricsExec
+          .collect(c.cachedRepresentation.cachedPlan).get(name))
+      def stat(i: Int): Long =
+        st.filterNot(_.isNullAt(i)).fold(0L)(_.getLong(i))
+      st.foreach(warnDropped(tag, _, maxBucketSize))
+      sized.unpersist()
+      CappedPairs(pairs, rows, stat(0), stat(1) / 2)
+    } catch { case t: Throwable =>
+      (pins ++ Seq(sized) ++ Option(pairs)).foreach { df =>
+        try df.unpersist() catch { case _: Throwable => () } }
+      throw t
     }
+  }
+
+  private val capObservations = new java.util.concurrent.atomic.AtomicLong
+
+  /** A null bucket key pairs with nothing, so it is dropped before the
+    * count: the filter then sits under the window on both join sides,
+    * and the observed side still shares the other side's exchange. */
+  private def withBucketSize(members: DataFrame,
+      bucket: Seq[String]): DataFrame =
+    members.filter(bucket.map(col(_).isNotNull).reduce(_ && _))
+      .withColumn("bsz",
+        count(lit(1)).over(Window.partitionBy(bucket.map(col): _*)))
+
+  /** `sized` observed before the cap: dropped memberships, and twice
+    * the pre-reduction pair bound (B rows of B-1 per kept bucket). */
+  private def capStats(sized: DataFrame, maxBucketSize: Int,
+      observe: (DataFrame, Column, Column) => DataFrame): DataFrame =
+    observe(sized,
+      sum(when(col("bsz") > maxBucketSize, 1L).otherwise(0L)).as("dropped"),
+      sum(when(col("bsz") <= maxBucketSize, col("bsz") - 1L)
+        .otherwise(0L)).as("pair_bound_x2"))
+
+  private def warnDropped(tag: String, st: org.apache.spark.sql.Row,
+      maxBucketSize: Int): Unit =
+    if (!st.isNullAt(0) && st.getLong(0) > 0)
+      log.warn(s"$tag: dropped ${st.getLong(0)} bucket memberships in " +
+        s"buckets larger than $maxBucketSize; members can still pair " +
+        "through their other buckets")
+
+  private def pairUp(left: DataFrame, right: DataFrame, bucket: Seq[String],
+      id: String, maxBucketSize: Int, carry: Seq[String]): DataFrame = {
+    def side(sized: DataFrame, s: String): DataFrame =
+      sized.filter(col("bsz") <= maxBucketSize).select(bucket.map(col) ++
+        (col(id).as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s"))): _*)
+    side(left, "a").join(side(right, "b"), bucket)
+      .filter(col("id_a") < col("id_b"))
+      .select((Seq("id_a", "id_b") ++ carry.map(_ + "_a") ++
+        carry.map(_ + "_b")).map(col): _*)
   }
 
   /** Persist a signature index as a parquet table — the durable form
@@ -341,6 +421,8 @@ object Dedup {
   private final case class LshProbeIndex(batchIdx: DataFrame,
       candidates: DataFrame)
 
+  /** Keeps its own cap: a probe join of a batch against a stored index,
+    * not a [[cappedBucketPairs]] self-join. */
   private def buildLshProbeIndex(newExploded: DataFrame,
       corpusIndex: DataFrame, bands: Int, rowsPerBand: Int, tag: String,
       maxBucketSize: Int, maxBroadcastKeys: Long)
@@ -383,17 +465,17 @@ object Dedup {
     // the probe join is linear (B fixed-width rows for a B-member
     // bucket); the cap is applied to the MATCHED subset only — sizing
     // buckets corpus-wide would shuffle the whole corpus per crawl.
-    // bsz partitioned per probe doc = how many corpus members its
+    // matched, partitioned per probe doc = how many corpus members its
     // bucket matched; degenerate buckets are dropped and logged.
     sized = corpusKeys.join(probe, Seq("band", "bucket"))
-      .withColumn("bsz", count(lit(1)).over(
+      .withColumn("matched", count(lit(1)).over(
         Window.partitionBy(col("band"), col("bucket"), col("new_id"))))
       .persist()
-    val dropped = sized.filter(col("bsz") > maxBucketSize).count()
+    val dropped = sized.filter(col("matched") > maxBucketSize).count()
     if (dropped > 0)
       log.warn(s"lsh-probe[$tag]: skipped $dropped matches in corpus " +
         s"buckets larger than $maxBucketSize")
-    candidates = sized.filter(col("bsz") <= maxBucketSize)
+    candidates = sized.filter(col("matched") <= maxBucketSize)
       .select(col("new_id"), col("corpus_id"))
       .dropDuplicates("new_id", "corpus_id")
       .persist()
@@ -665,14 +747,12 @@ object Dedup {
     * chunk), then exact popcount verification — banded join again, never
     * all-pairs.
     *
-    * Degenerate-bucket guard (the same pattern as
-    * [[lshNearDupPairsFromHashes]]): a bare 16-bit chunk key space gives
+    * Degenerate-bucket guard: a bare 16-bit chunk key space gives
     * ~N/65536 docs per bucket, so each bucket contributes O(B^2)
     * candidate pairs — quadratic exactly on the near-duplicate-heavy
-    * corpora near-dedup exists for. Buckets larger than `maxBucketSize`
-    * are dropped from candidate generation with the drop count logged,
-    * never silently; members of a dropped bucket can still pair through
-    * their other 3 chunks.
+    * corpora near-dedup exists for. The [[cappedBucketPairs]] cap at
+    * `maxBucketSize` bounds that; members of a dropped bucket can still
+    * pair through their other 3 chunks.
     *
     * Lifecycle: the (bounded, deduplicated) candidate-pair list — which
     * carries both 64-bit sketches, so no probe-time join-back is needed —
@@ -697,48 +777,18 @@ object Dedup {
     val idx = simHashDf(docs, idCol, textCol)
       .select(col("id"), col("simhash").as("sh"))
       .persist()
-    var sized: DataFrame = null
-    var pairs: DataFrame = null
-    def releaseOnFailure[T](body: => T): T =
-      try body catch { case t: Throwable =>
-        Seq(Option(idx), Option(sized), Option(pairs)).flatten.foreach {
-          df => try df.unpersist() catch { case _: Throwable => () } }
-        throw t
-      }
-    releaseOnFailure {
-    val wb = Window.partitionBy(col("chunk"), col("ckey"))
-    sized = idx.select(col("id"), col("sh"),
-        posexplode(transform(sequence(lit(0), lit(3)),
-          c => call_function("shiftright", col("sh"), c * 16)
-            .bitwiseAND(0xFFFF)))
-          .as(Seq("chunk", "ckey")))
-      .withColumn("bsz", count(lit(1)).over(wb))
-      .persist()
-    val st = sized.agg(
-      sum(when(col("bsz") > maxBucketSize, 1L).otherwise(0L))
-        .as("dropped")).head()
-    val dropped = Option(st.get(0)).fold(0L)(_.asInstanceOf[Long])
-    if (dropped > 0)
-      log.warn(s"simhash: dropped $dropped (doc, chunk) memberships in " +
-        s"buckets larger than $maxBucketSize; members can still pair " +
-        "through their other chunks")
-    val kept = sized.filter(col("bsz") <= maxBucketSize)
     // sh rides along both sides (one long each — fixed width), so the
     // memoized pair list is self-contained and the popcount filter
     // never joins back to the sketch table
-    val l = kept.select(col("chunk"), col("ckey"),
-      col("id").as("id_a"), col("sh").as("sh_a"))
-    val r = kept.select(col("chunk"), col("ckey"),
-      col("id").as("id_b"), col("sh").as("sh_b"))
-    pairs = l.join(r, Seq("chunk", "ckey"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"), col("sh_a"), col("sh_b"))
-      .persist()
-    pairs.count() // materialize, then drop the build intermediates
-    sized.unpersist()
+    val built = materializeCappedPairs(
+      idx.select(col("id"), col("sh"),
+        posexplode(transform(sequence(lit(0), lit(3)),
+          c => call_function("shiftright", col("sh"), c * 16)
+            .bitwiseAND(0xFFFF)))
+          .as(Seq("chunk", "ckey"))),
+      Seq("chunk", "ckey"), "id", maxBucketSize, "simhash", Seq("sh"),
+      pins = Seq(idx))(_.dropDuplicates("id_a", "id_b"))
     idx.unpersist()
-    (pairs, Seq(pairs))
-    }
+    (built.pairs, Seq(built.pairs))
   }
 }

@@ -1084,32 +1084,22 @@ object Graph {
     val s = edges.sparkSession
     var dist = GraftSession.cut(
       s.range(1).select(lit(source).as("node"), lit(0L).as("cost")))
-    // exact fixpoint witness over the already-materialized dist: the
-    // reach count only grows and min-plus costs only shrink, so an
-    // unchanged (count, sum(cost)) pair PROVES the round was the
-    // identity — and Bellman-Ford at a fixed point stays there, so
-    // skipping the remaining rounds returns exactly what the full
-    // fixed-round unroll (and the oracle CTE chain) computes. The
-    // witness is one nodes-sized agg job per round, so it only runs
-    // once past WitnessFrom rounds — a budget at or under that is
-    // cheaper to just run out (measured ~0.15 s/agg vs ~0.7 s/round
-    // at sf0.1), while a deep budget (rounds >> diameter) skips every
-    // dead round for one agg each.
-    def witness(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), sum(col("cost"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val WitnessFrom = 4
-    var w: Option[(Long, Long)] = None
+    // exact fixpoint witness over each round's state: the reach count
+    // only grows and min-plus costs only shrink, so an unchanged
+    // (count, sum(cost)) pair PROVES the round was the identity — and
+    // Bellman-Ford at a fixed point stays there, so skipping the
+    // remaining rounds returns exactly what the full fixed-round
+    // unroll (and the oracle CTE chain) computes. The witness rides
+    // the cut's own job, so every round checks it for free.
+    var w = Seq.empty[Long]
     var i = 1
     var converged = false
     while (i <= rounds && !converged) {
-      dist = GraftSession.cut(ssspRound(edges, dist, nNodes))
-      if (i >= WitnessFrom && i < rounds) {
-        val w2 = witness(dist)
-        if (w.contains(w2)) converged = true
-        w = Some(w2)
-      }
+      val (next, w2) = GraftSession.cutWith(ssspRound(edges, dist, nNodes),
+        count(lit(1)), sum(col("cost")))
+      dist = next
+      converged = w2 == w
+      w = w2
       i += 1
     }
     dist
@@ -2001,22 +1991,8 @@ object Graph {
     // NPE below instead of answering — reject it like kTruss rejects
     // its degenerate k
     require(iters >= 1, s"hitsScores needs iters >= 1 (got $iters)")
-    val (dir, dirC, nHubsBox) = hitsDir(s, d)
-    val nHubs = nHubsBox.longValue()
-    // state-sizing for the per-round score tables (r18): dir inherits
-    // the dst-hash pin of the trade-graph cache, so the authority
-    // aggregation plans NO exchange — but its output then stays at the
-    // edge table's grain, and the per-round scalar read + cut +
-    // broadcast would each schedule one near-empty task per edge
-    // partition (measured +0.7 s over 6 half-rounds at sf0.1). One
-    // keyed repartition of the AGGREGATED node-sized state (final
-    // rows, never the pre-agg contributions) compacts it to the
-    // shared compactParts floor (cluster node counts meet the session
-    // grain, where this is the same state-sized shuffle every other
-    // fixpoint here pays per round).
-    val stateParts = GraftSession.compactParts(s, nHubs)
-    var hub = GraftSession.cut(dir.select(col("c")).distinct()
-      .select(col("c"), lit(RankScale / nHubs).as("h")))
+    val (dir, dirC, hub0, nHubs, stateParts) = hitsRoundInputs(s, d)
+    var hub = hub0
     var auth: DataFrame = null
     for (_ <- 1 to iters) {
       // cut the RAW half-round table only: the normalized view is a
@@ -2097,8 +2073,20 @@ object Graph {
     (edges, rank0, n)
   }
 
-  /** See [[ssspRoundInputs]]: (sup-pinned dir, c-pinned dir, initial
-    * hub state, node count, state grain). */
+  /** [[hitsScores]]' inputs, shared with the round-plan audit (see
+    * [[ssspRoundInputs]]): (sup-pinned dir, c-pinned dir, initial hub
+    * state, node count, state grain).
+    *
+    * State grain (r18): dir inherits the dst-hash pin of the
+    * trade-graph cache, so the authority aggregation plans NO exchange
+    * — but its output then stays at the edge table's grain, and the
+    * per-round scalar read + cut + broadcast would each schedule one
+    * near-empty task per edge partition (measured +0.7 s over 6
+    * half-rounds at sf0.1). One keyed repartition of the AGGREGATED
+    * node-sized state (final rows, never the pre-agg contributions)
+    * compacts it to the shared compactParts floor (cluster node counts
+    * meet the session grain, where this is the same state-sized
+    * shuffle every other fixpoint here pays per round). */
   private[graft] def hitsRoundInputs(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, Long, Int) = {
     val (dir, dirC, nBox) = hitsDir(s, d)
@@ -2181,13 +2169,14 @@ object Graph {
         "u")
       .select(col("v").as("node"), col("vlab"))
       .groupBy(col("node"), col("vlab")).agg(count(lit(1)).as("cnt"))
-    votes.join(lab, Seq("node"))
+    votes.join(perRoundSide(lab.select(col("node"), col("lab").as("own")),
+        nNodes), Seq("node"))
       .groupBy(col("node"))
       .agg(max(struct(
-          (col("cnt") + when(col("vlab") === col("lab"), 1L)
+          (col("cnt") + when(col("vlab") === col("own"), 1L)
             .otherwise(0L)).as("cnt"),
           (-col("vlab")).as("nl"))).as("m"),
-        max(col("lab")).as("own"))
+        max(col("own")).as("own"))
       .select(col("node"),
         (-greatest(col("m"),
           struct(lit(1L).as("cnt"), (-col("own")).as("nl")))

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -9,57 +8,37 @@ import graft.Tables
 /** Entity-resolution primitives: blocked fuzzy matching — the classic
   * record-linkage shape (block on a cheap key so the quadratic edit-
   * distance comparison runs only inside small buckets, never across the
-  * corpus). The same cap-the-quadratic discipline as every banded join
-  * in Dedup/Similarity, applied to string identity instead of content.
+  * corpus). The same capped self-join as every banded join in
+  * Dedup/Similarity, applied to string identity instead of content.
   * (Reference analog: matching scraped committee names across
   * municipalities that spell them differently.)
   */
 object Linkage {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Blocked fuzzy self-join over a `(blk, name)` table: compare within
     * blocks with Levenshtein <= `maxDist`, canonical a < b orientation.
     *
-    * Blocks are CAPPED: a block larger than `maxBucketSize` is dropped
-    * whole — with a logged count — before the self-join, the same
-    * windowed-drop invariant as every LSH band in Dedup/Similarity. On
+    * Blocks are capped: a block larger than `maxBucketSize` is dropped
+    * whole, with a logged count, before the self-join
+    * ([[Dedup.cappedBucketPairs]]). On
     * real name distributions (surname skew) a hot block otherwise
     * degrades toward quadratic; the cap turns that into a visible,
     * bounded loss instead of a runaway stage. At 100 TB you widen the
     * block key (3-4 trailing chars, a phonetic key) to shrink buckets
     * back under the cap rather than raising it. */
   private[graft] def fuzzyPairs(names: DataFrame, maxDist: Int, k: Int,
-      maxBucketSize: Int): DataFrame = {
-    // drop accounting runs on the block-size table (map-side-combined
-    // groupBy, #blocks rows), not a windowed pass over the full rows
-    val dropped = names.groupBy(col("blk"))
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > maxBucketSize)
-      .agg(coalesce(sum(col("bsz")), lit(0L)).as("n"),
-        count(lit(1)).as("blks")).head()
-    if (dropped.getLong(0) > 0)
-      log.warn(s"linkage: dropped ${dropped.getLong(0)} names in " +
-        s"${dropped.getLong(1)} blocks larger than $maxBucketSize; widen " +
-        "the block key to recover them")
-    val capped = names
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("blk"))))
-      .filter(col("bsz") <= maxBucketSize)
-      .select(col("blk"), col("name"))
-    val a = capped.select(col("blk"), col("name").as("name_a"))
-    val b = capped.select(col("blk"), col("name").as("name_b"))
-    a.join(b, Seq("blk"))
-      .filter(col("name_a") < col("name_b"))
+      maxBucketSize: Int): DataFrame =
+    Dedup.cappedBucketPairs(names, Seq("blk"), "name", maxBucketSize,
+        "linkage")
       // thresholded levenshtein: the banded DP early-exits once the
       // distance provably exceeds maxDist (returns -1), so each
       // comparison is O(len x maxDist) instead of O(len^2)
-      .withColumn("dist",
-        levenshtein(col("name_a"), col("name_b"), maxDist))
+      .withColumn("dist", levenshtein(col("id_a"), col("id_b"), maxDist))
       .filter(col("dist") >= 0)
-      .select(col("name_a"), col("name_b"), col("dist").cast("long").as("dist"))
+      .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
+        col("dist").cast("long").as("dist"))
       .orderBy(col("name_a"), col("name_b"))
       .limit(k)
-  }
 
   /** Near-identical customer-name pairs: block on the name's last
     * `blockWidth` characters, fuzzy-match within capped blocks (see

@@ -608,19 +608,6 @@ object Similarity {
   private final case class SrpPairIndex(vecs: DataFrame, pairs: DataFrame,
       pairBound: Long)
 
-  /** Candidate pairs from a capped (id, tbl, bucket) membership table.
-    * Fixed-width rows only: the banded self-join shuffles (tbl, bucket,
-    * id) triples, NEVER the vectors — with real 1024-dim embeddings the
-    * id-only shuffle moves ~2 orders of magnitude fewer bytes, the same
-    * discipline as the text-LSH path. Asserted by plan in
-    * SimilaritySpec (no array column below the join's exchanges). */
-  private[graft] def bandedCandidatePairs(banded: DataFrame): DataFrame =
-    banded.select(col("tbl"), col("bucket"), col("id").as("id_a"))
-      .join(banded.select(col("tbl"), col("bucket"), col("id").as("id_b")),
-        Seq("tbl", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-
   /** Embedding-cosine near-duplicate pairs: SRP-LSH bucketed self-join
     * (docs sharing a bucket in >= 1 hash table become candidates),
     * verified with exact cosine >= threshold. Same scale shape as
@@ -630,8 +617,8 @@ object Similarity {
     * verification, and the pair side broadcasts only while the
     * measured pre-distinct candidate bound stays under
     * `maxBroadcastPairs`. Buckets above `maxBucketSize` are dropped at
-    * build time with a logged count (a bucket of B members is B^2/2
-    * candidate pairs); members still pair through their other tables.
+    * build time ([[Dedup.cappedBucketPairs]]); members still pair
+    * through their other tables.
     * The vector table and pair list are memoized per (context, input
     * plan, banding params) — build once, probe many, released by
     * [[Dedup.clearLshCache]]. */
@@ -682,46 +669,18 @@ object Similarity {
       // family persists its own copy; the md5 family projects the
       // shared quantized parent and pins nothing extra
       val (vecs, vecsPinned) = vecsOf
-      val sized = bucketsDf
-        .select(col("id"),
+      // fixed-width rows only: the banded self-join shuffles (tbl,
+      // bucket, id) triples, NEVER the vectors — with real 1024-dim
+      // embeddings ~2 orders of magnitude fewer bytes than a vector
+      // shuffle (asserted by plan in SimilaritySpec)
+      val built = Dedup.materializeCappedPairs(
+        bucketsDf.select(col("id"),
           posexplode(array((0 until tables).map(t => col(s"b$t")): _*))
-            .as(Seq("tbl", "bucket")))
-        .withColumn("bsz", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("tbl"), col("bucket"))))
-        .persist()
-      var pairs: DataFrame = null
-      // a throw before the memo takes ownership would lose the handles
-      // and pin the blocks for the session lifetime
-      def releaseOnFailure[T](body: => T): T =
-        try body catch { case t: Throwable =>
-          Seq(Option(vecs), Option(sized), Option(pairs)).flatten.foreach {
-            df => try df.unpersist() catch { case _: Throwable => () } }
-          throw t
-        }
-      releaseOnFailure {
-        // one aggregation over the cached membership table yields both
-        // the overflow count (for the log) and an exact pre-distinct
-        // bound on candidate pairs: a kept bucket of size B contributes
-        // B rows of (B-1)/2 each = B(B-1)/2 pairs
-        val st = sized.agg(
-          sum(when(col("bsz") > maxBucketSize, 1L).otherwise(0L))
-            .as("dropped"),
-          sum(when(col("bsz") <= maxBucketSize, col("bsz") - 1L)
-            .otherwise(0L)).as("pair_bound_x2")).head()
-        val dropped = Option(st.get(0)).fold(0L)(_.asInstanceOf[Long])
-        val pairBound = Option(st.get(1)).fold(0L)(_.asInstanceOf[Long]) / 2
-        if (dropped > 0)
-          log.warn(s"srp: dropped $dropped (doc, bucket) memberships in " +
-            s"buckets larger than $maxBucketSize; members can still " +
-            "pair through their other tables")
-        pairs = bandedCandidatePairs(sized.filter(col("bsz") <= maxBucketSize)
-          .select(col("tbl"), col("bucket"), col("id")))
-          .persist()
-        pairs.count() // materialize, then drop the membership table
-        sized.unpersist()
-        (SrpPairIndex(vecs, pairs, pairBound), vecsPinned :+ pairs)
-      }
+            .as(Seq("tbl", "bucket"))),
+        Seq("tbl", "bucket"), "id", maxBucketSize, "srp",
+        pins = vecsPinned)(_.distinct())
+      (SrpPairIndex(vecs, built.pairs, built.pairBound),
+        vecsPinned :+ built.pairs)
     }
     def probeSide(df: DataFrame): DataFrame =
       if (e.pairBound <= maxBroadcastPairs) df.hint("broadcast") else df

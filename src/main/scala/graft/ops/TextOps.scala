@@ -632,10 +632,10 @@ object TextOps {
 
   /** Winnowing-based near-dup candidates: documents sharing at least
     * `minShared` selected fingerprints. The fingerprint buckets are
-    * CAPPED (`maxBucketSize`, same windowed-drop invariant as every
-    * banded self-join in Dedup/Similarity/Curation — a fingerprint
-    * shared by half the corpus is a stop-gram, not a dup signal), then
-    * equi-joined on the 8-byte hash with canonical a < b orientation.
+    * capped at `maxBucketSize` and self-joined on the 8-byte hash with
+    * canonical a < b orientation ([[Dedup.cappedBucketPairs]]: a
+    * fingerprint shared by half the corpus is a stop-gram, not a dup
+    * signal).
     * Shared-run guarantee inherited from winnowing: near-dups with a
     * common w+k-1 token run always collide on >= 1 fingerprint. */
   def winnowingNearDupPairs(s: SparkSession, d: String, k: Int = 3,
@@ -645,14 +645,9 @@ object TextOps {
     // positions of one doc, but it is ONE fingerprint for matching
     val sel = winnowingSelections(Tables.documents(s, d), k, w)
       .select(col("doc_id"), col("gh")).distinct()
-    val capped = sel
-      .withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("gh"))))
-      .filter(col("bsz") <= maxBucketSize)
-      .select(col("doc_id"), col("gh"))
-    capped.select(col("gh"), col("doc_id").as("doc_a"))
-      .join(capped.select(col("gh"), col("doc_id").as("doc_b")), Seq("gh"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
+    Dedup.cappedBucketPairs(sel, Seq("gh"), "doc_id", maxBucketSize,
+        "winnowing")
+      .groupBy(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }

@@ -134,6 +134,60 @@ class DedupSpec extends SparkTestBase {
       maxBucketSize = 10).count() == 0)
   }
 
+  test("materializeCappedPairs reports the dropped memberships and pair " +
+      "bound the LSH and SRP builds' bucket aggregation computes") {
+    // 40 identical docs share every band bucket; three others sit alone
+    val docs = ((1L to 40L).map((_, base)) ++ Seq(
+      (41L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (42L, "one two three four five six seven eight nine"),
+      (43L, "red green blue cyan magenta yellow black white")))
+      .toDF("doc_id", "text")
+    val index = Dedup.signatureIndex(
+      Dedup.explodedTokenShingleHashes(docs, "doc_id", "text", 3), 8)
+    val lsh = Dedup.bandKeys(index, 4, 2, "fixture")
+      .select($"id", $"band", $"bucket")
+    // an SRP-shaped (id, tbl, bucket) table: one 30-member bucket per
+    // table, the rest in buckets of three
+    val srp = (1L to 60L).flatMap(id => (0 until 2).map(t =>
+        (id, t, if (id <= 30) 0L else id % 10)))
+      .toDF("id", "tbl", "bucket")
+    Seq(lsh -> Seq("band", "bucket"), srp -> Seq("tbl", "bucket"))
+      .foreach { case (members, keys) =>
+        val sizes = members.groupBy(keys.map(col): _*).count()
+          .collect().map(_.getLong(keys.size))
+        Seq(10, 1000).foreach { cap =>
+          val built = Dedup.materializeCappedPairs(members, keys, "id", cap,
+            "fixture")(_.distinct())
+          try {
+            // the parent builds' sum(bsz > cap) and sum(bsz - 1) / 2
+            assert(built.dropped == sizes.filter(_ > cap).sum, s"$keys $cap")
+            assert(built.pairBound ==
+              sizes.filter(_ <= cap).map(b => b * (b - 1) / 2).sum,
+              s"$keys $cap")
+            assert(built.rows == built.pairs.count())
+          } finally built.pairs.unpersist()
+        }
+      }
+  }
+
+  test("a pair-index build that throws mid-materialization leaves " +
+      "nothing persisted") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val boom = udf { (id: Long) =>
+      if (id == 13L) throw new IllegalStateException("boom"); id }
+    // a caller pin, materialized before the build, as the LSH index is
+    val pin = spark.range(0, 100).toDF("id").persist()
+    pin.count()
+    val members = spark.range(0, 100, 1, 4)
+      .select(boom($"id").as("id"), ($"id" % 7).as("bucket"))
+    intercept[org.apache.spark.SparkException] {
+      Dedup.materializeCappedPairs(members, Seq("bucket"), "id", 1000,
+        "throwing", pins = Seq(pin))(_.distinct())
+    }
+    assert(sc.getPersistentRDDs.keySet.toSet == before)
+  }
+
   test("char-gram LSH via the exploded entry point finds exact dups") {
     val docs = Seq((1L, base), (2L, base),
       (3L, "completely different characters in this unrelated document"))

@@ -139,6 +139,43 @@ class GraphSpec extends SparkTestBase {
       s"componentLabels ran $localJobs jobs (prep $prep)")
   }
 
+  test("ssspFrom's fixpoint witness rides the round cut: no job beyond " +
+      "the rounds', the same in local and reliable mode") {
+    // rounds 1-3 lower costs (4 is reached at 26, then 21), round 4
+    // confirms the fixpoint through the cut's (count, sum) witness
+    val edges = Seq((1L, 2L, 10L), (2L, 3L, 10L), (1L, 3L, 25L),
+      (3L, 4L, 1L)).toDF("src", "dst", "cost")
+    val rounds = 8
+    def run(): (Int, Map[Long, Long]) = {
+      var costs: Map[Long, Long] = null
+      val jobs = jobsRun {
+        costs = Graph.ssspFrom(edges, 1L, rounds).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      (jobs, costs)
+    }
+    val expected = Map(1L -> 0L, 2L -> 10L, 3L -> 20L, 4L -> 21L)
+    val (localJobs, localCosts) = run()
+    assert(localCosts == expected)
+    val ckDir = java.nio.file.Files
+      .createTempDirectory("graft-ck-sssp").toString
+    GraftSession.enableReliableCheckpoints(spark, ckDir)
+    val (reliableJobs, reliableCosts) =
+      try run()
+      finally spark.conf.set("spark.graft.reliableCheckpoints", "false")
+    assert(reliableCosts == expected)
+    assert(reliableJobs == localJobs,
+      s"reliable mode ran $reliableJobs jobs, local mode $localJobs")
+    // 4 rounds at a plain (unwitnessed) round cut's jobs each, plus the
+    // source-state cut and the collect: the witness costs no job
+    val source = GraftSession.cut(spark.range(1)
+      .select(lit(1L).as("node"), lit(0L).as("cost")))
+    val round = jobsRun(GraftSession.cut(
+      Graph.ssspRound(edges, source, Long.MaxValue)))
+    assert(localJobs <= 4 * round + 1 + 1,
+      s"ssspFrom ran $localJobs jobs, a plain round cut $round")
+  }
+
   test("components and kCore under reliable checkpoints match local-cut") {
     val d = sf("lineitem")
     val baseCensus = Graph.components(spark, d).collect().toSeq

@@ -83,9 +83,9 @@ class InspectSpec extends SparkTestBase {
         assert(!adaptive.contains(false), s"$title:\n$body")
       }
     }
-    // both rounds join a broadcast state against an edge table pinned
+    // each round joins a broadcast state against an edge table pinned
     // by hash on the aggregation key: no shuffle, so no adaptive loop
-    Seq("components", "pagerank").foreach { f =>
+    Seq("components", "lpa", "pagerank").foreach { f =>
       assert(secs.keys.exists(t => t.startsWith(s"$f:") &&
         t.contains("round cut static")), secs.keys)
     }

@@ -186,6 +186,36 @@ class PropertySpec extends SparkTestBase {
       }
   }
 
+  test("property: cappedBucketPairs equals a driver-side pairing over " +
+      "buckets of at most cap members") {
+    // (bucket, id, payload) memberships: ids sit in several buckets (one
+    // per band) and a payload is a function of the id, carried as p_a/p_b
+    val memberGen = Gen.listOfN(60, Gen.zip(Gen.choose(0, 2),
+      Gen.choose(0, 5), Gen.choose(1L, 25L)))
+    sample(memberGen, 3).zipWithIndex.foreach { case (raw, i) =>
+      val members = raw.map { case (band, key, id) =>
+        (band, key.toLong, id) }.distinct
+      val sizes = members.groupBy(m => (m._1, m._2)).view
+        .mapValues(_.size).toMap
+      // one cap under every bucket size, one over it, one in between
+      Seq(1, sizes.values.max, sizes.values.max / 2 + 1).foreach { cap =>
+        val want = members.groupBy(m => (m._1, m._2)).toSeq
+          .filter(_._2.size <= cap)
+          .flatMap { case (_, ms) =>
+            for (a <- ms; b <- ms if a._3 < b._3)
+              yield (a._3, b._3, s"p${a._3}", s"p${b._3}")
+          }.sorted
+        val got = Dedup.cappedBucketPairs(
+            members.map { case (band, key, id) => (band, key, id, s"p$id") }
+              .toDF("band", "bucket", "id", "p"),
+            Seq("band", "bucket"), "id", cap, s"prop$i", Seq("p"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
+            r.getString(3))).toSeq.sorted
+        assert(got == want, s"sample $i, cap $cap")
+      }
+    }
+  }
+
   test("property: topGramFraction equals brute-force max-2gram count ratio") {
     val tokGen = Gen.oneOf("a", "b", "c", "ab", "x")
     val docGen = Gen.choose(2, 30).flatMap(n => Gen.listOfN(n, tokGen))

@@ -87,9 +87,10 @@ class SimilaritySpec extends SparkTestBase {
     // vectors — the 100 TB shuffle-volume discipline. AQE off so the
     // pre-execution physical plan exposes its exchanges to collect().
     val emb = Tables.embeddings(spark, sf("embeddings"))
-    val banded = Similarity.bandedCandidatePairs(
+    val banded = graft.ops.Dedup.cappedBucketPairs(
       emb.select($"vec_id".as("id"), ($"vec_id" % 16).as("tbl"),
-        ($"vec_id" % 32).as("bucket")))
+        ($"vec_id" % 32).as("bucket")),
+      Seq("tbl", "bucket"), "id", 1000, "srp").distinct()
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
