@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{GraftSession, Tables}
+import graft.Tables
 
 /** Deduplication operators for training-data pipelines, designed for the
   * 100 TB case:
@@ -214,10 +214,11 @@ object Dedup {
   private final case class LshPairIndex(index: DataFrame, pairs: DataFrame,
       pairBound: Long)
 
-  /** Release every memoized LSH/sketch index built by the operators in
-    * this package (signature indexes, candidate-pair lists, SRP bucket
-    * tables, SimHash sketches) — the long-running-session escape hatch,
-    * mirroring [[clearClusterCache]] / [[Similarity.clearIvfCache]]. */
+  /** Release every memoized index built by the operators in this
+    * package (signature indexes, candidate-pair lists, SRP bucket
+    * tables, SimHash sketches, cluster labels, IVF lists) — the
+    * long-running-session escape hatch; [[IndexMemo.clear]] under an
+    * older name. */
   def clearLshCache(): Unit = IndexMemo.clear()
 
   private def buildLshPairIndex(exploded: DataFrame, bands: Int,
@@ -511,163 +512,48 @@ object Dedup {
 
   // ----------------------------------------- dup-cluster identification
 
-  /** Connected components over a duplicate-pair edge list: every doc
-    * gets the min doc_id of its component as cluster label (the
-    * canonical representative — pick-one-per-cluster is then a plain
-    * groupBy).
-    *
-    * Min-label propagation WITH pointer jumping: each round every
-    * vertex takes the min of its own and its neighbors' labels, then
-    * compresses one pointer hop (lbl(u) <- lbl(lbl(u))). Labels only
-    * ever move to ids inside the same component and never below its
-    * min, so the fixpoint is exact full reachability; the jump turns
-    * O(component diameter) rounds into near-logarithmic — a
-    * 10k-diameter chain converges in ~15 rounds, not 10k. Each round
-    * is two joins + one aggregation, all hash-partitioned on the
-    * vertex/label id (the jump join keys on the label, which is
-    * min-skewed inside large components — AQE's skew-join handling
-    * applies at scale); labels persist per round and the loop stops on
-    * a converged (zero-change) round. */
-  def connectedComponents(edges: DataFrame, vertices: DataFrame,
-      maxRounds: Int = 50): DataFrame =
-    connectedComponentsPinned(edges, vertices, maxRounds)._1
-
-  /** [[connectedComponents]] plus the DataFrames it leaves persisted
-    * (the symmetric edge index and the final label table), so callers
-    * that own the result's lifetime can actually release the memory —
-    * `unpersist()` on the returned projection would miss both. */
-  def connectedComponentsPinned(edges: DataFrame, vertices: DataFrame,
-      maxRounds: Int = 50): (DataFrame, Seq[DataFrame]) = {
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist()
-    var labels = vertices.select(col("id"), col("id").as("lbl")).persist()
-    // on any throw (non-convergence, mid-loop job failure) release what
-    // this call persisted — otherwise the handles are lost and the blocks
-    // pin executor memory for the session lifetime, growing per retry
-    var retired: DataFrame = null // previous round's labels, mid-handover
-    def releaseOnFailure[T](body: => T): T =
-      try body catch { case t: Throwable =>
-        Seq(Option(sym), Option(labels), Option(retired)).flatten.foreach {
-          df => try df.unpersist() catch { case _: Throwable => () }
-        }
-        throw t
-      }
-    releaseOnFailure {
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      val nbrMin = sym
-        .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("lbl")).as("nbr_lbl"))
-      val prop = labels
-        .join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"))
-      // pointer jump: follow the label one hop through the mapping
-      // itself (every label IS a vertex id, so the lookup always hits).
-      // The jump references the propagation result twice, which would
-      // both DOUBLE the logical plan every round and recompute the
-      // edge-join per side — the lineage cut (GraftSession.cut:
-      // localCheckpoint, or a reliable checkpoint under
-      // enableReliableCheckpoints) materializes the propagation once,
-      // keeping plans (and per-round work) constant across rounds.
-      val propM = GraftSession.cut(prop)
-      val next = propM
-        .join(propM.select(col("id").as("jid"), col("lbl").as("jlbl")),
-          col("lbl") === col("jid"), "left")
-        .select(col("id"), coalesce(col("jlbl"), col("lbl")).as("lbl"))
-        .persist()
-      retired = labels
-      labels = next // handover first: a throw in count() releases both
-      changed = next
-        .join(retired.withColumnRenamed("lbl", "prev"), "id")
-        .filter(col("lbl") =!= col("prev")).count()
-      retired.unpersist()
-      retired = null
-      rounds += 1
-    }
-    // sym stays cached: it is the reusable symmetric edge index, and a
-    // re-run of the same clustering (canonically identical plan) reads
-    // it straight from the cache — same build-once/probe-many lifetime
-    // as the LSH and IVF indexes (session-scoped, dropped with the
-    // session or by an explicit unpersist from the caller).
-    if (changed > 0)
-      // a silently-split component diverges from full reachability;
-      // that is a wrong answer, not a degraded one
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds " +
-          s"($changed labels still changing); raise maxRounds — " +
-          "components with diameter beyond this bound would be split")
-    (labels.select(col("id"), col("lbl").as("cluster")), Seq(sym, labels))
-    }
+  /** Cluster labels from one bucket key per document: each row of
+    * `docs` (doc_id) takes the min doc_id of the documents sharing its
+    * `keys` (doc_id, key) bucket, and a document with no key (no row in
+    * `keys`, or a null key) labels itself. `keys` holds at most one row
+    * per document. Returns (doc_id, cluster). */
+  private[graft] def bucketMinLabels(docs: DataFrame,
+      keys: DataFrame): DataFrame = {
+    val hubs = keys.filter(col("key").isNotNull)
+      .select(col("doc_id"),
+        min(col("doc_id")).over(Window.partitionBy(col("key"))).as("hub"))
+    docs.select(col("doc_id"))
+      .join(hubs, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("hub"), col("doc_id")).as("cluster"))
   }
 
-  private case class ClusterEntry(labels: DataFrame, pinned: Seq[DataFrame])
-
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ClusterEntry]
-
-  /** Drop memoized cluster-label tables, unpersisting every DataFrame
-    * the build left cached — the signature index, the symmetric edge
-    * index, and the final label table (tolerant of stopped sessions). */
-  def clearClusterCache(): Unit = {
-    clusterCache.values.forEach { e =>
-      e.pinned.foreach { df =>
-        try df.unpersist() catch { case _: Throwable => () }
-      }
-    }
-    clusterCache.clear()
-  }
-
-  /** Near-dup clusters over documents: edges join docs whose md5
-    * MinHash first component collides (an LSH band of width 1 — the
-    * oracle-mirrorable bucket key), components labeled by min doc_id.
-    * Oracle: the same edges + a recursive-CTE reachability in DuckDB.
+  /** Near-dup clusters over documents: docs whose md5 MinHash first
+    * component collides (an LSH band of width 1 — the oracle-mirrorable
+    * bucket key) share a cluster, labeled by its min doc_id. Oracle:
+    * those collisions as edges + a recursive-CTE reachability in DuckDB.
     *
-    * Labels are memoized per (SparkContext, corpus dir) like the IVF
-    * index: clustering is the label-once/consume-many artifact every
+    * No fixpoint is needed: `numHashes = 1` gives each document exactly
+    * one `sig_0`, so the oracle's edges (`a.s0 = b.s0`) split the
+    * documents into disjoint cliques, one per `sig_0` value.
+    * Reachability is therefore bucket membership, and the min reachable
+    * id is `min(doc_id) OVER (PARTITION BY sig_0)` — one window, however
+    * large a boilerplate bucket grows. A document with no trigram has
+    * no `sig_0` and reaches only itself ([[bucketMinLabels]]).
+    *
+    * The labels are the label-once/consume-many artifact every
     * downstream curation step keys on ([[clusterSplit]],
-    * [[keepBestInCluster]], dedup itself), and the iterative CC loop's
-    * localCheckpoint lineage defeats CacheManager plan-matching, so
-    * without the memo each consumer would silently re-run the whole
-    * fixpoint. */
-  def nearDupClusters(s: SparkSession, d: String): DataFrame =
-    clusterCache.computeIfAbsent(
-      s"${s.sparkContext.applicationId}#$d",
-      // no extra persist on the projection: it reads the pinned label
-      // table underneath, and a second copy would just double storage
-      _ => nearDupClustersUncached(s, d)).labels
-
-  private def nearDupClustersUncached(s: SparkSession,
-      d: String): ClusterEntry = {
-    // STAR edges, not clique edges: connectivity only needs a spanning
-    // structure per bucket, so each sig_0 bucket contributes
-    // (min doc_id -> member) edges — O(B) for a B-member bucket where
-    // the self-join would emit B^2/2. A degenerate boilerplate bucket
-    // of millions of docs stays linear with no cap, no dropped docs,
-    // and identical reachability (the recursive-CTE oracle computes
-    // components over the clique; star and clique connect the same
-    // vertex sets).
-    val sig0 = Curation.minhashMd5(s, d, numHashes = 1)
-      .select(col("doc_id"), col("sig_0"))
-      .withColumn("hub",
-        min(col("doc_id")).over(Window.partitionBy(col("sig_0"))))
-      .persist()
-    val edges = sig0.filter(col("doc_id") =!= col("hub"))
-      .select(col("hub").as("src"), col("doc_id").as("dst"))
-    val vertices = Tables.documents(s, d).select(col("doc_id").as("id"))
-    val (cc, pinned) =
-      try connectedComponentsPinned(edges, vertices)
-      catch { case t: Throwable =>
-        // CC released its own pins; without this, sig0 would outlive the
-        // failed build unreachably (computeIfAbsent stores no entry)
-        try sig0.unpersist() catch { case _: Throwable => () }
-        throw t
-      }
-    ClusterEntry(cc.select(col("id").as("doc_id"), col("cluster")),
-      sig0 +: pinned)
+    * [[keepBestInCluster]], dedup itself): memoized per (context,
+    * documents plan) through [[IndexMemo]], persisted and counted. */
+  def nearDupClusters(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    IndexMemo.getOrBuild[DataFrame]("nearDupClusters", "", Seq(docs)) {
+      val labels = bucketMinLabels(docs,
+        Curation.minhashMd5(s, d, numHashes = 1)
+          .select(col("doc_id"), col("sig_0").as("key"))).persist()
+      try labels.count()
+      catch { case t: Throwable => labels.unpersist(); throw t }
+      (labels, Seq(labels))
+    }
   }
 
   /** Leakage-safe train/heldout split: the md5 keep-decision is made per

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, Tables}
 
-/** Iterative graph analytics over the order graph — the rank-propagation
-  * family that complements the pointer-jumping connected components in
-  * `Dedup.dupClusters`. (Reference analog: the municipality -> committee ->
+/** Iterative graph analytics over the order graph — rank propagation
+  * (PageRank, HITS), min-label connected components, label propagation
+  * and shortest paths. (Reference analog: the municipality -> committee ->
   * meeting containment hierarchy the scrapers walk; generalized to the
   * customer–supplier transaction graph.)
   *
@@ -26,8 +26,8 @@ import graft.{GraftSession, Tables}
   * hash join with no per-round shuffle OR sort of the edge table;
   * above it the hint is withheld and the co-located shuffle path
   * takes over. The rank table is checkpointed every few rounds to cut
-  * the lineage, exactly as `Dedup.dupClusters` does per
-  * pointer-jumping round.
+  * the lineage, as every fixpoint here cuts its round state
+  * ([[GraftSession.cut]]).
   */
 object Graph {
 
@@ -119,8 +119,8 @@ object Graph {
     * the rank table is tiny (one row per node) and materializing it
     * keeps the plan one join+agg deep regardless of iteration count,
     * instead of an iters-deep lineage tower Catalyst must re-plan
-    * whole — the same per-round discipline as `Dedup.dupClusters`'
-    * pointer jumping. */
+    * whole — the same per-round discipline as [[componentLabels]]'
+    * min-label rounds. */
   def pageRank(s: SparkSession, d: String, iters: Int = 5,
       k: Int = 20): DataFrame = {
     val (edges, rank0, n) = pageRankRoundInputs(s, d)

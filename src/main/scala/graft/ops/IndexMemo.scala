@@ -5,7 +5,10 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.DataFrame
 
 /** Session-scoped memo for build-once/probe-many operator indexes (LSH
-  * signature/pair tables, SRP bucket tables, SimHash sketch tables).
+  * signature/pair tables, SRP bucket tables, SimHash sketch tables,
+  * near-dup cluster labels, IVF lists, graph edge tables). It is the
+  * engine's only DataFrame memo: every build reports through one build
+  * bill, and [[clear]] releases every cache an operator keeps.
   *
   * Why a memo instead of per-call persist/unpersist: these operators
   * build an index that every subsequent call over the same input reuses

@@ -961,53 +961,38 @@ object Similarity {
   final case class IvfIndex(assigned: DataFrame,
       centers: Array[Array[Double]])
 
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfIndex]
-
-  /** Drop every memoized IVF index, unpersisting its assignment table
-    * (tolerant of indexes whose session has already stopped). */
-  def clearIvfCache(): Unit = {
-    ivfCache.values.forEach { ix =>
-      try ix.assigned.unpersist()
-      catch { case _: Throwable => () }
-    }
-    ivfCache.clear()
-  }
-
-  /** One-time IVF index build, memoized per (session, corpus, nlist):
-    * a seeded KMeans coarse quantizer (bounded iteration budget — it
-    * only has to carve the space into lists, not converge tightly)
-    * assigns every vector to an inverted list; the assignment persists
-    * as the index. Build once, probe many — the operating point of a
-    * vector store, and what [[annIvf]] measures after the first call.
-    * At scale the list id becomes the partition key of the index
-    * table, so a probe touches nprobe partitions. */
-  def buildIvfIndex(s: SparkSession, d: String, nlist: Int): IvfIndex =
-    // keyed on applicationId (unique per SparkContext for the JVM's
-    // lifetime), not an identity hash a later session could collide
-    // with after GC. Persisted DataFrames are context-scoped, so the
-    // context id is exactly the cache-validity scope; entries live
-    // until the JVM or an explicit clearIvfCache — the build-once/
-    // probe-many operating point of a vector store.
-    ivfCache.computeIfAbsent(
-      s"${s.sparkContext.applicationId}#$d#$nlist",
-      _ => {
-        import org.apache.spark.ml.clustering.KMeans
-        import org.apache.spark.ml.functions.array_to_vector
-        val emb = Tables.embeddings(s, d)
-          .withColumn("features",
-            array_to_vector(col("embedding").cast("array<double>")))
-          .persist()
+  /** One-time IVF index build, memoized per (context, embeddings plan,
+    * nlist) through [[IndexMemo]]: a seeded KMeans coarse quantizer
+    * (bounded iteration budget — it only has to carve the space into
+    * lists, not converge tightly) assigns every vector to an inverted
+    * list; the assignment persists as the index. Build once, probe
+    * many — the operating point of a vector store, and what [[annIvf]]
+    * measures after the first call. At scale the list id becomes the
+    * partition key of the index table, so a probe touches nprobe
+    * partitions. */
+  def buildIvfIndex(s: SparkSession, d: String, nlist: Int): IvfIndex = {
+    val embeddings = Tables.embeddings(s, d)
+    IndexMemo.getOrBuild[IvfIndex]("ivfIndex", s"$nlist", Seq(embeddings)) {
+      import org.apache.spark.ml.clustering.KMeans
+      import org.apache.spark.ml.functions.array_to_vector
+      val emb = embeddings
+        .withColumn("features",
+          array_to_vector(col("embedding").cast("array<double>")))
+        .persist()
+      try {
         val model = new KMeans().setK(nlist).setSeed(42L).setMaxIter(8)
           .setFeaturesCol("features").fit(emb)
         val assigned = model.transform(emb)
           .select(col("vec_id"), col("embedding"),
             col("prediction").as("list_id"))
           .persist()
-        assigned.count() // materialize the index
-        emb.unpersist()
-        IvfIndex(assigned, model.clusterCenters.map(_.toArray))
-      })
+        try assigned.count() // materialize the index
+        catch { case t: Throwable => assigned.unpersist(); throw t }
+        (IvfIndex(assigned, model.clusterCenters.map(_.toArray)),
+          Seq(assigned))
+      } finally emb.unpersist()
+    }
+  }
 
   /** IVF ANN probe: the query ranks the nprobe nearest inverted lists
     * by centroid distance (driver-side math on index metadata), scans

@@ -312,26 +312,25 @@ class DedupSpec extends SparkTestBase {
     assert(e.getMessage.contains("32 signature components"))
   }
 
-  test("connectedComponents labels a path graph with its min vertex") {
-    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("src", "dst")
-    val verts = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("id")
-    val out = Dedup.connectedComponents(edges, verts)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
-      5L -> 5L, 6L -> 5L))
-  }
-
-  test("connectedComponents converges on a deep path within the round budget") {
-    // a 300-edge chain has diameter 300: plain min-propagation would
-    // need 300 rounds; pointer jumping must land it inside the default
-    // budget of 50 (it actually takes ~10)
-    val n = 301L
-    val edges = (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
-    val verts = (1L to n).toDF("id")
-    val out = Dedup.connectedComponents(edges, verts)
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(out.length == n)
-    assert(out.forall(_._2 == 1L))
+  test("q63 and q87 build through IndexMemo, and IndexMemo.clear() " +
+      "releases both caches") {
+    graft.ops.IndexMemo.clear()
+    val sc = spark.sparkContext
+    def pinnedIds = sc.getPersistentRDDs.keySet.toSet
+    val before = pinnedIds
+    Seq("q63_dedup_clusters", "q87_ann_ivf_exact").foreach { q =>
+      SparkEntry.queries(q)(spark, sf("")).collect()
+    }
+    val counts = graft.ops.IndexMemo.buildCounts
+    assert(counts.get("nearDupClusters").contains(1L), counts)
+    assert(counts.get("ivfIndex").contains(1L), counts)
+    val built = pinnedIds -- before
+    assert(built.nonEmpty, "the builds should pin their caches")
+    graft.ops.IndexMemo.clear()
+    // ids, not counts: the ContextCleaner may release earlier suites'
+    // blocks meanwhile, so the set can only shrink below its baseline
+    assert(pinnedIds.subsetOf(before),
+      s"blocks survived clear: ${pinnedIds -- before}")
   }
 
   test("nearDupClusters puts exact duplicates in one cluster") {

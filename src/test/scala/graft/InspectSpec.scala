@@ -39,15 +39,21 @@ class InspectSpec extends SparkTestBase {
 
   test("memo lists each build tag with the plan its cache was built " +
       "with") {
-    val (code, out, _) = inspect("memo", "q124_pagerank")
+    val (code, out, _) = inspect("memo", "q124_pagerank",
+      "q63_dedup_clusters")
     assert(code == 0)
-    val trade = sections(out).collectFirst {
-      case (t, body) if t.startsWith("tradeGraph: built in ") => body
-    }.getOrElse(fail(s"no tradeGraph section in:\n$out"))
+    def section(tag: String) = sections(out).collectFirst {
+      case (t, body) if t.startsWith(s"$tag: built in ") => body
+    }.getOrElse(fail(s"no $tag section in:\n$out"))
+    val trade = section("tradeGraph")
     assert(trade.contains("-- pinned cache 1 of 2: build plan"), trade)
     assert(!trade.contains("(not a cached relation)"), trade)
     // the degree fold's physical build plan
     assert(trade.contains("HashAggregate"), trade)
+    // the cluster labels: the bucket-minimum window over sig_0
+    val clusters = section("nearDupClusters")
+    assert(clusters.contains("-- pinned cache 1 of 1: build plan"), clusters)
+    assert(clusters.contains("Window"), clusters)
   }
 
   test("rounds prints one section per fixpoint family, each planning " +

@@ -151,6 +151,34 @@ class PipelineSpec extends SparkTestBase {
     assert(metrics("n_ingested") == 5)
   }
 
+  test("a NEW-mode run with no new meetings reports zero counters (A2)") {
+    // candidates empty only at run time, against a held sink; without
+    // the broadcast the anti-join is a sort-merge join, whose empty
+    // candidate stage AQE drops with the A2 observation inside it
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val shipped = spark.conf.get(key)
+    Seq(shipped, "-1").foreach { threshold =>
+      spark.conf.set(key, threshold)
+      try {
+        // the non-empty path reads its counters off the write: no job
+        // beyond a run without them
+        val plain = jobsRun(GenericIngest.run(spark, csv, portals, tmpSink()))
+        val sink = tmpSink()
+        val first = scala.collection.mutable.Map.empty[String, Long]
+        assert(jobsRun(GenericIngest.run(spark, csv, portals, sink,
+          metricsOut = first)) == plain, threshold)
+        assert(first("n_candidates") == 5 && first("n_ingested") == 5)
+        val metrics = scala.collection.mutable.Map.empty[String, Long]
+        val n = Future(GenericIngest.run(spark, csv, portals, sink,
+          mode = "NEW", today = java.sql.Date.valueOf("2099-01-01"),
+          metricsOut = metrics))
+        assert(Await.result(n, 2.minutes) == 0)
+        assert(metrics == Map("n_candidates" -> 0L, "n_dated" -> 0L,
+          "n_ingested" -> 0L, "n_fetch_errors" -> 0L), threshold)
+      } finally spark.conf.set(key, shipped)
+    }
+  }
+
   test("partial inventory: only missing documents are fetched (K5)") {
     val sink = tmpSink()
     // pre-ingest with limit 1 per municipality, then full run

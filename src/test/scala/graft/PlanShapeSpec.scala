@@ -209,9 +209,7 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("dupClusters' returned plan is cut: no per-round join chain") {
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
-    val vertices = Seq(1L, 2L, 3L, 10L, 11L, 20L).toDF("id")
-    val labels = Dedup.connectedComponents(edges, vertices)
+    val labels = Dedup.nearDupClusters(spark, sf("documents"))
     val joins = labels.queryExecution.optimizedPlan.collect {
       case j: Join => j
     }

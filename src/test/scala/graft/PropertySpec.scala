@@ -216,6 +216,38 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  test("property: bucketMinLabels equals union-find over the clique " +
+      "edges of a shared key") {
+    // one key per document: no key, the one large bucket, or one of a
+    // dozen small ones
+    val keyGen = Gen.choose(5, 60).flatMap(n => Gen.listOfN(n,
+      Gen.frequency(2 -> Gen.const(Option.empty[Int]),
+        3 -> Gen.const(Some(0)), 5 -> Gen.choose(1, 12).map(Some(_)))))
+    sample(keyGen, 6).zipWithIndex.foreach { case (keys, i) =>
+      // ids shuffled against the keys, so a bucket's min is no pattern
+      val rows = new scala.util.Random(i)
+        .shuffle((1L to keys.size.toLong).toList).zip(keys)
+      // a keyless document has either no row or a null key
+      val keyed = rows.zipWithIndex.collect {
+        case ((id, Some(k)), _) => (id, Option(s"k$k"))
+        case ((id, None), j) if j % 2 == 0 => (id, Option.empty[String])
+      }.toDF("doc_id", "key")
+      val got = Dedup.bucketMinLabels(rows.map(_._1).toDF("doc_id"), keyed)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // the oracle's edges: every pair of documents sharing a key
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      for ((a, Some(ka)) <- rows; (b, Some(kb)) <- rows if ka == kb)
+        parent(find(a)) = find(b)
+      val want = rows.map { case (v, _) =>
+        v -> rows.map(_._1).filter(find(_) == find(v)).min }.toMap
+      assert(got == want, s"sample $i: $rows")
+    }
+  }
+
   test("property: topGramFraction equals brute-force max-2gram count ratio") {
     val tokGen = Gen.oneOf("a", "b", "c", "ab", "x")
     val docGen = Gen.choose(2, 30).flatMap(n => Gen.listOfN(n, tokGen))
