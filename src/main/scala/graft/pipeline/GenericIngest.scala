@@ -308,6 +308,8 @@ object GenericIngest {
     val (n, failed) = land(observed, sinkDir, keep = col("status") < 400,
       errDir)(Fetch.fetchBinary(_, "url", fetcher))
     if (metricsOut != null) {
+      import scala.concurrent.Await
+      import scala.concurrent.duration._
       // The A2 observation sits below the anti-join. When AQE finds the
       // candidates empty at run time, its empty-relation rewrite drops
       // the finished stage that ran the observation from the final
@@ -316,8 +318,7 @@ object GenericIngest {
       // completes A2's too, so the wait is only a bound. Lost metrics,
       // or a wait that runs out, recount the candidates in a job of
       // their own: a lost counter never reads 0.
-      val a2 = scala.util.Try(scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(10, "s"))).toOption
+      val a2 = scala.util.Try(Await.result(obs.future, 10.seconds)).toOption
         .filter(_.length == 2)
         .getOrElse(cand.agg(count(lit(1)), count(col("meeting_date"))).head())
       metricsOut("n_candidates") = a2.getLong(0)

@@ -214,7 +214,7 @@ class PlanShapeSpec extends SparkTestBase {
       case j: Join => j
     }
     assert(joins.size <= 2,
-      s"dupClusters output plan carries ${joins.size} joins")
+      s"nearDupClusters output plan carries ${joins.size} joins")
   }
 
   test("components' returned plan is cut and joins only on BIGINT ids") {
