@@ -251,8 +251,10 @@ object Dedup {
     * every other bucket they share. The dropped-membership count is
     * observed on one side of the join, inside the query's own job, and
     * logged under `tag` once the first run that drops any completes. An
-    * adaptive plan that finds the pairs empty replaces the observed
-    * subtree, and then that run logs nothing.
+    * adaptive plan that finds the pairs empty (every bucket dropped,
+    * or no members) replaces the observed subtree, and the observation
+    * completes with no statistics: that run warns under `tag` that the
+    * count was lost, never that it was 0, and runs no job to recount.
     *
     * Output: one row per (pair, shared bucket), oriented `id_a < id_b`,
     * each carried column `c` as `c_a` and `c_b`. Callers reduce it
@@ -266,8 +268,13 @@ object Dedup {
       carry: Seq[String] = Nil): DataFrame = {
     val sized = withBucketSize(members, bucket)
     val stats = org.apache.spark.sql.Observation()
-    stats.future.foreach(r => warnDropped(tag, r, maxBucketSize))(
-      scala.concurrent.ExecutionContext.parasitic)
+    stats.future.foreach { r =>
+      if (r.length == 0)
+        log.warn(s"$tag: bucket statistics lost: the run found no pairs " +
+          "and its adaptive plan dropped the observed side, so the " +
+          "dropped-membership count is unknown")
+      else warnDropped(tag, r, maxBucketSize)
+    }(scala.concurrent.ExecutionContext.parasitic)
     pairUp(capStats(sized, maxBucketSize, _.observe(stats, _, _)), sized,
       bucket, id, maxBucketSize, carry)
   }

@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, Tables}
@@ -27,7 +29,8 @@ import graft.{GraftSession, Tables}
   * above it the hint is withheld and the co-located shuffle path
   * takes over. The rank table is checkpointed every few rounds to cut
   * the lineage, as every fixpoint here cuts its round state
-  * ([[GraftSession.cut]]).
+  * ([[GraftSession.cut]]), except the label-propagation rounds under
+  * that bound, whose labels the driver holds ([[componentLabels]]).
   */
 object Graph {
 
@@ -120,7 +123,7 @@ object Graph {
     * keeps the plan one join+agg deep regardless of iteration count,
     * instead of an iters-deep lineage tower Catalyst must re-plan
     * whole — the same per-round discipline as [[componentLabels]]'
-    * min-label rounds. */
+    * min-label rounds above the broadcast gate. */
   def pageRank(s: SparkSession, d: String, iters: Int = 5,
       k: Int = 20): DataFrame = {
     val (edges, rank0, n) = pageRankRoundInputs(s, d)
@@ -1681,10 +1684,12 @@ object Graph {
     * diameter to fully converge — the oracle unrolls the SAME count);
     * the exact sum-of-labels witness stops early the moment a round
     * changes nothing, since min-label is monotone non-increasing and
-    * any change strictly decreases the sum. Each round is one
-    * broadcast-gated join moving (node, lab) BIGINT pairs against the
-    * pinned edge list plus a map-side-combined min — ids, never
-    * payloads — and is lineage-cut like every iterative plan here.
+    * any change strictly decreases the sum. Under the broadcast gate
+    * the labels are held on the driver and each round is one job over
+    * the pinned edge list ([[componentLabels]]); above it each round is
+    * one broadcast-gated join moving (node, lab) BIGINT pairs against
+    * the pinned edge list plus a map-side-combined min — ids, never
+    * payloads — lineage-cut like every iterative plan here.
     * Emits (component_size, n_components), the census you read skew
     * off before partitioning any per-component work. */
   def components(s: SparkSession, d: String, minSupport: Int = 7,
@@ -1699,33 +1704,194 @@ object Graph {
       .orderBy(col("component_size"))
   }
 
-  /** Shared state prep of the label-propagation fixpoints
-    * ([[componentLabels]], [[lpaCommunities]]): materialize the
-    * symmetric edge table once for the per-round scans, initialize
-    * every node's label to its own id, and measure the node count that
-    * gates the per-round broadcasts (lab is one row per node, fixed
-    * across rounds — the edge count would disqualify a build side far
-    * smaller than it) and the initial label sum, both as witnesses of
-    * the one state cut. Returns (edges, labels, node count, label sum).
-    *
-    * The edge table is memoized and PINNED hash-partitioned by v (r19,
-    * replacing a per-call cut + compact): both consumers' rounds
-    * aggregate proposals by the edge's v endpoint, so the v-hash pin
-    * makes every round's heavy aggregation exchange-free (guide §2.4,
-    * the persistCompactBy device), and components + LPA — which prep
-    * the same symmetric table — share one build instead of cutting two
-    * copies. */
+  /** The symmetric edge table of the label-propagation fixpoints
+    * ([[componentLabels]], [[lpaLabels]]), built once and PINNED
+    * hash-partitioned by v (r19, replacing a per-call cut + compact):
+    * both consumers' rounds aggregate proposals by the edge's v
+    * endpoint, so the v-hash pin makes every round's heavy aggregation
+    * exchange-free (guide §2.4, the persistCompactBy device), and
+    * components + LPA, which prep the same symmetric table, share one
+    * build. The build also measures the node count that picks the
+    * rounds' form (lab is one row per node, fixed across rounds; the
+    * edge count would disqualify a state far smaller than it), as
+    * [[tradeGraph]] measures its own: one job counting each
+    * partition's distinct v, exact because the pin keeps every v in one
+    * partition. Returns (edges, node count). */
+  private def undEdges(und0: DataFrame): (DataFrame, Long) = {
+    val (und, n) = IndexMemo.getOrBuild[(DataFrame, java.lang.Long)](
+      "undEdges", "", Seq(und0)) {
+      val built = GraftSession.persistCompactBy(und0, col("v"))
+      val vi = requireClusteredOnV(built)
+      val n = built.sparkSession.sparkContext.runJob(
+        built.queryExecution.toRdd, (rows: Iterator[InternalRow]) => {
+          val seen = new scala.collection.mutable.LongMap[Unit]
+          rows.foreach(r => seen.update(r.getLong(vi), ()))
+          seen.size.toLong
+        }).sum
+      ((built, java.lang.Long.valueOf(n)), Seq(built))
+    }
+    (und, n.longValue())
+  }
+
+  /** The ordinal of `und`'s v column, once its plan is checked to
+    * cluster every v in one partition: [[lpaLabels]]' driver rounds
+    * finish each node's arg-max inside one partition, and
+    * [[undEdges]] counts nodes and [[driverLabelRounds]] lists them per
+    * partition, only because of the v pin. A table that lost it fails here, loudly, instead of
+    * splitting a node's votes or counting it twice. The check reads
+    * the physical plan before adaptive execution, which reports a
+    * cache scan's build partitioning; AQE wraps a scan of a cache with
+    * nothing to re-partition. */
+  private[graft] def requireClusteredOnV(und: DataFrame): Int = {
+    val plan = und.queryExecution.sparkPlan
+    val v = plan.output.find(_.name == "v").getOrElse(
+      throw new IllegalArgumentException(s"no v column in ${plan.output}"))
+    require(plan.outputPartitioning.satisfies(
+      org.apache.spark.sql.catalyst.plans.physical
+        .ClusteredDistribution(Seq(v))),
+      s"edge table is not clustered on v: ${plan.outputPartitioning}")
+    plan.output.indexOf(v)
+  }
+
+  /** State prep of the label-propagation cut rounds: the pinned edge
+    * table ([[undEdges]]) and every node's label initialized to its own
+    * id, with the initial label sum as the witness of the one state
+    * cut. Returns (edges, labels, node count, label sum). */
   private[graft] def labelPropPrep(und0: DataFrame)
       : (DataFrame, DataFrame, Long, Long) = {
-    val und = IndexMemo.getOrBuild[DataFrame]("undEdges", "", Seq(und0)) {
-      val built = GraftSession.persistCompactBy(und0, col("v"))
-      (built, Seq(built))
-    }
-    val (lab, Seq(nNodes, labSum)) = GraftSession.cutWith(
+    val (und, nNodes) = undEdges(und0)
+    val (lab, Seq(labSum)) = GraftSession.cutWith(
       und.select(col("u").as("node")).distinct()
         .select(col("node"), col("node").as("lab")),
-      count(lit(1)), sum(col("lab")))
+      sum(col("lab")))
     (und, lab, nNodes, labSum)
+  }
+
+  /** How the label-propagation rounds run at `nNodes` nodes: on
+    * driver-held labels under the broadcast gate, as cut rounds above
+    * it (`Inspect rounds` prints this). */
+  private[graft] def labelRoundsForm(nNodes: Long): String =
+    if (broadcastsRoundSide(nNodes))
+      "driver-held labels, one job per round over the pinned edges"
+    else "the round cut below, one cut per round"
+
+  /** Label-propagation rounds on labels held by the driver: the form
+    * [[componentLabels]] and [[lpaLabels]] run under the broadcast gate,
+    * where the label table fits a broadcast and therefore the driver.
+    *
+    * The labels are two primitive arrays, the sorted node ids and their
+    * labels. Each round is ONE job over the pinned edge cache, read
+    * through its `queryExecution.toRdd` with the labels shipped by
+    * `SparkContext.broadcast`: no Dataset is built, analyzed or
+    * planned, no plan string is formatted for a SQL execution event,
+    * and no state broadcast or checkpoint job runs. Each partition
+    * returns, per v, the minimum neighbour label (`lpa` false) or the
+    * arg-max of the neighbour votes plus the self-vote, ties to the
+    * smallest label (`lpa` true; whole per partition by the v pin,
+    * [[requireClusteredOnV]]). The driver merges minima across
+    * partitions, folds in each node's own label and counts the changed
+    * labels, the convergence witness: components stop at the fixpoint
+    * or at `rounds`, LPA runs exactly `rounds`. The first round ships
+    * no labels (every node is labeled by its id) and learns the node
+    * ids, each once, from its partitions' v keys: every node is some
+    * edge's v, since the input holds both directions of every edge,
+    * and sits in one partition by the v pin.
+    *
+    * The labels never leave the driver, so they are exactly as durable
+    * as the application in either checkpoint mode, and no checkpoint
+    * file is written. Jobs run on the calling thread, under its job
+    * group; every broadcast is destroyed before return, and nothing is
+    * persisted. The result is (node, lab) at [[GraftSession.compactParts]]
+    * grain, declaring its partitioning as a cut's `LogicalRDD` does
+    * ([[org.apache.spark.sql.execution.DriverLongRows]]). */
+  private def driverLabelRounds(und: DataFrame, rounds: Int,
+      lpa: Boolean): DataFrame = {
+    val s = und.sparkSession
+    val sc = s.sparkContext
+    val vi = requireClusteredOnV(und)
+    val ui = und.schema.fieldIndex("u")
+    val edges = und.queryExecution.toRdd
+    var nodes: Array[Long] = null // sorted, learned by the first round
+    var labs: Array[Long] = null
+    var nodesBc: Broadcast[Array[Long]] = null
+    try {
+      var i = 0
+      var changed = true
+      while (nodes == null || (i < rounds && changed)) {
+        val ids = nodesBc
+        val labsBc = if (nodes == null) null else sc.broadcast(labs)
+        val parts =
+          try sc.runJob(edges, (rows: Iterator[InternalRow]) =>
+            labelRoundPartition(rows, ui, vi, ids, labsBc, lpa))
+          finally if (labsBc != null) labsBc.destroy()
+        if (nodes == null) {
+          nodes = parts.flatMap(_._1)
+          java.util.Arrays.sort(nodes)
+          labs = nodes
+          nodesBc = sc.broadcast(nodes)
+        }
+        if (i < rounds) {
+          val next = labs.clone()
+          parts.foreach { case (vs, ps) =>
+            vs.indices.foreach { j =>
+              val k = java.util.Arrays.binarySearch(nodes, vs(j))
+              next(k) = if (lpa) ps(j) else math.min(next(k), ps(j))
+            }
+          }
+          changed = lpa || !java.util.Arrays.equals(next, labs)
+          labs = next
+        }
+        i += 1
+      }
+    } finally if (nodesBc != null) nodesBc.destroy()
+    org.apache.spark.sql.execution.DriverLongRows(s, Seq("node", "lab"),
+      Seq(nodes, labs), "node", GraftSession.compactParts(s, nodes.length))
+  }
+
+  /** One partition of a [[driverLabelRounds]] round: per v, the
+    * minimum neighbour label, or (`lpa`) the voted label. Returns
+    * (v ids, their values). With no label broadcast every node is
+    * labeled by its own id. */
+  private def labelRoundPartition(rows: Iterator[InternalRow], ui: Int,
+      vi: Int, nodesBc: Broadcast[Array[Long]],
+      labsBc: Broadcast[Array[Long]],
+      lpa: Boolean): (Array[Long], Array[Long]) = {
+    val labOf: Long => Long =
+      if (labsBc == null) identity
+      else {
+        val (nodes, labs) = (nodesBc.value, labsBc.value)
+        u => {
+          val k = java.util.Arrays.binarySearch(nodes, u)
+          require(k >= 0, s"node $u is no edge's v: the edge table " +
+            "must hold both directions of every edge")
+          labs(k)
+        }
+      }
+    if (!lpa) {
+      val best = new scala.collection.mutable.LongMap[Long]
+      rows.foreach { r =>
+        val (v, l) = (r.getLong(vi), labOf(r.getLong(ui)))
+        if (best.getOrElse(v, Long.MaxValue) > l) best.update(v, l)
+      }
+      val vs = best.keys.toArray
+      (vs, vs.map(best(_)))
+    } else {
+      val votes = new scala.collection.mutable
+        .LongMap[scala.collection.mutable.LongMap[Long]]
+      rows.foreach { r =>
+        val m = votes.getOrElseUpdate(r.getLong(vi),
+          new scala.collection.mutable.LongMap[Long])
+        val l = labOf(r.getLong(ui))
+        m.update(l, m.getOrElse(l, 0L) + 1L)
+      }
+      val vs = votes.keys.toArray
+      (vs, vs.map { v =>
+        val m = votes(v)
+        val own = labOf(v)
+        m.update(own, m.getOrElse(own, 0L) + 1L) // the self-vote
+        m.iterator.maxBy { case (l, c) => (c, -l) }._1
+      })
+    }
   }
 
   /** One min-label propagation round over symmetric `und` from state
@@ -1763,10 +1929,15 @@ object Graph {
     * symmetric (u, v) edge list, returning the (node, lab) table at
     * the round-`rounds` (or earlier-fixpoint) state. The input must
     * hold both directions of every edge ([[componentsRound]] relies on
-    * it); an edgeless input yields an empty table. */
-  private[graft] def componentLabels(und0: DataFrame,
-      rounds: Int): DataFrame = {
-    val (und, lab0, nNodes, labSum0) = labelPropPrep(und0)
+    * it); an edgeless input yields an empty table. Under the broadcast
+    * gate the rounds run on driver-held labels ([[driverLabelRounds]]);
+    * above it, or with `driverRounds` off, as cut rounds. */
+  private[graft] def componentLabels(und0: DataFrame, rounds: Int,
+      driverRounds: Boolean = true): DataFrame = {
+    val (und, nNodes) = undEdges(und0)
+    if (driverRounds && broadcastsRoundSide(nNodes))
+      return driverLabelRounds(und, rounds, lpa = false)
+    val (_, lab0, _, labSum0) = labelPropPrep(und0)
     var lab = lab0
     var prev = labSum0
     var i = 1
@@ -2190,24 +2361,36 @@ object Graph {
     * notorious for), ties broken by the SMALLEST label — fully
     * deterministic, no RNG. Emits the community-size histogram, the
     * same census shape as [[components]] (LPA splits dense graphs into
-    * finer groups than connectivity does). Per round: one
-    * broadcast-gated join, a (node, label) count, and a node-keyed
-    * arg-max window over the label-count table (node-sized × mean
-    * degree, never the corpus); lineage cut per round. */
+    * finer groups than connectivity does). The rounds are
+    * [[lpaLabels]]'. */
   def lpaCommunities(s: SparkSession, d: String, minSupport: Int = 7,
       rounds: Int = 4): DataFrame = {
     val e = copurchaseEdges(s, d, minSupport)
-    val (und, lab0, nNodes, _) = labelPropPrep(
-      e.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(e.select(col("b").as("u"), col("a").as("v"))))
-    var lab = lab0
-    for (_ <- 1 to rounds) {
-      lab = GraftSession.cut(lpaRound(und, lab, nNodes))
-    }
-    lab.groupBy(col("lab")).agg(count(lit(1)).as("community_size"))
+    lpaLabels(e.select(col("a").as("u"), col("b").as("v"))
+        .unionAll(e.select(col("b").as("u"), col("a").as("v"))), rounds)
+      .groupBy(col("lab")).agg(count(lit(1)).as("community_size"))
       .groupBy(col("community_size"))
       .agg(count(lit(1)).as("n_communities"))
       .orderBy(col("community_size"))
+  }
+
+  /** Core of [[lpaCommunities]]: exactly `rounds` synchronous LPA
+    * rounds over an explicit symmetric (u, v) edge list, returning the
+    * (node, lab) table. Under the broadcast gate the rounds run on
+    * driver-held labels ([[driverLabelRounds]]); above it, or with
+    * `driverRounds` off, each round is one broadcast-gated join, a
+    * (node, label) count and the arg-max aggregate of [[lpaRound]],
+    * lineage cut per round. */
+  private[graft] def lpaLabels(und0: DataFrame, rounds: Int,
+      driverRounds: Boolean = true): DataFrame = {
+    val (und, nNodes) = undEdges(und0)
+    if (driverRounds && broadcastsRoundSide(nNodes))
+      return driverLabelRounds(und, rounds, lpa = true)
+    var lab = labelPropPrep(und0)._2
+    for (_ <- 1 to rounds) {
+      lab = GraftSession.cut(lpaRound(und, lab, nNodes))
+    }
+    lab
   }
 
   /** DuckDB oracle for [[lpaCommunities]]: the same sync rounds

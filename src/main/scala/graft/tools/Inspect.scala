@@ -140,7 +140,10 @@ object Inspect {
     * half-rounds for HITS. The header names the node count and the
     * state side the operator's broadcast gate picks for it, and
     * whether the round's cut runs adaptively or its static plan (no
-    * shuffle for AQE to re-plan). What to look for: whether the
+    * shuffle for AQE to re-plan). The components and LPA sections add
+    * a `-- runs:` line naming the form their operators run at that
+    * node count: under the gate, driver-held labels, so the explained
+    * cut round is the form above it. What to look for: whether the
     * per-round aggregation plans an Exchange between
     * its partial and final HashAggregate (none when the pinned edge
     * table's hash partitioning reaches it through the broadcast join),
@@ -148,7 +151,7 @@ object Inspect {
     * edge-grain partials. */
   private def rounds(spark: SparkSession, sfDir: String,
       fams: Set[String]): Unit = {
-    def section(family: String, nNodes: Long)(
+    def section(family: String, nNodes: Long, form: Option[String] = None)(
         rounds: (String, DataFrame)*): Unit = {
       val side =
         if (Graph.broadcastsRoundSide(nNodes)) "broadcast"
@@ -166,6 +169,7 @@ object Inspect {
         case _ => modes.map { case (l, m) => s"$l cut $m" }.mkString(", ")
       }
       header(s"$family: $nNodes nodes, $cut, state side $side")
+      form.foreach(f => println(s"-- runs: $f"))
       cuts.foreach { case (label, df) =>
         println(s"-- $label")
         explainRun(df)
@@ -179,14 +183,16 @@ object Inspect {
     }
     if (fams("components") || fams("lpa")) {
       val (und, lab0, n, _) = Graph.labelPropRoundInputs(spark, sfDir)
+      val form = Some(Graph.labelRoundsForm(n))
       if (fams("components")) {
         val lab1 = GraftSession.cut(Graph.componentsRound(und, lab0, n))
-        section("components", n)(
+        section("components", n, form)(
           "min-label round" -> Graph.componentsRound(und, lab1, n))
       }
       if (fams("lpa")) {
         val lab1 = GraftSession.cut(Graph.lpaRound(und, lab0, n))
-        section("lpa", n)("voting round" -> Graph.lpaRound(und, lab1, n))
+        section("lpa", n, form)(
+          "voting round" -> Graph.lpaRound(und, lab1, n))
       }
     }
     if (fams("hits")) {

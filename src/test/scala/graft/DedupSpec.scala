@@ -394,4 +394,56 @@ class DedupSpec extends SparkTestBase {
     out.foreach { r =>
       assert(quality(r.getLong(0)) == best(r.getLong(1)), s"cluster ${r.getLong(1)}") }
   }
+
+  /** WARN messages `logger` logged while `body` ran, the listener bus
+    * drained (observations complete from it). */
+  private def warnings(logger: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new AbstractAppender(s"capture-$logger", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN)
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val log = LogManager.getLogger(logger).asInstanceOf[Logger]
+    val level = log.getLevel
+    log.addAppender(app)
+    log.setLevel(Level.WARN)
+    try { body; drainListenerBus() }
+    finally {
+      log.removeAppender(app)
+      log.setLevel(level)
+      app.stop()
+    }
+    seen.toArray.toSeq.map(_.toString)
+  }
+
+  test("cappedBucketPairs warns under its tag when a run drops every " +
+      "bucket and the adaptive plan loses the statistics") {
+    // two buckets of four members over a cap of two: both are dropped,
+    // the pairs are empty, and AQE's empty-relation rewrite takes the
+    // observed side with it
+    val members = (for (b <- 1L to 2L; m <- 1L to 4L) yield (b, b * 10 + m))
+      .toDF("bucket", "id")
+    val logged = warnings(Dedup.getClass.getName) {
+      assert(Dedup.cappedBucketPairs(members, Seq("bucket"), "id",
+        maxBucketSize = 2, tag = "every-bucket-dropped").collect().isEmpty)
+    }
+    assert(logged.exists(m => m.startsWith("every-bucket-dropped: ") &&
+      m.contains("lost")), logged)
+    assert(!logged.exists(_.contains("dropped 0")), logged)
+    // a run that keeps a bucket reads its statistics: the count is logged
+    val kept = members.union(Seq((3L, 31L), (3L, 32L)).toDF("bucket", "id"))
+    val counted = warnings(Dedup.getClass.getName) {
+      assert(Dedup.cappedBucketPairs(kept, Seq("bucket"), "id",
+        maxBucketSize = 2, tag = "some-buckets-dropped").count() == 1L)
+    }
+    assert(counted.exists(_.startsWith("some-buckets-dropped: dropped 8 " +
+      "bucket memberships")), counted)
+  }
 }

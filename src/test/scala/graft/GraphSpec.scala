@@ -139,6 +139,61 @@ class GraphSpec extends SparkTestBase {
       s"componentLabels ran $localJobs jobs (prep $prep)")
   }
 
+  test("under the broadcast gate componentLabels and lpaLabels run one " +
+      "job per round, the same in local and reliable mode, write no " +
+      "checkpoint file and leave nothing persisted") {
+    // components {1,2,3} (a path) and {10,11}: the min-label rounds
+    // change labels twice and confirm the fixpoint in round three; LPA
+    // runs exactly its 4 rounds and lands on the same partition
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L))
+    val und = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      .toDF("u", "v")
+    // pin the edge table (memoized) before counting
+    Graph.componentLabels(und, 1).count()
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    def labels(lab: => org.apache.spark.sql.DataFrame)
+        : (Int, Map[Long, Long]) = {
+      var got: Map[Long, Long] = null
+      val jobs = jobsRun {
+        got = lab.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      (jobs, got)
+    }
+    def run(): Seq[(Int, Map[Long, Long])] = Seq(
+      labels(Graph.componentLabels(und, 8)), labels(Graph.lpaLabels(und, 4)))
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
+    val local = run()
+    assert(local.map(_._2) == Seq(expected, expected))
+    // the rounds, then the collect of the returned labels
+    assert(local.map(_._1) == Seq(3 + 1, 4 + 1), local)
+    val ckDir = java.nio.file.Files
+      .createTempDirectory("graft-ck-driver-labels").toFile
+    GraftSession.enableReliableCheckpoints(spark, ckDir.toString)
+    val reliable =
+      try run()
+      finally spark.conf.set("spark.graft.reliableCheckpoints", "false")
+    assert(reliable == local)
+    def bytes(f: java.io.File): Long =
+      if (f.isFile) f.length
+      else Option(f.listFiles()).toSeq.flatten.map(bytes).sum
+    assert(bytes(ckDir) == 0L, s"checkpoint files under $ckDir")
+    assert(sc.getPersistentRDDs.keySet == persisted)
+    // the cut rounds, the form above the gate, agree
+    assert(local.map(_._2) == Seq(
+      Graph.componentLabels(und, 8, driverRounds = false),
+      Graph.lpaLabels(und, 4, driverRounds = false))
+      .map(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap))
+  }
+
+  test("the driver LPA rounds refuse an edge table not clustered on v") {
+    val und = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("u", "v")
+    val e = intercept[IllegalArgumentException](
+      Graph.requireClusteredOnV(und.repartition(3, col("u"))))
+    assert(e.getMessage.contains("not clustered on v"), e.getMessage)
+    assert(Graph.requireClusteredOnV(und.repartition(3, col("v"))) == 1)
+  }
+
   test("ssspFrom's fixpoint witness rides the round cut: no job beyond " +
       "the rounds', the same in local and reliable mode") {
     // rounds 1-3 lower costs (4 is reached at 26, then 21), round 4

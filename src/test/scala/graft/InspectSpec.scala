@@ -95,6 +95,14 @@ class InspectSpec extends SparkTestBase {
       assert(secs.keys.exists(t => t.startsWith(s"$f:") &&
         t.contains("round cut static")), secs.keys)
     }
+    // under the gate the label rounds run on driver-held labels, and
+    // the section says so before the cut round it explains
+    Seq("components", "lpa").foreach { f =>
+      val body = secs.collectFirst { case (t, b) if t.startsWith(s"$f:") => b }
+      assert(body.exists(_.split("\n").drop(1).headOption.contains(
+        "-- runs: driver-held labels, one job per round over the pinned " +
+          "edges")), s"$f: $body")
+    }
   }
 
   test("an unknown subcommand, query or family fails with the valid " +

@@ -265,6 +265,34 @@ class PipelineSpec extends SparkTestBase {
     assert(GenericIngest.inventory(spark, sink).count() == 5)
   }
 
+  test("the held-key scan reads only the run's committee partitions " +
+      "(J1/K5)") {
+    // the committee is a literal in named(), and the anti-join keys on
+    // it, so Catalyst infers the committee filter through the join and
+    // prunes the sink's other committees' partitions at the scan
+    val sink = tmpSink()
+    assert(GenericIngest.run(spark, csv, portals, sink,
+      committee = "Oekonomi") == 5)
+    assert(GenericIngest.run(spark, csv, portals, sink,
+      committee = "Teknik") == 5)
+    val todo = GenericIngest.todo(GenericIngest.candidates(spark, csv,
+      portals, "Oekonomi", "ALL", 100, java.sql.Date.valueOf("2024-01-01")),
+      sink)
+    assert(todo.count() == 0)
+    val Seq(scan) = todo.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths.map(_.toUri.getPath) ==
+            Seq(sink) => f
+    }
+    assert(scan.partitionFilters.map(_.sql).contains(
+      "('Oekonomi' = committee)"), scan.partitionFilters)
+    val committee = scan.relation.partitionSchema.fieldIndex("committee")
+    val read = scan.relation.location
+      .listFiles(scan.partitionFilters, Nil)
+      .map(_.values.getUTF8String(committee).toString).distinct
+    assert(read == Seq("Oekonomi"), read)
+  }
+
   test("each missing document is fetched exactly once (K5)") {
     val sink = tmpSink()
     assert(CountingFetcher.counted(GenericIngest.run(spark, csv, portals,

@@ -322,6 +322,70 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  /** Symmetric (u, v) rows of an undirected edge list. */
+  private def bothWays(es: Seq[(Long, Long)]) =
+    es.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("u", "v")
+
+  /** (node -> lab) of a label table. */
+  private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("property: driver-held componentLabels rounds equal the cut " +
+      "rounds") {
+    // random sparse graphs plus isolated pairs, a star and a 12-hop
+    // path, longer than every round cap below but 64: capped runs must
+    // stop at the same unconverged labels, the 64-round run at the
+    // same fixpoint. The cut rounds (driverRounds off) are the
+    // reference form.
+    val edgeGen = for {
+      n <- Gen.choose(5, 30)
+      m <- Gen.choose(1, 40)
+      es <- Gen.listOfN(m, for {
+        a <- Gen.choose(0L, n.toLong)
+        b <- Gen.choose(0L, n.toLong) if a != b
+      } yield (math.min(a, b), math.max(a, b)))
+    } yield es.distinct
+    val fixed = Seq((100L, 101L), (102L, 103L)) ++
+      (201L to 206L).map(200L -> _) ++ (300L until 312L).map(a => (a, a + 1))
+    sample(edgeGen, 3).foreach { es =>
+      val und = bothWays(es ++ fixed)
+      Seq(1, 2, 3, 8, 64).foreach { rounds =>
+        val driver =
+          labelMap(graft.ops.Graph.componentLabels(und, rounds))
+        val cut = labelMap(graft.ops.Graph.componentLabels(und, rounds,
+          driverRounds = false))
+        assert(driver == cut, s"rounds $rounds, edges $es")
+      }
+    }
+  }
+
+  test("property: driver-held lpaLabels rounds equal the cut rounds on " +
+      "tie-heavy graphs") {
+    // few labels per neighbourhood and many equal vote counts (cycles,
+    // complete bipartite pieces, random pairs over few nodes), so the
+    // smallest-label tie rule decides most rounds
+    val edgeGen = for {
+      n <- Gen.choose(4, 12)
+      m <- Gen.choose(1, 24)
+      es <- Gen.listOfN(m, for {
+        a <- Gen.choose(0L, n.toLong)
+        b <- Gen.choose(0L, n.toLong) if a != b
+      } yield (math.min(a, b), math.max(a, b)))
+    } yield es.distinct
+    val cycle = (50L until 56L).map(a => (a, if (a == 55L) 50L else a + 1))
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+    val biclique = for (a <- 60L to 62L; b <- 70L to 72L) yield (a, b)
+    sample(edgeGen, 3).foreach { es =>
+      val und = bothWays(es ++ cycle ++ biclique)
+      (1 to 4).foreach { rounds =>
+        val driver = labelMap(graft.ops.Graph.lpaLabels(und, rounds))
+        val cut = labelMap(graft.ops.Graph.lpaLabels(und, rounds,
+          driverRounds = false))
+        assert(driver == cut, s"rounds $rounds, edges $es")
+      }
+    }
+  }
+
   /** prefixSum against the single-window running sums it decomposes
     * (the tokenStreamSingleWindow reference, generalised): for every
     * grouping, frame, sub-range shape and two value columns at once,

@@ -916,24 +916,12 @@ class ScaleInvariantsSpec extends SparkTestBase {
     "Repartition(InMemoryRelation,cut): forced broadcast of " +
       "Union(cut)" ->
       "perRoundSide frontier/visited table (<=4M gate)",
-    // union-free fixpoint rounds (r19): the SSSP full-outer state
-    // fold roots the cut plan in a Project over the state⋈contrib
-    // join, and the LPA arg-max aggregate sits over the votes⋈state
-    // join; the flagged broadcast in both is still the same gated
-    // perRoundSide state table
+    // union-free SSSP round (r19): the full-outer state fold roots the
+    // cut plan in a Project over the state⋈contrib join; the flagged
+    // broadcast is still the same gated perRoundSide state table
     "Project(cut,InMemoryRelation): forced broadcast of " +
       "Project(cut)" ->
-      "perRoundSide dist table (<=4M gate)",
-    "Aggregate[node](InMemoryRelation,cut): forced broadcast of " +
-      "Project(cut)" ->
-      "perRoundSide label table (<=4M gate)",
-    // aggregate-first components round: the proposal min is taken off
-    // the v-pinned edge cache and each node's own label folds back in
-    // through the same gated state broadcast, so the cut plan roots in
-    // the final least() Project
-    "Project(InMemoryRelation,cut): forced broadcast of " +
-      "Project(cut)" ->
-      "perRoundSide label table (<=4M gate)")
+      "perRoundSide dist table (<=4M gate)")
 
   test("per-round cut() plans carry no single-task shapes") {
     // Iterative operators' per-round joins exist only transiently —
